@@ -507,7 +507,9 @@ def minhash_lsh_pairs(
 
     ``sh`` optionally injects a prebuilt ``(id, sh)`` relation that
     must row-equal ``word_shingles(df, id_col, text_col, n)`` (the
-    registry's session-staged build); ``df`` is then unused.
+    registry's session-staged build); ``df`` is then unused. An injected
+    relation is persisted here and never unpersisted: the cached copy
+    stays until the caller unpersists it or the session ends.
     """
     # persist: consumed by signatures, sizes, and both verify join sides
     if sh is None:
@@ -563,7 +565,9 @@ def minhash_lsh_pairs_against(
     ``sh_new`` / ``sh_corpus`` optionally inject prebuilt ``(id, sh)``
     relations that must row-equal ``word_shingles`` of the respective
     side (the registry filters its session-staged corpus build); the
-    matching ``*_df`` argument is then unused.
+    matching ``*_df`` argument is then unused. Injected relations are
+    persisted here and never unpersisted: the cached copies stay until
+    the caller unpersists them or the session ends.
     """
     if sh_new is None:
         sh_new = word_shingles(new_df, id_col, text_col, n)

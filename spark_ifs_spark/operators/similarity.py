@@ -1430,14 +1430,6 @@ def sq8_params(df: DataFrame, vec_col: str, dims: int) -> list[tuple[float, floa
     return [by_dim[j] for j in range(dims)]
 
 
-def _sq8_code(x: Column, mn: float, mx: float) -> Column:
-    """255·(x−mn)/(mx−mn), floored and clamped to [0, 255] — BIGINT."""
-    if mx == mn:
-        return F.lit(0).cast("long")
-    scaled = F.floor((x - F.lit(mn)) * F.lit(255.0) / F.lit(mx - mn))
-    return F.least(F.lit(255).cast("long"), F.greatest(F.lit(0).cast("long"), scaled))
-
-
 def topk_sq8(
     df: DataFrame,
     id_col: str,

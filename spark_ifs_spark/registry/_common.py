@@ -4,7 +4,10 @@ registry; see __init__.py for the domain layout and dict build)."""
 
 from __future__ import annotations
 import atexit
+import functools
 import os
+import shutil
+import tempfile
 import time
 from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
@@ -61,7 +64,6 @@ PROJ_DIMS = 8
 PROJ_SEED = 7
 SAMPLE_N = 100
 SAMPLE_SEED = 13
-_USER_STATS_STAGED: dict[tuple[str, float], str] = {}
 #: builder-name -> wall-clock seconds spent inside the build branch of a
 #: session-staging helper (_minhash_pairs, _knn_edges, _bigram_ll, ...).
 #: The bench's min-of-2 protocol discards rep 1 — exactly where the
@@ -78,13 +80,130 @@ def _note_staged_build(name: str, seconds: float) -> None:
     )
 
 
-@atexit.register
-def _cleanup_staged_dirs() -> None:
-    import shutil
+def _fingerprint(path: str) -> tuple[int, int]:
+    """``(mtime_ns, size)`` of a table: a file's own, or for a directory
+    dataset the max mtime over the tree and the total file size, so an
+    in-place rewrite of one part file changes it."""
+    st = os.stat(path)  # a missing table raises here, as getmtime did
+    if not os.path.isdir(path):
+        return st.st_mtime_ns, st.st_size
+    mtime = size = 0
+    for root, _, files in os.walk(path):
+        mtime = max(mtime, os.stat(root).st_mtime_ns)
+        for f in files:
+            st = os.stat(os.path.join(root, f))
+            mtime, size = max(mtime, st.st_mtime_ns), size + st.st_size
+    return mtime, size
 
-    for src in _USER_STATS_STAGED.values():
-        shutil.rmtree(os.path.dirname(src), ignore_errors=True)
-    _USER_STATS_STAGED.clear()
+
+_STAGE_PREFIX = "sis_stage_"
+_STAGE_ROOT: str | None = None
+#: artifact name -> its session-staged builder (see :func:`staged`)
+STAGED_ARTIFACTS: dict[str, _Staged] = {}
+
+
+def _sweep_dead_roots(parent: str) -> None:
+    """Remove the session roots under ``parent`` whose process is gone:
+    a killed run never reaches its ``atexit`` hook."""
+    for entry in os.listdir(parent):
+        if not entry.startswith(_STAGE_PREFIX):
+            continue
+        pid = entry[len(_STAGE_PREFIX):].split("_", 1)[0]
+        if not pid.isdigit():
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
+        except PermissionError:
+            pass  # alive, owned by another user
+
+
+def _stage_root() -> str:
+    global _STAGE_ROOT
+    if _STAGE_ROOT is None:
+        parent = tempfile.gettempdir()
+        _sweep_dead_roots(parent)
+        _STAGE_ROOT = tempfile.mkdtemp(
+            prefix=f"{_STAGE_PREFIX}{os.getpid()}_", dir=parent
+        )
+    return _STAGE_ROOT
+
+
+@atexit.register
+def _remove_stage_root() -> None:
+    if _STAGE_ROOT is not None:
+        shutil.rmtree(_STAGE_ROOT, ignore_errors=True)
+
+
+class _Staged:
+    """A registry relation built once per (corpus, session) and served
+    from parquet; see :func:`staged`."""
+
+    def __init__(self, name: str, table: str, build: Callable) -> None:
+        functools.update_wrapper(self, build)
+        self.name, self.table, self.build = name, table, build
+        self._dirs: dict[tuple[str, tuple[int, int]], str] = {}
+
+    def path(self, spark: SparkSession, sf_dir: str) -> str:
+        """The staged parquet directory, built on a key miss."""
+        table = _t(sf_dir, self.table)
+        key = (table, _fingerprint(table))
+        d = self._dirs.get(key)
+        if d is None or not os.path.isdir(d):
+            t0 = time.perf_counter()
+            for old in [k for k in self._dirs if k[0] == table]:
+                shutil.rmtree(self._dirs.pop(old), ignore_errors=True)
+            df = self.build(spark, sf_dir)
+            d = tempfile.mkdtemp(prefix=f"{self.name}_", dir=_stage_root())
+            df.write.mode("overwrite").parquet(d)
+            self._dirs[key] = d
+            _note_staged_build(self.name, time.perf_counter() - t0)
+        return d
+
+    def __call__(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        return spark.read.parquet(self.path(spark, sf_dir))
+
+    def reset(self) -> None:
+        """Drop this artifact's staged copies; the next call rebuilds."""
+        for d in self._dirs.values():
+            shutil.rmtree(d, ignore_errors=True)
+        self._dirs.clear()
+
+
+def staged(name: str, table: str) -> Callable[[Callable], _Staged]:
+    """Session staging: ``build(spark, sf_dir) -> DataFrame`` becomes a
+    helper of the same signature that writes the build to parquet once
+    and reads it back on every later call.
+
+    - **Key:** ``(name, table path, input fingerprint)``, where the input
+      is the ``table`` base table under ``sf_dir`` and the fingerprint is
+      :func:`_fingerprint`. A new table path (a fresh copy of the
+      tables) builds its own copy; a changed fingerprint evicts the
+      artifact's stale copy of that path and rebuilds. Builder knobs are
+      module constants that nothing rebinds during a process, so they are
+      not part of the key.
+    - **Lifecycle:** every artifact lives under one per-process session
+      root (``sis_stage_<pid>_*`` in the temp dir), removed at exit; the
+      first use sweeps roots left by processes that no longer exist.
+    - **Accounting:** each build's wall seconds, including any staged
+      builds nested in it, go to ``_note_staged_build(name, s)``.
+    - **Determinism:** consumers read the staged rows, so staged and
+      inline results agree only because every builder is deterministic
+      and parquet round-trips its column types exactly.
+
+    The wrapper keeps the undecorated builder as ``.build``, exposes the
+    staged directory as ``.path(spark, sf_dir)`` (for streaming sources)
+    and drops its copies on ``.reset()``; :data:`STAGED_ARTIFACTS`
+    registers it by name."""
+
+    def wrap(build: Callable) -> _Staged:
+        STAGED_ARTIFACTS[name] = _Staged(name, table, build)
+        return STAGED_ARTIFACTS[name]
+
+    return wrap
+
+
 def _t(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
 def _read(

@@ -1,16 +1,11 @@
 """Deduplication & decontamination queries (exact through embedding-LSH)."""
 
-import atexit
-
 from spark_ifs_spark.registry._common import *  # noqa: F401,F403
 from spark_ifs_spark.registry._common import (  # noqa: F401
     _BENFORD_PPM,
     _PROFILE_SKETCH_COLS,
     _SQL_SHINGLES,
     _SQL_WORDS,
-    _USER_STATS_STAGED,
-    _cleanup_staged_dirs,
-    _note_staged_build,
     _lr_features,
     _quantized_wide,
     _read,
@@ -88,6 +83,8 @@ PREFIX_N = 3             # trigram shingles: 27k-term vocabulary at sf0.1, so th
 PREFIX_THRESHOLD = 0.75  # exact Jaccard floor — dyadic, so ceil(t*n) is float-exact
 #                          at every set size (0.8 rounds UP at n=50 and would
 #                          over-shorten the lossless prefix bound)
+# _prefix_pairs injects the staged NGRAM_N shingles into the PREFIX_N join
+assert PREFIX_N == NGRAM_N
 
 
 def q_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -267,95 +264,40 @@ def q_dedup_embedding_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("id_a", "id_b", F.round("cos", 6).alias("cos"))
 
 
-#: (sf_dir, embeddings-mtime) -> staged (id_a, id_b, cos) parquet paths
-#: for the two sign-LSH embedding pair relations (the 0.4-threshold
-#: demo knobs and the 0.9 production knobs): each fed TWO queries (the
-#: pair query and its recall audit's detect side), which re-ran the
-#: full 192/120-plane LSH + verify pipeline each — the _minhash_pairs
-#: build-once pattern. cos is the kernel's raw double (rounding happens
-#: at the consumer), and parquet round-trips doubles exactly.
-_EMB_LSH_PAIRS_STAGED: dict[tuple[str, float], str] = {}
-_EMB_LSH_HI_PAIRS_STAGED: dict[tuple[str, float], str] = {}
-
-
-@atexit.register
-def _cleanup_emb_lsh_staged() -> None:
-    import shutil
-
-    for reg in (_EMB_LSH_PAIRS_STAGED, _EMB_LSH_HI_PAIRS_STAGED):
-        for src in reg.values():
-            shutil.rmtree(os.path.dirname(src), ignore_errors=True)
-        reg.clear()
-
-
+@staged("emb_lsh_pairs", "embeddings")
 def _emb_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The demo-knob sign-LSH embedding pair relation ``(id_a, id_b,
-    cos)`` — built once per (corpus, session) and staged; see
-    ``_EMB_LSH_PAIRS_STAGED``."""
-    import shutil
-    import tempfile
-
-    mtime = os.path.getmtime(_t(sf_dir, "embeddings"))
-    key = (sf_dir, mtime)
-    src = _EMB_LSH_PAIRS_STAGED.get(key)
-    if src is None or not os.path.isdir(src):
-        _t0 = time.perf_counter()
-        for old_key in [k for k in _EMB_LSH_PAIRS_STAGED if k[0] == sf_dir]:
-            shutil.rmtree(
-                os.path.dirname(_EMB_LSH_PAIRS_STAGED.pop(old_key)),
-                ignore_errors=True,
-            )
-        emb = _read(spark, sf_dir, "embeddings", fan_out=True)
-        out = similarity.cosine_lsh_pairs(
-            emb,
-            "vec_id",
-            "embedding",
-            EMB_DIMS,
-            threshold=EMB_DEDUP_THRESHOLD,
-            num_planes=EMB_LSH_PLANES,
-            num_tables=EMB_LSH_TABLES,
-            seed=EMB_LSH_SEED,
-        ).select("id_a", "id_b", "cos")
-        src = os.path.join(tempfile.mkdtemp(prefix="sis_emb_lsh_"), "pairs")
-        out.write.mode("overwrite").parquet(src)
-        _EMB_LSH_PAIRS_STAGED[key] = src
-        _note_staged_build("emb_lsh_pairs", time.perf_counter() - _t0)
-    return spark.read.parquet(src)
+    """The demo-knob (0.4-threshold) sign-LSH embedding pair relation
+    ``(id_a, id_b, cos)``, session-staged: it feeds the pair query and
+    its recall audit's detect side. ``cos`` is the kernel's raw double
+    (rounding happens at the consumer)."""
+    emb = _read(spark, sf_dir, "embeddings", fan_out=True)
+    return similarity.cosine_lsh_pairs(
+        emb,
+        "vec_id",
+        "embedding",
+        EMB_DIMS,
+        threshold=EMB_DEDUP_THRESHOLD,
+        num_planes=EMB_LSH_PLANES,
+        num_tables=EMB_LSH_TABLES,
+        seed=EMB_LSH_SEED,
+    ).select("id_a", "id_b", "cos")
 
 
+@staged("emb_lsh_hi_pairs", "embeddings")
 def _emb_lsh_hi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production-knob (threshold 0.9) sign-LSH pair relation over
-    the augmented corpus — built once per (corpus, session) and staged;
-    see ``_EMB_LSH_HI_PAIRS_STAGED``."""
-    import shutil
-    import tempfile
-
-    mtime = os.path.getmtime(_t(sf_dir, "embeddings"))
-    key = (sf_dir, mtime)
-    src = _EMB_LSH_HI_PAIRS_STAGED.get(key)
-    if src is None or not os.path.isdir(src):
-        _t0 = time.perf_counter()
-        for old_key in [k for k in _EMB_LSH_HI_PAIRS_STAGED if k[0] == sf_dir]:
-            shutil.rmtree(
-                os.path.dirname(_EMB_LSH_HI_PAIRS_STAGED.pop(old_key)),
-                ignore_errors=True,
-            )
-        aug = _aug_hi_embeddings(spark, sf_dir)
-        out = similarity.cosine_lsh_pairs(
-            aug,
-            "vec_id",
-            "embedding",
-            EMB_DIMS,
-            threshold=EMB_LSH_HI_THRESHOLD,
-            num_planes=EMB_LSH_HI_PLANES,
-            num_tables=EMB_LSH_HI_TABLES,
-            seed=EMB_LSH_SEED,
-        ).select("id_a", "id_b", "cos")
-        src = os.path.join(tempfile.mkdtemp(prefix="sis_emb_lsh_hi_"), "pairs")
-        out.write.mode("overwrite").parquet(src)
-        _EMB_LSH_HI_PAIRS_STAGED[key] = src
-        _note_staged_build("emb_lsh_hi_pairs", time.perf_counter() - _t0)
-    return spark.read.parquet(src)
+    the augmented corpus, session-staged like :func:`_emb_lsh_pairs`."""
+    aug = _aug_hi_embeddings(spark, sf_dir)
+    return similarity.cosine_lsh_pairs(
+        aug,
+        "vec_id",
+        "embedding",
+        EMB_DIMS,
+        threshold=EMB_LSH_HI_THRESHOLD,
+        num_planes=EMB_LSH_HI_PLANES,
+        num_tables=EMB_LSH_HI_TABLES,
+        seed=EMB_LSH_SEED,
+    ).select("id_a", "id_b", "cos")
 
 
 def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -573,187 +515,55 @@ WHERE c.doc_id % {DECONTAM_EVAL_MOD} != 0
 """
 
 
-#: (sf_dir, documents-mtime) -> staged (id_a, id_b, jaccard) parquet
-#: path; the `_knn_edges` build-once pattern applied to the gate-knob
-#: minhash pair relation — four registry surfaces (the pairs query,
-#: the source matrix, the shard-locality audit, the cluster builder)
-#: consume the identical relation and each used to run the full
-#: signature + verify pipeline separately
-_MINHASH_PAIRS_STAGED: dict[tuple[str, float], str] = {}
-
-#: (sf_dir, documents-mtime) -> staged (id, sh) parquet path; the §5
-#: pattern one level DOWN (r13 verdict item 4): the distinct word
-#: NGRAM_N-shingle relation itself is consumed by FIVE surfaces — the
-#: minhash pair build, incremental dedup, and the three shingle
-#: statistics (doc/docs novelty, boilerplate top-k) — and each used to
-#: re-run the tokenize + slice + explode pass over the corpus. String
-#: rows, so the parquet round-trip is exact.
-_SHINGLES_STAGED: dict[tuple[str, float], str] = {}
-
-#: (sf_dir, documents-mtime) -> staged (id_a, id_b, jaccard) parquet
-#: path for the LOSSLESS prefix-filter exact-Jaccard join at the gate
-#: knobs (PREFIX_N, PREFIX_THRESHOLD) — consumed identically by
-#: q_dedup_jaccard_prefix and minhash_recall_audit's truth side, which
-#: each used to run the full AllPairs/PPJoin pipeline.
-_PREFIX_PAIRS_STAGED: dict[tuple[str, float], str] = {}
-
-
-@atexit.register
-def _cleanup_dedup_staged() -> None:
-    import shutil
-
-    for reg in (
-        _MINHASH_PAIRS_STAGED,
-        _DUP_CLUSTERS_STAGED,
-        _SHINGLES_STAGED,
-        _PREFIX_PAIRS_STAGED,
-    ):
-        for src in reg.values():
-            shutil.rmtree(os.path.dirname(src), ignore_errors=True)
-        reg.clear()
-
-
+@staged("prefix_pairs", "documents")
 def _prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The registry's lossless prefix-filter exact-Jaccard pair relation
-    ``(id_a, id_b, jaccard)`` at the gate knobs — built once per
-    (corpus, session) from the staged shingles and staged to parquet
-    (doubles round-trip parquet exactly). Shared by the pair query and
-    the recall audit's truth side. Single-file-fixture mtime caveat as
-    :func:`_minhash_pairs`."""
-    import shutil
-    import tempfile
-
-    mtime = os.path.getmtime(_t(sf_dir, "documents"))
-    key = (sf_dir, mtime)
-    src = _PREFIX_PAIRS_STAGED.get(key)
-    if src is None or not os.path.isdir(src):
-        _t0 = time.perf_counter()
-        for old_key in [k for k in _PREFIX_PAIRS_STAGED if k[0] == sf_dir]:
-            shutil.rmtree(
-                os.path.dirname(_PREFIX_PAIRS_STAGED.pop(old_key)),
-                ignore_errors=True,
-            )
-        docs = _read(spark, sf_dir, "documents")
-        pairs = dedup.jaccard_prefix_pairs(
-            docs, "doc_id", "text", n=PREFIX_N, threshold=PREFIX_THRESHOLD,
-            sh=_shingles(spark, sf_dir),
-        ).select("id_a", "id_b", "jaccard")
-        src = os.path.join(
-            tempfile.mkdtemp(prefix="sis_prefix_pairs_"), "pairs"
-        )
-        pairs.write.mode("overwrite").parquet(src)
-        _PREFIX_PAIRS_STAGED[key] = src
-        _note_staged_build("prefix_pairs", time.perf_counter() - _t0)
-    return spark.read.parquet(src)
+    ``(id_a, id_b, jaccard)`` at the gate knobs (PREFIX_N,
+    PREFIX_THRESHOLD), session-staged from the staged shingles. Shared
+    by the pair query and the recall audit's truth side."""
+    docs = _read(spark, sf_dir, "documents")
+    return dedup.jaccard_prefix_pairs(
+        docs, "doc_id", "text", n=PREFIX_N, threshold=PREFIX_THRESHOLD,
+        sh=_shingles(spark, sf_dir),
+    ).select("id_a", "id_b", "jaccard")
 
 
+@staged("shingles", "documents")
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The registry's distinct ``(id, sh)`` word ``NGRAM_N``-shingle
-    relation over ``documents`` — built once per (corpus, session) and
-    staged to parquet. Shared by :func:`_minhash_pairs`,
+    relation over ``documents``, session-staged. Shared by
+    :func:`_minhash_pairs`, :func:`_prefix_pairs`,
     ``q_dedup_incremental`` and the novelty/boilerplate statistics, so
-    the per-query shingle rebuild (and the r13 cache-hit coupling
-    between those "independent" queries) disappears. Single-file-fixture
-    mtime caveat as :func:`_minhash_pairs`."""
-    import shutil
-    import tempfile
-
-    mtime = os.path.getmtime(_t(sf_dir, "documents"))
-    key = (sf_dir, mtime)
-    src = _SHINGLES_STAGED.get(key)
-    if src is None or not os.path.isdir(src):
-        _t0 = time.perf_counter()
-        for old_key in [k for k in _SHINGLES_STAGED if k[0] == sf_dir]:
-            shutil.rmtree(
-                os.path.dirname(_SHINGLES_STAGED.pop(old_key)),
-                ignore_errors=True,
-            )
-        docs = _read(spark, sf_dir, "documents", fan_out=True)
-        sh = dedup.word_shingles(docs, "doc_id", "text", NGRAM_N)
-        src = os.path.join(tempfile.mkdtemp(prefix="sis_shingles_"), "sh")
-        sh.write.mode("overwrite").parquet(src)
-        _SHINGLES_STAGED[key] = src
-        _note_staged_build("shingles", time.perf_counter() - _t0)
-    return spark.read.parquet(src)
+    none of them re-tokenizes the corpus."""
+    docs = _read(spark, sf_dir, "documents", fan_out=True)
+    return dedup.word_shingles(docs, "doc_id", "text", NGRAM_N)
 
 
+@staged("minhash_pairs", "documents")
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The registry's minhash-LSH near-dup pair relation
-    ``(id_a, id_b, jaccard)`` at the gate knobs — built once per
-    (corpus, session) and staged to parquet.
-
-    Cache-key caveat (applies to every ``*_STAGED`` helper): the key is
-    ``getmtime`` of the dataset path. Fixtures here are single parquet
-    files, where any rewrite bumps it; for a *directory* dataset an
-    in-place file rewrite would not bump the directory mtime, so key on
-    the max member mtime before pointing these at directory tables."""
-    import shutil
-    import tempfile
-
-    mtime = os.path.getmtime(_t(sf_dir, "documents"))
-    key = (sf_dir, mtime)
-    src = _MINHASH_PAIRS_STAGED.get(key)
-    if src is None or not os.path.isdir(src):
-        _t0 = time.perf_counter()
-        for old_key in [k for k in _MINHASH_PAIRS_STAGED if k[0] == sf_dir]:
-            shutil.rmtree(
-                os.path.dirname(_MINHASH_PAIRS_STAGED.pop(old_key)),
-                ignore_errors=True,
-            )
-        docs = _read(spark, sf_dir, "documents")
-        pairs = dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text",
-            n=NGRAM_N, num_hashes=MINHASH_HASHES,
-            rows_per_band=MINHASH_ROWS_PER_BAND, threshold=JACCARD_THRESHOLD,
-            sh=_shingles(spark, sf_dir),
-        ).select("id_a", "id_b", "jaccard")
-        src = os.path.join(
-            tempfile.mkdtemp(prefix="sis_minhash_pairs_"), "pairs"
-        )
-        pairs.write.mode("overwrite").parquet(src)
-        _MINHASH_PAIRS_STAGED[key] = src
-        _note_staged_build("minhash_pairs", time.perf_counter() - _t0)
-    return spark.read.parquet(src)
+    ``(id_a, id_b, jaccard)`` at the gate knobs, session-staged from the
+    staged shingles. Shared by the pairs query, the source matrix, the
+    shard-locality audit and :func:`_dup_clusters`."""
+    docs = _read(spark, sf_dir, "documents")
+    return dedup.minhash_lsh_pairs(
+        docs, "doc_id", "text",
+        n=NGRAM_N, num_hashes=MINHASH_HASHES,
+        rows_per_band=MINHASH_ROWS_PER_BAND, threshold=JACCARD_THRESHOLD,
+        sh=_shingles(spark, sf_dir),
+    ).select("id_a", "id_b", "jaccard")
 
 
-#: (sf_dir, documents-mtime) -> staged (doc_id, cluster) parquet path;
-#: the `_knn_edges` build-once pattern applied to the minhash cluster
-#: relation — EIGHT registry queries consume the identical clustering
-#: (same corpus, same LSH knobs), and each used to pay the eager
-#: connected-components build (~3 s at sf0.1) separately
-_DUP_CLUSTERS_STAGED: dict[tuple[str, float], str] = {}
-
-
+@staged("dup_clusters", "documents")
 def _dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The registry's minhash cluster relation ``(doc_id, cluster)``
-    for ``sf_dir`` — built once per (corpus, session) with the gate
-    knobs and staged to parquet; see ``_DUP_CLUSTERS_STAGED``."""
-    import shutil
-    import tempfile
-
+    (connected components of :func:`_minhash_pairs`, min-id label),
+    session-staged: eight registry queries consume it."""
     from spark_ifs_spark.operators.graph import connected_components
 
-    mtime = os.path.getmtime(_t(sf_dir, "documents"))
-    key = (sf_dir, mtime)
-    src = _DUP_CLUSTERS_STAGED.get(key)
-    if src is None or not os.path.isdir(src):
-        _t0 = time.perf_counter()
-        for old_key in [k for k in _DUP_CLUSTERS_STAGED if k[0] == sf_dir]:
-            shutil.rmtree(
-                os.path.dirname(_DUP_CLUSTERS_STAGED.pop(old_key)),
-                ignore_errors=True,
-            )
-        pairs = _minhash_pairs(spark, sf_dir)
-        cc = connected_components(pairs).select(
-            F.col("id").alias("doc_id"), F.col("component").alias("cluster")
-        )
-        src = os.path.join(
-            tempfile.mkdtemp(prefix="sis_dup_clusters_"), "clusters"
-        )
-        cc.write.mode("overwrite").parquet(src)
-        _DUP_CLUSTERS_STAGED[key] = src
-        _note_staged_build("dup_clusters", time.perf_counter() - _t0)
-    return spark.read.parquet(src)
+    return connected_components(_minhash_pairs(spark, sf_dir)).select(
+        F.col("id").alias("doc_id"), F.col("component").alias("cluster")
+    )
 
 
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -6,9 +6,6 @@ from spark_ifs_spark.registry._common import (  # noqa: F401
     _PROFILE_SKETCH_COLS,
     _SQL_SHINGLES,
     _SQL_WORDS,
-    _USER_STATS_STAGED,
-    _cleanup_staged_dirs,
-    _note_staged_build,
     _lr_features,
     _quantized_wide,
     _read,
@@ -131,6 +128,15 @@ WHERE rank <= 3
 """
 
 
+@staged("user_stats_src", "events")
+def _user_stats_src(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``(user_id, value)`` events projection as a 2-file streaming
+    source for the two stateful user-stats queries, session-staged so a
+    repeat call times the stream, not the staging."""
+    ev = _read(spark, sf_dir, "events").select("user_id", "value")
+    return ev.repartition(2)
+
+
 def q_events_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator (``applyInPandasWithState``)
     driven for real: the events table is re-staged as a 2-file streaming
@@ -144,30 +150,12 @@ def q_events_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from spark_ifs_spark.streaming.stateful import running_user_stats
 
-    ev = _read(spark, sf_dir, "events").select("user_id", "value")
     name = f"user_stats_{uuid.uuid4().hex[:8]}"
-    # the 2-file staged source is identical across calls in a session —
-    # memoize it (repeat timings then measure the stream, not the stage).
-    # Keyed on source mtime so in-session data changes restage; stale
-    # entries for the same sf_dir are removed eagerly, the rest at exit.
-    mtime = os.path.getmtime(_t(sf_dir, "events"))
-    key = (sf_dir, mtime)
-    src = _USER_STATS_STAGED.get(key)
-    if src is None or not os.path.isdir(src):
-        _t0 = time.perf_counter()
-        for old_key in [k for k in _USER_STATS_STAGED if k[0] == sf_dir]:
-            shutil.rmtree(
-                os.path.dirname(_USER_STATS_STAGED.pop(old_key)),
-                ignore_errors=True,
-            )
-        src = os.path.join(tempfile.mkdtemp(prefix="sis_stateful_"), "src")
-        ev.repartition(2).write.mode("overwrite").parquet(src)
-        _USER_STATS_STAGED[key] = src
-        _note_staged_build("user_stats_src", time.perf_counter() - _t0)
+    src = _user_stats_src.path(spark, sf_dir)
     d = tempfile.mkdtemp(prefix="sis_stateful_ckpt_")
     try:
         stream = (
-            spark.readStream.schema(ev.schema)
+            spark.readStream.schema(spark.read.parquet(src).schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
@@ -1295,22 +1283,8 @@ def q_events_user_stats_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from spark_ifs_spark.streaming.stateful import running_user_stats_tws
 
-    ev = _read(spark, sf_dir, "events").select("user_id", "value")
     name = f"user_stats_tws_{uuid.uuid4().hex[:8]}"
-    mtime = os.path.getmtime(_t(sf_dir, "events"))
-    key = (sf_dir, mtime)
-    src = _USER_STATS_STAGED.get(key)
-    if src is None or not os.path.isdir(src):
-        _t0 = time.perf_counter()
-        for old_key in [k for k in _USER_STATS_STAGED if k[0] == sf_dir]:
-            shutil.rmtree(
-                os.path.dirname(_USER_STATS_STAGED.pop(old_key)),
-                ignore_errors=True,
-            )
-        src = os.path.join(tempfile.mkdtemp(prefix="sis_stateful_"), "src")
-        ev.repartition(2).write.mode("overwrite").parquet(src)
-        _USER_STATS_STAGED[key] = src
-        _note_staged_build("user_stats_src", time.perf_counter() - _t0)
+    src = _user_stats_src.path(spark, sf_dir)
     d = tempfile.mkdtemp(prefix="sis_tws_ckpt_")
     provider_key = "spark.sql.streaming.stateStore.providerClass"
     prev_provider = spark.conf.get(provider_key, None)
@@ -1331,7 +1305,7 @@ def q_events_user_stats_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set(ckpt_key, "true")
     try:
         stream = (
-            spark.readStream.schema(ev.schema)
+            spark.readStream.schema(spark.read.parquet(src).schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )

@@ -6,8 +6,6 @@ from spark_ifs_spark.registry._common import (  # noqa: F401
     _PROFILE_SKETCH_COLS,
     _SQL_SHINGLES,
     _SQL_WORDS,
-    _USER_STATS_STAGED,
-    _cleanup_staged_dirs,
     _lr_features,
     _quantized_wide,
     _read,

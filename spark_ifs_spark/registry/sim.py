@@ -6,9 +6,6 @@ from spark_ifs_spark.registry._common import (  # noqa: F401
     _PROFILE_SKETCH_COLS,
     _SQL_SHINGLES,
     _SQL_WORDS,
-    _USER_STATS_STAGED,
-    _cleanup_staged_dirs,
-    _note_staged_build,
     _lr_features,
     _quantized_wide,
     _read,
@@ -519,49 +516,15 @@ GROUP BY 1
 """
 
 
-#: (sf_dir, documents-mtime) -> staged (id, n_bigrams, ll_micronats)
-#: parquet path; the `_knn_edges` build-once pattern applied to the
-#: corpus bigram-LM scoring relation — five registry queries
-#: (lm_bigram_logprob, ppl_buckets, ccnet_mix, doremi_weights,
-#: doremi_mix) consume the identical relation and each used to rerun
-#: the full train-then-score pipeline
-_BIGRAM_LL_STAGED: dict[tuple[str, float], str] = {}
-
-
-@atexit.register
-def _cleanup_bigram_staged() -> None:
-    import shutil
-
-    for src_ in _BIGRAM_LL_STAGED.values():
-        shutil.rmtree(os.path.dirname(src_), ignore_errors=True)
-    _BIGRAM_LL_STAGED.clear()
-
-
+@staged("bigram_ll", "documents")
 def _bigram_ll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The registry's bigram-LM scoring relation ``(id, n_bigrams,
-    ll_micronats)`` over the documents table — built once per (corpus,
-    session) and staged to parquet. Exact integer micronats, so the
-    staged rows are bit-identical to an inline run."""
-    import shutil
-    import tempfile
-
-    mtime = os.path.getmtime(_t(sf_dir, "documents"))
-    key = (sf_dir, mtime)
-    src_ = _BIGRAM_LL_STAGED.get(key)
-    if src_ is None or not os.path.isdir(src_):
-        _t0 = time.perf_counter()
-        for old_key in [k for k in _BIGRAM_LL_STAGED if k[0] == sf_dir]:
-            shutil.rmtree(
-                os.path.dirname(_BIGRAM_LL_STAGED.pop(old_key)),
-                ignore_errors=True,
-            )
-        docs = _read(spark, sf_dir, "documents", fan_out=True)
-        ll = textstats.bigram_logprob(docs, "doc_id", "text")
-        src_ = os.path.join(tempfile.mkdtemp(prefix="sis_bigram_ll_"), "ll")
-        ll.write.mode("overwrite").parquet(src_)
-        _BIGRAM_LL_STAGED[key] = src_
-        _note_staged_build("bigram_ll", time.perf_counter() - _t0)
-    return spark.read.parquet(src_)
+    ll_micronats)`` over the documents table, session-staged: five
+    queries (lm_bigram_logprob, ppl_buckets, ccnet_mix, doremi_weights,
+    doremi_mix) consume it. Exact integer micronats, so the staged rows
+    are bit-identical to an inline run."""
+    docs = _read(spark, sf_dir, "documents", fan_out=True)
+    return textstats.bigram_logprob(docs, "doc_id", "text")
 
 
 def q_lm_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1614,57 +1577,20 @@ KNN_GRAPH_SCALE = 1024  # integer-state quantization (power of two)
 KNN_GRAPH_SAMPLE_MOD = 20  # recall-audit node sample (id % mod == 0)
 _KNN_WORK = 5 * KNN_GRAPH_K  # internal working degree (K = 5k)
 
-#: staged kNN-graph edge relations, keyed (sf_dir, embeddings mtime) —
-#: the registry-side build-once/consume-many contract the
-#: ``write_knn_graph`` sink provides to pipelines: the NN-descent is
-#: the family's dominant cost and every consumer reads the SAME edge
-#: relation, so the first consumer in a session builds + stages it as
-#: parquet and the other six read it back (the ``_USER_STATS_STAGED``
-#: memoization discipline; parquet round-trips long/double columns
-#: bit-exactly, so consumer-over-staged ≡ consumer-over-fresh —
-#: pytest-pinned). Each ORACLE still rebuilds the graph from scratch
-#: in SQL, so the value-hash gate keeps auditing the full build.
-_KNN_GRAPH_STAGED: dict[tuple[str, float], str] = {}
-
-
-@atexit.register
-def _cleanup_knn_staged() -> None:
-    import shutil
-
-    for src in _KNN_GRAPH_STAGED.values():
-        shutil.rmtree(os.path.dirname(src), ignore_errors=True)
-    _KNN_GRAPH_STAGED.clear()
-
-
+@staged("knn_edges", "embeddings")
 def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The registry's kNN-graph edge relation ``(id, nb, score, rank)``
-    for ``sf_dir`` — built once per (corpus, session) with the gate
-    knobs and staged to parquet; see ``_KNN_GRAPH_STAGED``."""
-    import shutil
-    import tempfile
-
-    mtime = os.path.getmtime(_t(sf_dir, "embeddings"))
-    key = (sf_dir, mtime)
-    src = _KNN_GRAPH_STAGED.get(key)
-    if src is None or not os.path.isdir(src):
-        _t0 = time.perf_counter()
-        for old_key in [k for k in _KNN_GRAPH_STAGED if k[0] == sf_dir]:
-            shutil.rmtree(
-                os.path.dirname(_KNN_GRAPH_STAGED.pop(old_key)),
-                ignore_errors=True,
-            )
-        emb = _read(spark, sf_dir, "embeddings")
-        nc = similarity.scaled_num_centroids(emb.count())
-        edges = _knn.knn_graph(
-            emb, "vec_id", "embedding", k=KNN_GRAPH_K, num_centroids=nc,
-            rounds=KNN_GRAPH_ROUNDS, groups=KNN_GRAPH_GROUPS,
-            scale=KNN_GRAPH_SCALE, work_degree=_KNN_WORK,
-        )
-        src = os.path.join(tempfile.mkdtemp(prefix="sis_knn_graph_"), "edges")
-        edges.write.mode("overwrite").parquet(src)
-        _KNN_GRAPH_STAGED[key] = src
-        _note_staged_build("knn_edges", time.perf_counter() - _t0)
-    return spark.read.parquet(src)
+    for ``sf_dir`` at the gate knobs, session-staged: the NN-descent is
+    the family's dominant cost and all seven graph consumers read the
+    same edges. Each ORACLE still rebuilds the graph from scratch in
+    SQL, so the value-hash gate keeps auditing the full build."""
+    emb = _read(spark, sf_dir, "embeddings")
+    nc = similarity.scaled_num_centroids(emb.count())
+    return _knn.knn_graph(
+        emb, "vec_id", "embedding", k=KNN_GRAPH_K, num_centroids=nc,
+        rounds=KNN_GRAPH_ROUNDS, groups=KNN_GRAPH_GROUPS,
+        scale=KNN_GRAPH_SCALE, work_degree=_KNN_WORK,
+    )
 
 
 def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,9 +8,6 @@ from spark_ifs_spark.registry._common import (  # noqa: F401
     _PROFILE_SKETCH_COLS,
     _SQL_SHINGLES,
     _SQL_WORDS,
-    _USER_STATS_STAGED,
-    _cleanup_staged_dirs,
-    _note_staged_build,
     _lr_features,
     _quantized_wide,
     _read,
@@ -583,51 +580,17 @@ HAVING count(*) >= thresh
 """
 
 
-#: staged token relations for the heavy-hitter cross-audit, keyed
-#: (sf_dir, documents mtime) — the _KNN_GRAPH_STAGED discipline: the
-#: audit runs TWO independent sketch routes (CMS grid + verify, MG
-#: fold + verify = four corpus passes) and each used to re-tokenize
-#: the documents from scratch; tokenizing once and staging the
-#: exploded (w) relation to parquet halves the audit's scan-side CPU
-#: while keeping the two routes' sketch math fully independent.
-#: Single-route keys (cms_heavy_hitters, mg_heavy_hitters) keep their
-#: own tokenize — their plan pins assert the text-only read.
-_HH_TOKS_STAGED: dict[tuple[str, float], str] = {}
-
-
-@atexit.register
-def _cleanup_hh_toks_staged() -> None:
-    import shutil
-
-    for src in _HH_TOKS_STAGED.values():
-        shutil.rmtree(os.path.dirname(src), ignore_errors=True)
-    _HH_TOKS_STAGED.clear()
-
-
+@staged("hh_toks", "documents")
 def _hh_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cross-audit's token relation ``(w)`` for ``sf_dir`` —
-    tokenized once per (corpus, session) and staged to parquet; see
-    ``_HH_TOKS_STAGED``."""
-    import shutil
-    import tempfile
-
-    mtime = os.path.getmtime(_t(sf_dir, "documents"))
-    key = (sf_dir, mtime)
-    src = _HH_TOKS_STAGED.get(key)
-    if src is None or not os.path.isdir(src):
-        _t0 = time.perf_counter()
-        for old_key in [k for k in _HH_TOKS_STAGED if k[0] == sf_dir]:
-            shutil.rmtree(
-                os.path.dirname(_HH_TOKS_STAGED.pop(old_key)),
-                ignore_errors=True,
-            )
-        docs = _read(spark, sf_dir, "documents", fan_out=True)
-        toks = docs.select(F.explode(F.split(F.col("text"), " ")).alias("w"))
-        src = os.path.join(tempfile.mkdtemp(prefix="sis_hh_toks_"), "toks")
-        toks.write.mode("overwrite").parquet(src)
-        _HH_TOKS_STAGED[key] = src
-        _note_staged_build("hh_toks", time.perf_counter() - _t0)
-    return spark.read.parquet(src)
+    """The heavy-hitter cross-audit's token relation ``(w)`` for
+    ``sf_dir``, session-staged: the audit runs TWO independent sketch
+    routes (CMS grid + verify, MG fold + verify = four corpus passes),
+    and tokenizing once halves its scan-side CPU while keeping the two
+    routes' sketch math fully independent. Single-route keys
+    (cms_heavy_hitters, mg_heavy_hitters) keep their own tokenize —
+    their plan pins assert the text-only read."""
+    docs = _read(spark, sf_dir, "documents", fan_out=True)
+    return docs.select(F.explode(F.split(F.col("text"), " ")).alias("w"))
 
 
 def q_heavy_hitter_cross_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1008,62 +971,29 @@ FROM ex e JOIN kmv USING (source) JOIN hll USING (source)
 
 OV_MH_H = 128  # MinHash-route signature width for the overlap cross-audit
 
-#: (sf_dir, documents-mtime) -> staged distinct-bigram-vocab parquet
-#: (same lifecycle contract as ``_HH_TOKS_STAGED``)
-_OV_VOC_STAGED: dict[tuple[str, float], str] = {}
-
-
-@atexit.register
-def _cleanup_ov_voc_staged() -> None:
-    import shutil
-
-    for src in _OV_VOC_STAGED.values():
-        shutil.rmtree(os.path.dirname(src), ignore_errors=True)
-    _OV_VOC_STAGED.clear()
-
-
+@staged("ov_voc", "documents")
 def _ov_voc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The overlap cross-audit's DISTINCT ``(source, term)``
-    word-bigram vocabulary for ``sf_dir`` — built once per (corpus,
-    session) and staged to parquet (the ``_hh_toks`` pattern): the
-    audit's four consumers (KMV digest, MinHash minima, both sides of
-    the exact self-join) read the staged relation instead of paying
-    scan + explode + distinct each. EAGERLY evaluated at first call
-    (a Spark write job at DataFrame-construction time), keyed on the
-    source file's mtime; determinism precondition as ``_hh_toks``."""
-    import shutil
-    import tempfile
-
-    mtime = os.path.getmtime(_t(sf_dir, "documents"))
-    key = (sf_dir, mtime)
-    src = _OV_VOC_STAGED.get(key)
-    if src is None or not os.path.isdir(src):
-        _t0 = time.perf_counter()
-        for old_key in [k for k in _OV_VOC_STAGED if k[0] == sf_dir]:
-            shutil.rmtree(
-                os.path.dirname(_OV_VOC_STAGED.pop(old_key)),
-                ignore_errors=True,
+    word-bigram vocabulary for ``sf_dir``, session-staged: the audit's
+    four consumers (KMV digest, MinHash minima, both sides of the exact
+    self-join) read the staged relation instead of paying scan +
+    explode + distinct each."""
+    docs = _read(spark, sf_dir, "documents")
+    # word-bigram relation, built JVM-side: slice off the last
+    # token, then a positional transform pairs each token with
+    # its successor
+    bigrams = docs.select(
+        "source", F.split("text", " ").alias("ws")
+    ).select(
+        "source",
+        F.explode(
+            F.expr(
+                "transform(slice(ws, 1, greatest(size(ws) - 1, 0)),"
+                " (w, i) -> concat(w, ' ', ws[i + 1]))"
             )
-        docs = _read(spark, sf_dir, "documents")
-        # word-bigram relation, built JVM-side: slice off the last
-        # token, then a positional transform pairs each token with
-        # its successor
-        bigrams = docs.select(
-            "source", F.split("text", " ").alias("ws")
-        ).select(
-            "source",
-            F.explode(
-                F.expr(
-                    "transform(slice(ws, 1, greatest(size(ws) - 1, 0)),"
-                    " (w, i) -> concat(w, ' ', ws[i + 1]))"
-                )
-            ).alias("term"),
-        )
-        src = os.path.join(tempfile.mkdtemp(prefix="sis_ov_voc_"), "voc")
-        bigrams.distinct().write.mode("overwrite").parquet(src)
-        _OV_VOC_STAGED[key] = src
-        _note_staged_build("ov_voc", time.perf_counter() - _t0)
-    return spark.read.parquet(src)
+        ).alias("term"),
+    )
+    return bigrams.distinct()
 
 
 def q_overlap_cross_audit(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,15 +1,12 @@
 """Text/corpus statistics, sampling, BPE, pipelines, misc analytics."""
 
-import atexit
-
 from spark_ifs_spark.registry._common import *  # noqa: F401,F403
 from spark_ifs_spark.registry._common import (  # noqa: F401
     _BENFORD_PPM,
     _PROFILE_SKETCH_COLS,
     _SQL_SHINGLES,
     _SQL_WORDS,
-    _USER_STATS_STAGED,
-    _cleanup_staged_dirs,
+    _fingerprint,
     _note_staged_build,
     _lr_features,
     _punct_fixture_expr,
@@ -664,47 +661,15 @@ SELECT '03_split:' || split, n_kept, n_out, CAST(0 AS BIGINT) FROM sp, nk
 """
 
 
-#: (sf_dir, documents-mtime) -> staged (rank, x, y, n) parquet path:
-#: the BPE_MERGES-round merge table, a driver-looped training build
-#: consumed by bpe_train_merges directly and collected by
-#: bpe_token_counts' encode side — the _minhash_pairs pattern
-_BPE_MERGES_STAGED: dict[tuple[str, float], str] = {}
-
-
-@atexit.register
-def _cleanup_bpe_merges_staged() -> None:
-    import shutil
-
-    for src in _BPE_MERGES_STAGED.values():
-        shutil.rmtree(os.path.dirname(src), ignore_errors=True)
-    _BPE_MERGES_STAGED.clear()
-
-
+@staged("bpe_merges", "documents")
 def _bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus's trained BPE merge table — built once per (corpus,
-    session) and staged; see ``_BPE_MERGES_STAGED``."""
-    import shutil
-    import tempfile
-
+    """The corpus's trained BPE merge table ``(rank, x, y, n)``, a
+    driver-looped training build, session-staged: bpe_train_merges
+    serves it directly and bpe_token_counts' encode side collects it."""
     from spark_ifs_spark.operators import bpe
 
-    mtime = os.path.getmtime(_t(sf_dir, "documents"))
-    key = (sf_dir, mtime)
-    src = _BPE_MERGES_STAGED.get(key)
-    if src is None or not os.path.isdir(src):
-        _t0 = time.perf_counter()
-        for old_key in [k for k in _BPE_MERGES_STAGED if k[0] == sf_dir]:
-            shutil.rmtree(
-                os.path.dirname(_BPE_MERGES_STAGED.pop(old_key)),
-                ignore_errors=True,
-            )
-        docs = _read(spark, sf_dir, "documents")
-        merges = bpe.bpe_train(docs, "text", BPE_MERGES)
-        src = os.path.join(tempfile.mkdtemp(prefix="sis_bpe_merges_"), "merges")
-        merges.write.mode("overwrite").parquet(src)
-        _BPE_MERGES_STAGED[key] = src
-        _note_staged_build("bpe_merges", time.perf_counter() - _t0)
-    return spark.read.parquet(src)
+    docs = _read(spark, sf_dir, "documents")
+    return bpe.bpe_train(docs, "text", BPE_MERGES)
 
 
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1170,7 +1135,7 @@ def q_docs_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _read(spark, sf_dir, "documents")
     out = boilerplate_fraction(
-        docs, "doc_id", "text", n=3, max_frac=NOVELTY_MAX_FRAC,
+        docs, "doc_id", "text", n=NGRAM_N, max_frac=NOVELTY_MAX_FRAC,
         sh=_shingles(spark, sf_dir),
     )
     return out.select(
@@ -1913,96 +1878,39 @@ GROUP BY 1
 """
 
 
-#: (sf_dir, documents-mtime) -> staged parquet paths for the two
-#: retrieval legs at the gate knobs: the MaxSim late-interaction
-#: ranking (query, rank, id, score) and the BM25 lexical ranking
-#: (query, rank, id, score_micro) over MAXSIM_QUERIES. Three queries
-#: (maxsim_topk, hybrid_rrf, retrieval_eval_rrf) ran the identical
-#: chunk + score + top-k pipeline and two of them also the identical
-#: BM25 leg — the `_minhash_pairs` build-once pattern applied to both.
-#: Bounded artifacts: ≤ |queries| x k rows each.
-_MAXSIM_RANK_STAGED: dict[tuple[str, float], str] = {}
-_BM25_RANK_STAGED: dict[tuple[str, float], str] = {}
-
-
-@atexit.register
-def _cleanup_retrieval_staged() -> None:
-    import shutil
-
-    for reg in (_MAXSIM_RANK_STAGED, _BM25_RANK_STAGED):
-        for src in reg.values():
-            shutil.rmtree(os.path.dirname(src), ignore_errors=True)
-        reg.clear()
-
-
+@staged("maxsim_ranking", "documents")
 def _maxsim_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The registry's MaxSim ranking ``(query, rank, id, score)`` for
-    ``MAXSIM_QUERIES`` at the gate knobs — built once per (corpus,
-    session) and staged to parquet. ``score`` is already rounded to 6
-    by the operator and parquet round-trips doubles exactly, so the
-    staged rows are bit-identical to an inline run. Single-file-fixture
-    mtime caveat as ``_minhash_pairs``."""
-    import shutil
-    import tempfile
-
+    ``MAXSIM_QUERIES`` at the gate knobs, session-staged: maxsim_topk,
+    hybrid_rrf and retrieval_eval_rrf read it. ``score`` is already
+    rounded to 6 by the operator, so the staged rows are bit-identical
+    to an inline run."""
     from spark_ifs_spark.operators.retrieval import chunk_bow_vectors, maxsim_topk
 
-    mtime = os.path.getmtime(_t(sf_dir, "documents"))
-    key = (sf_dir, mtime)
-    src = _MAXSIM_RANK_STAGED.get(key)
-    if src is None or not os.path.isdir(src):
-        _t0 = time.perf_counter()
-        for old_key in [k for k in _MAXSIM_RANK_STAGED if k[0] == sf_dir]:
-            shutil.rmtree(
-                os.path.dirname(_MAXSIM_RANK_STAGED.pop(old_key)),
-                ignore_errors=True,
-            )
-        docs = _read(spark, sf_dir, "documents")
-        vecs = chunk_bow_vectors(
-            docs,
-            "doc_id",
-            "text",
-            chunk_tokens=CHUNK_TOKENS,
-            overlap=CHUNK_OVERLAP,
-            num_buckets=MAXSIM_BUCKETS,
-        )
-        out = maxsim_topk(
-            spark, vecs, MAXSIM_QUERIES, k=MAXSIM_K, num_buckets=MAXSIM_BUCKETS
-        )
-        src = os.path.join(tempfile.mkdtemp(prefix="sis_maxsim_rank_"), "rank")
-        out.write.mode("overwrite").parquet(src)
-        _MAXSIM_RANK_STAGED[key] = src
-        _note_staged_build("maxsim_ranking", time.perf_counter() - _t0)
-    return spark.read.parquet(src)
+    docs = _read(spark, sf_dir, "documents")
+    vecs = chunk_bow_vectors(
+        docs,
+        "doc_id",
+        "text",
+        chunk_tokens=CHUNK_TOKENS,
+        overlap=CHUNK_OVERLAP,
+        num_buckets=MAXSIM_BUCKETS,
+    )
+    return maxsim_topk(
+        spark, vecs, MAXSIM_QUERIES, k=MAXSIM_K, num_buckets=MAXSIM_BUCKETS
+    )
 
 
+@staged("bm25_ranking", "documents")
 def _bm25_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The registry's BM25 lexical ranking ``(query, rank, id,
-    score_micro)`` for ``MAXSIM_QUERIES`` at the gate knobs — built once
-    per (corpus, session) and staged (integer micro-scores, bit-exact
-    staged or inline). Shared by the two RRF consumers."""
-    import shutil
-    import tempfile
-
-    mtime = os.path.getmtime(_t(sf_dir, "documents"))
-    key = (sf_dir, mtime)
-    src = _BM25_RANK_STAGED.get(key)
-    if src is None or not os.path.isdir(src):
-        _t0 = time.perf_counter()
-        for old_key in [k for k in _BM25_RANK_STAGED if k[0] == sf_dir]:
-            shutil.rmtree(
-                os.path.dirname(_BM25_RANK_STAGED.pop(old_key)),
-                ignore_errors=True,
-            )
-        docs = _read(spark, sf_dir, "documents")
-        lex = textstats.bm25_multi_topk(
-            docs, "doc_id", "text", MAXSIM_QUERIES, k=MAXSIM_K
-        )
-        src = os.path.join(tempfile.mkdtemp(prefix="sis_bm25_rank_"), "rank")
-        lex.write.mode("overwrite").parquet(src)
-        _BM25_RANK_STAGED[key] = src
-        _note_staged_build("bm25_ranking", time.perf_counter() - _t0)
-    return spark.read.parquet(src)
+    score_micro)`` for ``MAXSIM_QUERIES`` at the gate knobs,
+    session-staged (integer micro-scores, bit-exact staged or inline).
+    Shared by the two RRF consumers."""
+    docs = _read(spark, sf_dir, "documents")
+    return textstats.bm25_multi_topk(
+        docs, "doc_id", "text", MAXSIM_QUERIES, k=MAXSIM_K
+    )
 
 
 def q_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2502,7 +2410,7 @@ SELECT query, rank, doc_id, rrf_micro FROM frk WHERE rank <= {HYBRID_K}
     )
 
 
-#: (sf_dir, documents-mtime) -> the in-core unigram EM state
+#: (documents path, its _fingerprint) -> the in-core unigram EM state
 #: (words, singles, vocab) at the gate knobs — FOUR queries
 #: (unigram_lm_vocab, unigram_token_counts, unigram_doc_tokens,
 #: tokenizer_fertility) each collected the word-frequency relation and
@@ -2511,7 +2419,7 @@ SELECT query, rank, doc_id, rrf_micro FROM frk WHERE rank <= {HYBRID_K}
 #: call), so it is memoized rather than parquet-staged. Budget-gated:
 #: past the operators' in-core budget the memo declines (returns None)
 #: and consumers fall back to the operator's own distributed path.
-_UNI_TRAINED: dict[tuple[str, float], tuple] = {}
+_UNI_TRAINED: dict[tuple[str, tuple[int, int]], tuple] = {}
 
 
 def _uni_trained(spark: SparkSession, sf_dir: str):
@@ -2521,12 +2429,12 @@ def _uni_trained(spark: SparkSession, sf_dir: str):
         word_frequencies,
     )
 
-    mtime = os.path.getmtime(_t(sf_dir, "documents"))
-    key = (sf_dir, mtime)
+    table = _t(sf_dir, "documents")
+    key = (table, _fingerprint(table))
     state = _UNI_TRAINED.get(key)
     if state is None:
         _t0 = time.perf_counter()
-        for old_key in [k for k in _UNI_TRAINED if k[0] == sf_dir]:
+        for old_key in [k for k in _UNI_TRAINED if k[0] == table]:
             _UNI_TRAINED.pop(old_key)
         budget = 1_000_000  # the operators' incore_vocab_budget default
         docs = _read(spark, sf_dir, "documents", fan_out=True)

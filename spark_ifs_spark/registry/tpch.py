@@ -1,16 +1,11 @@
 """TPC-H-shaped relational analytics over the orders/lineitem star."""
 
-import atexit
-
 from spark_ifs_spark.registry._common import *  # noqa: F401,F403
 from spark_ifs_spark.registry._common import (  # noqa: F401
     _BENFORD_PPM,
     _PROFILE_SKETCH_COLS,
     _SQL_SHINGLES,
     _SQL_WORDS,
-    _USER_STATS_STAGED,
-    _cleanup_staged_dirs,
-    _note_staged_build,
     _lr_features,
     _quantized_wide,
     _read,
@@ -984,51 +979,19 @@ GROUP BY 1, 2
 """
 
 
-#: (sf_dir, lineitem-mtime) -> staged (item_a, item_b, n_baskets)
-#: parquet path: the support>=2 part co-occurrence relation, consumed
-#: by part_pair_counts directly and by part_pair_lift filtered to its
-#: higher support floor (counts are support-independent, so the
-#: min_count=3 relation IS this one filtered) — the _minhash_pairs
-#: build-once pattern
-_PART_PAIRS_STAGED: dict[tuple[str, float], str] = {}
-
-
-@atexit.register
-def _cleanup_part_pairs_staged() -> None:
-    import shutil
-
-    for src in _PART_PAIRS_STAGED.values():
-        shutil.rmtree(os.path.dirname(src), ignore_errors=True)
-    _PART_PAIRS_STAGED.clear()
-
-
+@staged("part_pairs", "lineitem")
 def _part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The support>=2 part pair-count relation — built once per
-    (corpus, session) and staged; see ``_PART_PAIRS_STAGED``."""
-    import shutil
-    import tempfile
-
+    """The support>=2 part co-occurrence relation ``(item_a, item_b,
+    n_baskets)``, session-staged: part_pair_counts reads it directly and
+    part_pair_lift filtered to its higher support floor (counts are
+    support-independent, so the min_count=3 relation IS this one
+    filtered)."""
     from spark_ifs_spark.operators import affinity
 
-    mtime = os.path.getmtime(_t(sf_dir, "lineitem"))
-    key = (sf_dir, mtime)
-    src = _PART_PAIRS_STAGED.get(key)
-    if src is None or not os.path.isdir(src):
-        _t0 = time.perf_counter()
-        for old_key in [k for k in _PART_PAIRS_STAGED if k[0] == sf_dir]:
-            shutil.rmtree(
-                os.path.dirname(_PART_PAIRS_STAGED.pop(old_key)),
-                ignore_errors=True,
-            )
-        li = _read(spark, sf_dir, "lineitem")
-        pairs = affinity.co_occurrence_pairs(
-            li, "l_orderkey", "l_partkey", min_count=2
-        )
-        src = os.path.join(tempfile.mkdtemp(prefix="sis_part_pairs_"), "pairs")
-        pairs.write.mode("overwrite").parquet(src)
-        _PART_PAIRS_STAGED[key] = src
-        _note_staged_build("part_pairs", time.perf_counter() - _t0)
-    return spark.read.parquet(src)
+    li = _read(spark, sf_dir, "lineitem")
+    return affinity.co_occurrence_pairs(
+        li, "l_orderkey", "l_partkey", min_count=2
+    )
 
 
 def q_part_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1069,7 +1032,7 @@ def q_boilerplate_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _read(spark, sf_dir, "documents")
     out = shingle_doc_freq(
-        docs, "doc_id", "text", n=3, sh=_shingles(spark, sf_dir)
+        docs, "doc_id", "text", n=NGRAM_N, sh=_shingles(spark, sf_dir)
     )
     return (
         out.filter(F.col("frac") >= BOILER_MIN_FRAC)

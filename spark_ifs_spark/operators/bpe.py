@@ -21,7 +21,7 @@ Spark-first shape — the corpus is touched ONCE:
    that rewrites the symbol arrays — zero extra shuffles.
 
 Cost-based strategy, same house pattern as the selectors: when the
-vocabulary fits ``incore_vocab_budget`` the word table is collected
+vocabulary fits ``unigram.INCORE_VOCAB_BUDGET`` the word table is collected
 and the merge loop runs as the classic driver dict algorithm (exact
 reference semantics, no per-round job overhead); past the budget the
 distributed per-round plan above is the default. Both paths are pinned
@@ -190,7 +190,6 @@ def bpe_train(
     df: DataFrame,
     text_col: str,
     n_merges: int,
-    incore_vocab_budget: int = 1_000_000,
 ) -> DataFrame:
     """``(rank, x, y, n)`` — the first ``n_merges`` BPE merges learned
     from the corpus, in merge order. ``n`` is the weighted pair count
@@ -198,16 +197,19 @@ def bpe_train(
     (deterministic across engines and cluster sizes).
 
     May return fewer than ``n_merges`` rows if the vocabulary runs out
-    of adjacent pairs. Set ``incore_vocab_budget=0`` to force the
-    distributed path.
+    of adjacent pairs. The in-core gate is the tokenizers' shared
+    ``unigram.INCORE_VOCAB_BUDGET`` (0 forces the distributed path).
     """
+    from spark_ifs_spark.operators import unigram
+
     if n_merges <= 0:
         raise ValueError("n_merges must be > 0")
     spark = df.sparkSession
     wf = word_frequencies(df, text_col)
-    if incore_vocab_budget > 0:
-        head = wf.limit(incore_vocab_budget + 1).collect()
-        if len(head) <= incore_vocab_budget:
+    budget = unigram.INCORE_VOCAB_BUDGET
+    if budget > 0:
+        head = wf.limit(budget + 1).collect()
+        if len(head) <= budget:
             merges = _bpe_incore([(r["w"], r["c"]) for r in head], n_merges)
             return spark.createDataFrame(merges, MERGES_SCHEMA)
     return spark.createDataFrame(_bpe_distributed(wf, n_merges), MERGES_SCHEMA)

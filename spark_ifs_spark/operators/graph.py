@@ -49,6 +49,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+#: in-core gate of :func:`connected_components`, in edges: at or under
+#: it the pair graph is collected and solved with driver union-find;
+#: past it (or at 0) the distributed contraction loop runs.
+INCORE_EDGE_BUDGET = 1_000_000
+
+
 def _union_find_incore(rows) -> dict[int, int]:
     """Driver-side union-find with min-id roots (path-halving find)."""
     parent: dict[int, int] = {}
@@ -73,21 +79,20 @@ def connected_components(
     dst: str = "id_b",
     max_iter: int = 25,
     work_dir: str | None = None,
-    incore_edge_budget: int = 1_000_000,
 ) -> DataFrame:
     """``(id, component)`` for every node appearing in ``edges``;
     ``component`` is the minimum node id of the connected component.
 
     Cost-based strategy, same house pattern as the selectors'
-    ``incore_cell_budget``: a near-dup pair graph is usually *tiny*
+    ``INCORE_CELL_BUDGET``: a near-dup pair graph is usually *tiny*
     relative to the corpus (pairs ≪ documents), and the distributed
     loop pays ~10 Spark jobs of fixed overhead, so when the edge count
-    is within ``incore_edge_budget`` the pairs are collected and solved
+    is within :data:`INCORE_EDGE_BUDGET` the pairs are collected and solved
     with driver union-find (exact, O(E α(E))). Past the budget the
     distributed contraction loop below is the default — volume-validated
     at 1M edges / 2M nodes in SCALE.md; both paths are pinned to agree
-    in ``tests/test_graph.py``. Set ``incore_edge_budget=0`` to force
-    the distributed path.
+    in ``tests/test_graph.py``. ``INCORE_EDGE_BUDGET = 0`` forces the
+    distributed path.
 
     Distributed path converges in O(log n) outer rounds (edge
     contraction shrinks the active graph geometrically); raises if
@@ -106,12 +111,12 @@ def connected_components(
         F.col(src).cast("long").alias("a"),
         F.col(dst).cast("long").alias("b"),
     ).where(F.col("a") != F.col("b"))
-    if incore_edge_budget > 0:
+    if INCORE_EDGE_BUDGET > 0:
         # one job decides the path AND fetches the edges when small:
         # collect at most budget+1 rows — a full count would compute
         # the (possibly expensive) upstream pair graph twice
-        head = e0.limit(incore_edge_budget + 1).collect()
-        if len(head) <= incore_edge_budget:
+        head = e0.limit(INCORE_EDGE_BUDGET + 1).collect()
+        if len(head) <= INCORE_EDGE_BUDGET:
             # reset the accounting attribute so a reader after an
             # in-core call never sees a PREVIOUS distributed call's
             # stats (zeros = "no distributed rounds ran this call")

@@ -155,14 +155,6 @@ class ColumnScore(ABC):
         per already-selected feature s (empty on round 1) — MI(cand, s)
         or I((cand, s); label) per :attr:`redundancy_stat`."""
 
-    def sql_expr(self) -> str | None:
-        """Optional Spark-SQL expression over columns ``relevance`` (double)
-        and ``redundancy`` (mean MI vs selected, NULL on round 1). When
-        provided, scoring stays JVM-side; otherwise the engine falls back
-        to driver-side :meth:`score` over the (≤ num_features) collected
-        rows."""
-        return None
-
 
 class MrmrColumnScore(ColumnScore):
     """mRMR: relevance − mean(redundancy) (``ColumnWiseScore.scala:41-52``)."""
@@ -173,9 +165,6 @@ class MrmrColumnScore(ColumnScore):
         if not redundancies:
             return relevance
         return relevance - sum(redundancies) / len(redundancies)
-
-    def sql_expr(self) -> str:
-        return "relevance - coalesce(redundancy, 0.0d)"
 
 
 class MiqColumnScore(ColumnScore):
@@ -191,12 +180,6 @@ class MiqColumnScore(ColumnScore):
         if not redundancies:
             return relevance
         return relevance / max(sum(redundancies) / len(redundancies), 1e-12)
-
-    def sql_expr(self) -> str:
-        return (
-            "CASE WHEN redundancy IS NULL THEN relevance "
-            "ELSE relevance / greatest(redundancy, 1e-12d) END"
-        )
 
 
 class JmiColumnScore(ColumnScore):

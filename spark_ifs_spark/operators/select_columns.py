@@ -48,6 +48,15 @@ from spark_ifs_spark.functions.mi import (
 )
 from spark_ifs_spark.operators.scores import ColumnScore, MrmrColumnScore
 
+#: The selectors' in-core gate, in matrix cells: ``select_columns``
+#: (rows × (C+1)), ``select_rows`` (rows × instances) and
+#: ``select_rows_sparse`` (stored nonzeros) collect the matrix and run
+#: the greedy recurrence on the driver at or under it (~40 MB of
+#: doubles — the small-side regime where per-round jobs are pure
+#: overhead), and run the per-round distributed plan past it. All three
+#: read it at call time, so rebinding this one name moves every gate.
+INCORE_CELL_BUDGET = 5_000_000
+
 
 def column_marginals(
     df: DataFrame, label_col: str, feature_cols: Sequence[str]
@@ -275,15 +284,9 @@ def _greedy_incore(
     score: ColumnScore,
     max_categories: int = MAX_CATEGORIES,
 ) -> list[tuple[int, float]]:
-    """In-core strategy: Arrow-collect the (budget-gated, few-MB) matrix
-    and run the SAME greedy recurrence on numpy — relevance once,
-    redundancy incrementally vs the newest winner, lowest-index
-    tie-break. (k+1)·C MI evaluations total, zero per-round Spark jobs.
-    MI via :func:`~spark_ifs_spark.operators.scores.mi_codes` — the
-    pre-factorized arithmetic tail of ``mi_vec`` (columns factorized
-    once up front; same natural-log, skip-empty-cell semantics) — which
-    keeps this path bit-identical to the alternate encoding's
-    executor-side math.
+    """In-core strategy: Arrow-collect the (budget-gated, few-MB) matrix,
+    factorize every column once and run :func:`_greedy_codes` on the
+    driver — (k+1)·C MI evaluations total, zero per-round Spark jobs.
 
     Cardinality-guard asymmetry (intentional, documented): this path
     counts distinct values EXACTLY from the factorized codes and raises
@@ -301,19 +304,13 @@ def _greedy_incore(
     counting basis differs."""
     import numpy as np
 
-    from spark_ifs_spark.operators.scores import factorize, mi_codes
+    from spark_ifs_spark.operators.scores import factorize
 
     pdf = wide.select(
         F.col(label_col).cast("double"),
         *[F.col(c).cast("double") for c in feature_cols],
     ).toPandas()
-    n = len(pdf)
-    lab = pdf.iloc[:, 0].to_numpy(dtype=np.float64)
-    all_idx = list(range(len(feature_cols)))
-    # factorize every column once — (k+1)·C MI calls reuse the codes
-    # instead of re-sorting 2 columns per call (mi_vec's np.unique was
-    # ~80% of in-core time at 10k×50 k=10)
-    lab_codes = factorize(lab)
+    lab_codes = factorize(pdf.iloc[:, 0].to_numpy(dtype=np.float64))
     codes = [
         factorize(pdf.iloc[:, i + 1].to_numpy(dtype=np.float64))
         for i in range(len(feature_cols))
@@ -328,7 +325,29 @@ def _greedy_incore(
                 f"column {name!r} has {k} distinct values, exceeding the "
                 f"{max_categories} category limit"
             )
+    return _greedy_codes(lab_codes, codes, len(pdf), num, score)
 
+
+def _greedy_codes(
+    lab_codes: tuple,
+    codes: list[tuple],
+    n: int,
+    num: int,
+    score: ColumnScore,
+) -> list[tuple[int, float]]:
+    """The in-core greedy run of both encodings: the recurrence over
+    ``(codes, cardinality)`` pairs (one per feature, from
+    :func:`~spark_ifs_spark.operators.scores.factorize`) with MI via
+    :func:`~spark_ifs_spark.operators.scores.mi_codes` — the
+    pre-factorized arithmetic tail of ``mi_vec`` (same natural-log,
+    skip-empty-cell semantics, candidate first), so every in-core path
+    stays bit-identical to the executor-side ``mi_vec`` math.
+    Factorizing once instead of inside every pairwise MI call matters:
+    ``mi_vec``'s two ``np.unique`` sorts were ~80% of in-core time at
+    10k×50 k=10. Returns ``[(feature_position, score)]``."""
+    from spark_ifs_spark.operators.scores import mi_codes
+
+    all_idx = list(range(len(codes)))
     relevance = {
         c: mi_codes(codes[c][0], lab_codes[0], lab_codes[1], n)
         for c in all_idx
@@ -355,7 +374,7 @@ def _greedy_incore(
             c: mi_codes(codes[c][0], codes[newest][0], codes[newest][1], n)
             for c in remaining
         }
-    return _greedy_recurrence(all_idx, num, score, relevance, mi_newest)
+    return _greedy_scored(all_idx, num, score, relevance, mi_newest)
 
 
 def _better(a: tuple[int, float], b: tuple[int, float], higher: bool) -> bool:
@@ -368,17 +387,22 @@ def _better(a: tuple[int, float], b: tuple[int, float], higher: bool) -> bool:
 def _greedy_recurrence(
     all_idx: list[int],
     num: int,
-    score: ColumnScore,
-    relevance: dict[int, float],
+    higher: bool,
+    score_of,
     mi_newest,
 ) -> list[tuple[int, float]]:
-    """THE greedy mRMR recurrence, shared by every physical strategy:
-    relevance fixed, redundancy appended only vs the newest winner,
-    lowest-index tie-break. ``mi_newest(remaining, newest)`` supplies the
-    per-round MI terms — a numpy closure in-core, a distributed
-    aggregation in the per-round plan — so strategy choice can never
-    drift the selection semantics."""
-    reds: dict[int, list[float]] = {c: [] for c in all_idx}
+    """THE greedy forward recurrence — the only driver-side argmax loop,
+    shared by every in-core strategy of both encodings and by the
+    conventional distributed plan: per-round terms appended only vs the
+    newest winner, lowest-index tie-break.
+
+    ``mi_newest(remaining, newest)`` supplies each remaining candidate's
+    term for the newest winner — a numpy closure in-core, a distributed
+    aggregation in the per-round plan. ``score_of(c, terms)`` is the
+    scoring hook: it rates candidate ``c`` from its terms (one per
+    winner so far, in selection order). Strategy choice supplies only
+    these two hooks, so it can never drift the selection semantics."""
+    terms: dict[int, list] = {c: [] for c in all_idx}
     selected: list[tuple[int, float]] = []
     sel_set: set[int] = set()
     for rnd in range(num):
@@ -386,18 +410,36 @@ def _greedy_recurrence(
             newest = selected[-1][0]
             remaining = [c for c in all_idx if c not in sel_set]
             for c, v in mi_newest(remaining, newest).items():
-                reds[c].append(v)
+                terms[c].append(v)
         best: tuple[int, float] | None = None
         for c in all_idx:
             if c in sel_set:
                 continue
-            s = score.score(relevance.get(c, 0.0), reds[c])
-            if best is None or _better(best, (c, s), score.higher_is_better):
+            s = score_of(c, terms[c])
+            if best is None or _better(best, (c, s), higher):
                 best = (c, s)
         assert best is not None
         selected.append(best)
         sel_set.add(best[0])
     return selected
+
+
+def _greedy_scored(
+    all_idx: list[int],
+    num: int,
+    score: ColumnScore,
+    relevance: dict[int, float],
+    mi_newest,
+) -> list[tuple[int, float]]:
+    """:func:`_greedy_recurrence` with a :class:`ColumnScore` as the
+    scoring hook: relevance fixed, the terms are its redundancies."""
+    return _greedy_recurrence(
+        all_idx,
+        num,
+        score.higher_is_better,
+        lambda c, reds: score.score(relevance.get(c, 0.0), reds),
+        mi_newest,
+    )
 
 
 def select_columns(
@@ -408,7 +450,6 @@ def select_columns(
     score: ColumnScore | None = None,
     batch_size: int = 1000,
     max_categories: int = MAX_CATEGORIES,
-    incore_cell_budget: int = 5_000_000,
 ) -> list[tuple[int, float]]:
     """Greedily select ``min(num, len(feature_cols))`` features.
 
@@ -421,7 +462,7 @@ def select_columns(
 
     **Cost-based physical strategy.** The greedy loop is k+1 sequential
     Spark jobs; when the WHOLE matrix is small (``rows × (C+1) ≤
-    incore_cell_budget`` cells ≈ tens of MB — the broadcast-join-style
+    INCORE_CELL_BUDGET`` cells ≈ tens of MB — the broadcast-join-style
     small-side regime) distributed execution is pure scheduling
     overhead, so the matrix is Arrow-collected once and the identical
     greedy recurrence runs on numpy (:func:`_greedy_incore`). Past the
@@ -442,7 +483,7 @@ def select_columns(
         n_rows = wide.count()
 
         C = len(feature_cols)
-        if n_rows * (C + 1) <= incore_cell_budget:
+        if n_rows * (C + 1) <= INCORE_CELL_BUDGET:
             # gate BEFORE the loop-tuned re-partitioning below: the
             # in-core path runs one toPandas, so the coalesce's extra
             # materialization pass would be pure waste. The cardinality
@@ -508,7 +549,7 @@ def select_columns(
             mi_newest = lambda remaining, newest: _mi_all(  # noqa: E731
                 remaining, newest, feature_cols[newest]
             )
-        return _greedy_recurrence(all_idx, num, score, relevance, mi_newest)
+        return _greedy_scored(all_idx, num, score, relevance, mi_newest)
     finally:
         if marginals is not None:
             marginals.unpersist()

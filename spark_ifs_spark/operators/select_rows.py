@@ -5,29 +5,40 @@ Functional parity with ``IterativeFeatureSelection.selectRows``
 each DataFrame row is one feature's full instance-vector; the instance
 labels arrive as a driver-side array and are broadcast once (``IFS:158``).
 
-Architecture differences from the reference (all scale wins, see SURVEY §4
-"known perf hazards"):
+Three selection loops serve every input, picked by the in-core gate
+(``select_columns.INCORE_CELL_BUDGET``) and the score:
 
-- **1 job per round, not 3.** The reference runs ``takeOrdered`` + a
-  winner-fetch ``count`` + ``first`` (``IFS:172-178``); we fold the winner's
-  vector into the top-1 row itself. The top-1 is a ``max(struct(score,
-  -id, features))`` hash aggregate — a partial+final aggregation with NO
-  sort and NO range-partitioner sampling pass, so the per-round cost is
-  one scan regardless of candidate count (an ``orderBy().limit(1)`` plan
-  would sample + range-shuffle millions of candidate rows at scale).
-- **Incremental redundancy state.** The reference re-broadcasts ALL
-  selected vectors and recomputes every MI(cand, s) each round
-  (``IFS:163,167``). mRMR's redundancy term is a running mean, so we keep a
-  persisted ``red_sum`` column and each round add only MI(cand, newest
-  winner): O(1) vector broadcasts and MI evaluations per candidate per
-  round instead of O(k). (Only possible for scores whose redundancy is
-  incremental — :class:`~spark_ifs_spark.operators.scores.MrmrRowScore` is;
-  generic :class:`RowScore` plug-ins take the non-incremental path.)
-- **Relevance computed once.** MI(cand, label) never changes across
-  rounds; the reference recomputes it every round inside ``RowMRMR``
-  (``RowWiseScore.scala:55``).
-- **Persisted loop state.** The reference never caches the alternate-path
-  input, recomputing the scan+assembly lineage for every action (§3.2).
+1. **In-core, any score** — at or under the gate the rows are collected
+   once and ``select_columns``' ``_greedy_recurrence`` runs on the
+   driver with a per-layout MI provider: dense rows are factorized once
+   and share ``_greedy_codes`` with the conventional in-core path,
+   sparse rows use :func:`mi_vec_sparse`. Exact :class:`MrmrRowScore`
+   runs as ``MrmrColumnScore`` arithmetic — bit-identical, since its
+   running ``red_sum += mi`` and ``sum(reds)`` add the same terms in the
+   same order. Generic :class:`RowScore` plug-ins are the recurrence's
+   scoring hook, their terms being the winners' vectors.
+2. **Distributed mRMR, dense and sparse** (:func:`_select_rows_state`) —
+   one loop over a persisted ``(id, vectors…, relevance, red_sum)``
+   state, parametrized by the vector columns and the MI kernel:
+
+   - **One aggregate per round, not three actions.** The reference runs
+     ``takeOrdered`` + a winner-fetch ``count`` + ``first``
+     (``IFS:172-178``); :func:`_argbest` folds the winner's vectors into
+     a ``max(struct(score, -id, vectors…))`` hash aggregate — no sort,
+     no range-partitioner sampling pass. One ``count()`` materializes
+     the next state.
+   - **Incremental redundancy.** The reference re-broadcasts ALL
+     selected vectors and recomputes every MI(cand, s) each round
+     (``IFS:163,167``); ``red_sum`` adds only MI(cand, newest winner):
+     O(1) broadcasts and MI evaluations per candidate per round, not
+     O(k).
+   - **Relevance once and persisted state.** MI(cand, label) is computed
+     once (the reference recomputes it every round, ``RowWiseScore.scala:55``)
+     and the loop input is cached (the reference recomputes its lineage
+     for every action, §3.2).
+3. **Distributed plug-ins** (:func:`_select_rows_generic`) — a generic
+   :class:`RowScore` re-scores every candidate against the full selected
+   set each round (its redundancy need not be incremental).
 
 MI per candidate runs in an Arrow-batched pandas UDF (numpy ``bincount``
 contingency — one Python call per ~10k-row batch, not per row). This is
@@ -50,7 +61,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
-from spark_ifs_spark.operators.scores import MrmrRowScore, RowScore, mi_vec, mi_vec_sparse
+from spark_ifs_spark.operators import select_columns as _columns
+from spark_ifs_spark.operators.scores import (
+    MrmrColumnScore,
+    MrmrRowScore,
+    RowScore,
+    mi_vec,
+    mi_vec_sparse,
+)
+from spark_ifs_spark.operators.select_columns import (
+    _greedy_codes,
+    _greedy_recurrence,
+    _greedy_scored,
+)
+
+#: loop-state vector columns and their numpy dtypes, per row layout
+_DENSE = {"features": np.float64}
+_SPARSE = {"indices": np.int64, "values": np.float64}
 
 
 def _snapshot_state(state: DataFrame, path: str) -> DataFrame:
@@ -70,33 +97,42 @@ def _snapshot_state(state: DataFrame, path: str) -> DataFrame:
     return fresh
 
 
-def _argbest(scored: DataFrame, higher: bool):
-    """Collect the single best ``(id, score, features)`` row as one
+def _argbest(scored: DataFrame, higher: bool, cols: Sequence[str] = ("features",)):
+    """Collect the single best ``(id, score, [cols…])`` row as one
     partial+final hash aggregate (no sort, no sampling pass).
 
     Struct comparison is lexicographic, so ``max(struct(score, -id, …))``
     maximizes score with ties going to the LOWEST id (deterministic —
     documented deviation from the reference's driver-hash-order ties);
-    ``min(struct(score, id, …))`` is the minimizing mirror. ``features``
-    rides along in the struct and is never compared because ids are
-    unique.
+    ``min(struct(score, id, …))`` is the minimizing mirror. The vector
+    ``cols`` ride along in the struct and are never compared because ids
+    are unique.
     """
     if higher:
-        packed = F.max(F.struct(F.col("score"), (-F.col("id")).alias("nid"), F.col("features")))
-        w = scored.agg(packed.alias("w")).select("w.*").first()
-        return -float(w["nid"]), float(w["score"]), w["features"]
-    packed = F.min(F.struct(F.col("score"), F.col("id"), F.col("features")))
+        key = (-F.col("id")).alias("nid")
+        agg = F.max
+    else:
+        key = F.col("id")
+        agg = F.min
+    packed = agg(F.struct(F.col("score"), key, *[F.col(c) for c in cols]))
     w = scored.agg(packed.alias("w")).select("w.*").first()
-    return float(w["id"]), float(w["score"]), w["features"]
+    win_id = -float(w["nid"]) if higher else float(w["id"])
+    return win_id, float(w["score"]), [w[c] for c in cols]
 
 
-def _mi_against_udf(other: np.ndarray):
-    """pandas UDF computing MI(features, broadcast vector) per row."""
+def _mi_udf(kernel, other: Sequence[np.ndarray]):
+    """pandas UDF computing ``kernel(*row_vectors, *other)`` per row —
+    MI of each candidate (first) against one broadcast vector (the label
+    or the newest winner) in the same layout."""
 
-    def _mi(batch: pd.Series) -> pd.Series:
-        return batch.map(lambda v: mi_vec(np.asarray(v, dtype=np.float64), other))
+    def _mi(*cols: pd.Series) -> pd.Series:
+        return pd.Series([kernel(*row, *other) for row in zip(*cols)], dtype=np.float64)
 
     return F.pandas_udf(_mi, DoubleType())
+
+
+def _mi_dense(v, other: np.ndarray) -> float:
+    return mi_vec(np.asarray(v, dtype=np.float64), other)
 
 
 def select_rows(
@@ -106,7 +142,6 @@ def select_rows(
     id_col: str = "id",
     features_col: str = "features",
     score: RowScore | None = None,
-    incore_cell_budget: int = 5_000_000,
     snapshot_every: int | None = None,
     work_dir: str | None = None,
 ) -> list[tuple[float, float]]:
@@ -117,15 +152,16 @@ def select_rows(
     through ``LabeledPoint.label: Double`` (``IFS:149,160``).
 
     Cost-based strategy mirror of ``select_columns``: when the whole
-    matrix is ``≤ incore_cell_budget`` cells (tens of MB — small-side
-    regime) it is collected once and the same greedy recurrence runs on
-    numpy; past the budget the per-round distributed plan below runs.
+    matrix is ``≤ INCORE_CELL_BUDGET`` cells (tens of MB — small-side
+    regime) it is collected once and the shared greedy recurrence runs
+    on numpy; past the budget the per-round distributed plan runs
+    (module docstring).
 
     ``snapshot_every=N`` bounds recovery cost for deep (large-k) runs:
-    every N rounds the loop state takes a parquet round-trip
+    every N rounds the distributed loop state takes a parquet round-trip
     (:func:`_snapshot_state`), so a lost executor replays at most N
     rounds of lineage instead of all of them. Rounds between snapshots
-    stay one job each (plan-tested). Snapshots land in ``work_dir`` (a
+    keep the plain round shape. Snapshots land in ``work_dir`` (a
     temp dir by default, removed when the loop returns).
     """
     if num <= 0:
@@ -145,78 +181,17 @@ def select_rows(
     if n_rows != n_distinct:
         raise ValueError("duplicate feature ids in alternate-encoding input")
     num = min(num, int(n_rows))
-
-    if int(n_rows) * len(labels_row) <= incore_cell_budget:
-        return _select_rows_incore(base, num, label_arr, score)
-
     # exact type, not isinstance: a subclass overriding score() must NOT
     # be silently replaced by the hard-coded incremental mRMR recurrence
     incremental = type(score) is MrmrRowScore
+
+    if int(n_rows) * len(labels_row) <= _columns.INCORE_CELL_BUDGET:
+        return _select_rows_incore(base, num, label_arr, score, incremental)
     if not incremental:
         return _select_rows_generic(base, num, label_arr, score)
-
-    # state: (id, features, relevance, red_sum); relevance fixed, red_sum
-    # grows by MI(cand, newest winner) each round.
-    state = base.withColumn(
-        "relevance", _mi_against_udf(label_arr)(F.col("features"))
-    ).withColumn("red_sum", F.lit(0.0))
-    state = state.persist(StorageLevel.MEMORY_AND_DISK)
-
-    selected: list[tuple[float, float]] = []
-    snap_base = None
-    try:
-        for rnd in range(num):
-            k = len(selected)
-            score_col = F.col("relevance") - (
-                F.col("red_sum") / F.lit(k) if k > 0 else F.lit(0.0)
-            )
-            win_id, win_score, win_features = _argbest(
-                state.withColumn("score", score_col), higher=True
-            )
-            selected.append((win_id, win_score))
-            if rnd == num - 1:
-                break
-            win_vec = np.asarray(win_features, dtype=np.float64)
-            new_state = (
-                state.filter(F.col("id") != win_id)
-                .withColumn(
-                    "red_sum",
-                    F.col("red_sum") + _mi_against_udf(win_vec)(F.col("features")),
-                )
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            new_state.count()  # materialize before dropping the parent
-            state.unpersist()
-            state = new_state
-            if snapshot_every and (rnd + 1) % snapshot_every == 0:
-                if snap_base is None:
-                    snap_base = work_dir or tempfile.mkdtemp(prefix="spark_ifs_sel_")
-                state = _snapshot_state(state, f"{snap_base}/r{rnd + 1}")
-        return selected
-    finally:
-        state.unpersist()
-        if snap_base is not None and work_dir is None:
-            shutil.rmtree(snap_base, ignore_errors=True)
-
-
-def _mi_sparse_against_udf(n: int, other_idx: np.ndarray, other_val: np.ndarray):
-    """pandas UDF computing MI(sparse row, broadcast sparse vector)."""
-
-    def _mi(idx_s: pd.Series, val_s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                mi_vec_sparse(
-                    n,
-                    np.asarray(i, dtype=np.int64),
-                    np.asarray(v, dtype=np.float64),
-                    other_idx,
-                    other_val,
-                )
-                for i, v in zip(idx_s, val_s)
-            ]
-        )
-
-    return F.pandas_udf(_mi, DoubleType())
+    return _select_rows_state(
+        base, num, _DENSE, _mi_dense, [label_arr], snapshot_every, work_dir
+    )
 
 
 def select_rows_sparse(
@@ -227,17 +202,16 @@ def select_rows_sparse(
     n_col: str = "n",
     indices_col: str = "indices",
     values_col: str = "values",
-    incore_cell_budget: int = 5_000_000,
     snapshot_every: int | None = None,
     work_dir: str | None = None,
 ) -> list[tuple[float, float]]:
     """:func:`select_rows` for SPARSE feature rows — identical selections
     (same :func:`mi_vec_sparse` ≡ :func:`mi_vec` math, same lowest-id
-    tie-break, same incremental recurrence), but vectors stay in
-    (sorted-indices, nonzero-values) form end-to-end: never densified in
-    the DataFrame, in Arrow transfer, or in the kernel. Each redundancy
-    round moves and scores O(nnz) per candidate instead of O(n) — at a
-    1% density, 100× less shuffle/broadcast volume than the dense path.
+    tie-break, same recurrence), but vectors stay in (sorted-indices,
+    nonzero-values) form end-to-end: never densified in the DataFrame,
+    in Arrow transfer, or in the kernel. Each redundancy round moves and
+    scores O(nnz) per candidate instead of O(n) — at a 1% density, 100×
+    less shuffle/broadcast volume than the dense path.
 
     Input columns: ``id_col`` (unique), ``n_col`` (common vector length),
     ``indices_col``/``values_col`` (ascending indices, nonzero values —
@@ -246,7 +220,7 @@ def select_rows_sparse(
     receive dense arrays by contract, so they go through
     :func:`select_rows`.
 
-    In-core gate mirrors :func:`select_rows` but budgets on STORED cells
+    The in-core gate is :func:`select_rows`' but budgets on STORED cells
     (``sum(nnz)``), the actual memory footprint of the sparse matrix.
     """
     if num <= 0:
@@ -281,46 +255,98 @@ def select_rows_sparse(
         )
     num = min(num, int(agg["rows"]))
 
-    if int(agg["nnz"]) <= incore_cell_budget:
-        rows = [
-            (
-                float(r["id"]),
-                np.asarray(r["indices"], dtype=np.int64),
-                np.asarray(r["values"], dtype=np.float64),
-            )
-            for r in base.collect()
-        ]
-        rows.sort(key=lambda t: t[0])
-        relevance = {rid: mi_vec_sparse(n, i, v, lab_idx, lab_val) for rid, i, v in rows}
-        red_sum: dict[float, float] = {rid: 0.0 for rid, _, _ in rows}
-        triplets = {rid: (i, v) for rid, i, v in rows}
-        selected: list[tuple[float, float]] = []
-        sel_set: set[float] = set()
-        for _ in range(num):
-            best: tuple[float, float] | None = None
-            for rid, _, _ in rows:
-                if rid in sel_set:
-                    continue
-                k = len(selected)
-                s = relevance[rid] - (red_sum[rid] / k if k else 0.0)
-                if best is None or s > best[1] or (s == best[1] and rid < best[0]):
-                    best = (rid, s)
-            assert best is not None
-            selected.append(best)
-            sel_set.add(best[0])
-            wi, wv = triplets[best[0]]
-            for rid, i, v in rows:
-                if rid not in sel_set:
-                    red_sum[rid] += mi_vec_sparse(n, i, v, wi, wv)
-        return selected
+    def kernel(i, v, other_idx, other_val) -> float:
+        return mi_vec_sparse(n, i, v, other_idx, other_val)
 
+    if int(agg["nnz"]) <= _columns.INCORE_CELL_BUDGET:
+        ids, rows = _collect_sorted(base, _SPARSE)
+        relevance = {c: kernel(*rows[c], lab_idx, lab_val) for c in range(len(rows))}
+        mi_newest = lambda remaining, newest: {  # noqa: E731
+            c: kernel(*rows[c], *rows[newest]) for c in remaining
+        }
+        sel = _greedy_scored(
+            list(range(len(rows))), num, MrmrColumnScore(), relevance, mi_newest
+        )
+        return [(ids[c], s) for c, s in sel]
+
+    return _select_rows_state(
+        base, num, _SPARSE, kernel, [lab_idx, lab_val], snapshot_every, work_dir
+    )
+
+
+def _collect_sorted(base: DataFrame, cols: dict) -> tuple[list[float], list[list]]:
+    """Collect the feature rows in ascending id order — ids, and per row
+    its vector columns as numpy arrays. Candidate position = id rank, so
+    the recurrence's lowest-index tie-break is the lowest-id one."""
+    got = sorted(base.select("id", *cols).collect(), key=lambda r: r["id"])
+    return [float(r["id"]) for r in got], [
+        [np.asarray(r[c], dtype=t) for c, t in cols.items()] for r in got
+    ]
+
+
+def _select_rows_incore(
+    base: DataFrame,
+    num: int,
+    label_arr: np.ndarray,
+    score: RowScore,
+    incremental: bool,
+) -> list[tuple[float, float]]:
+    """In-core strategy for dense rows: collect the (budget-gated) rows
+    once and run the shared greedy recurrence. Exact :class:`MrmrRowScore`
+    runs as ``MrmrColumnScore`` over factorized-once codes (the
+    conventional in-core kernel); any other :class:`RowScore` is the
+    scoring hook itself, called with the winners' vectors in selection
+    order — the same ``score.score`` calls as the distributed plug-in
+    loop."""
+    from spark_ifs_spark.operators.scores import factorize
+
+    ids, rows = _collect_sorted(base, _DENSE)
+    vecs = [v for (v,) in rows]
+    if incremental:
+        for v in vecs:
+            if v.shape != label_arr.shape:
+                raise ValueError(f"vector length mismatch: {v.shape} vs {label_arr.shape}")
+        codes = [factorize(v) for v in vecs]
+        sel = _greedy_codes(
+            factorize(label_arr), codes, label_arr.size, num, MrmrColumnScore()
+        )
+    else:
+        sel = _greedy_recurrence(
+            list(range(len(vecs))),
+            num,
+            score.higher_is_better,
+            lambda c, winners: score.score(vecs[c], label_arr, winners),
+            lambda remaining, newest: dict.fromkeys(remaining, vecs[newest]),
+        )
+    return [(ids[c], s) for c, s in sel]
+
+
+def _select_rows_state(
+    base: DataFrame,
+    num: int,
+    cols: dict,
+    kernel,
+    label_vec: list[np.ndarray],
+    snapshot_every: int | None,
+    work_dir: str | None,
+) -> list[tuple[float, float]]:
+    """The distributed incremental mRMR loop for dense AND sparse rows.
+
+    ``cols`` names the state's vector columns (with their numpy dtypes)
+    and ``kernel(*candidate_vectors, *other_vectors)`` is the MI in that
+    layout; ``label_vec`` is the label in the same layout. The state is
+    ``(id, cols…, relevance, red_sum)``: relevance fixed, ``red_sum``
+    growing by MI(cand, newest winner) each round. Per round: one
+    :func:`_argbest` aggregate that also fetches the winner's vectors,
+    then one ``count()`` materializing the next state, and every
+    ``snapshot_every`` rounds a parquet round-trip."""
+    vec_cols = [F.col(c) for c in cols]
     state = base.withColumn(
-        "relevance",
-        _mi_sparse_against_udf(n, lab_idx, lab_val)(F.col("indices"), F.col("values")),
+        "relevance", _mi_udf(kernel, label_vec)(*vec_cols)
     ).withColumn("red_sum", F.lit(0.0))
     state = state.persist(StorageLevel.MEMORY_AND_DISK)
 
-    selected = []
+    selected: list[tuple[float, float]] = []
     snap_base = None
     try:
         for rnd in range(num):
@@ -328,32 +354,18 @@ def select_rows_sparse(
             score_col = F.col("relevance") - (
                 F.col("red_sum") / F.lit(k) if k > 0 else F.lit(0.0)
             )
-            packed = F.max(
-                F.struct(
-                    F.col("score"),
-                    (-F.col("id")).alias("nid"),
-                    F.col("indices"),
-                    F.col("values"),
-                )
+            win_id, win_score, win_vals = _argbest(
+                state.withColumn("score", score_col), True, list(cols)
             )
-            w = (
-                state.withColumn("score", score_col)
-                .agg(packed.alias("w"))
-                .select("w.*")
-                .first()
-            )
-            win_id, win_score = -float(w["nid"]), float(w["score"])
             selected.append((win_id, win_score))
             if rnd == num - 1:
                 break
-            wi = np.asarray(w["indices"], dtype=np.int64)
-            wv = np.asarray(w["values"], dtype=np.float64)
+            win_vec = [np.asarray(w, dtype=t) for w, t in zip(win_vals, cols.values())]
             new_state = (
                 state.filter(F.col("id") != win_id)
                 .withColumn(
                     "red_sum",
-                    F.col("red_sum")
-                    + _mi_sparse_against_udf(n, wi, wv)(F.col("indices"), F.col("values")),
+                    F.col("red_sum") + _mi_udf(kernel, win_vec)(*vec_cols),
                 )
                 .persist(StorageLevel.MEMORY_AND_DISK)
             )
@@ -369,54 +381,6 @@ def select_rows_sparse(
         state.unpersist()
         if snap_base is not None and work_dir is None:
             shutil.rmtree(snap_base, ignore_errors=True)
-
-
-def _select_rows_incore(
-    base: DataFrame, num: int, label_arr: np.ndarray, score: RowScore
-) -> list[tuple[float, float]]:
-    """In-core strategy: collect the (budget-gated) feature rows once and
-    run the greedy recurrence on numpy — relevance cached, redundancy
-    incremental for :class:`MrmrRowScore`, generic ``score.score`` for
-    plug-ins. Same math (:func:`mi_vec`) and same lowest-id tie-break as
-    the distributed paths."""
-    rows = [
-        (float(r["id"]), np.asarray(r["features"], dtype=np.float64))
-        for r in base.collect()
-    ]
-    rows.sort(key=lambda t: t[0])
-    incremental = type(score) is MrmrRowScore  # exact type; see select_rows
-    relevance = {rid: mi_vec(v, label_arr) for rid, v in rows} if incremental else {}
-    red_sum: dict[float, float] = {rid: 0.0 for rid, _ in rows}
-    vecs = dict(rows)
-    selected: list[tuple[float, float]] = []
-    sel_vecs: list[np.ndarray] = []
-    sel_set: set[float] = set()
-    for _ in range(num):
-        best: tuple[float, float] | None = None
-        for rid, v in rows:
-            if rid in sel_set:
-                continue
-            if incremental:
-                k = len(selected)
-                s = relevance[rid] - (red_sum[rid] / k if k else 0.0)
-            else:
-                s = score.score(v, label_arr, sel_vecs)
-            if (
-                best is None
-                or (s > best[1] if score.higher_is_better else s < best[1])
-                or (s == best[1] and rid < best[0])
-            ):
-                best = (rid, s)
-        assert best is not None
-        selected.append(best)
-        sel_set.add(best[0])
-        sel_vecs.append(vecs[best[0]])
-        if incremental:
-            win_vec = vecs[best[0]]
-            for rid, v in rows:
-                if rid not in sel_set:
-                    red_sum[rid] += mi_vec(v, win_vec)
-    return selected
 
 
 def _select_rows_generic(
@@ -443,7 +407,7 @@ def _select_rows_generic(
             scored = base.filter(
                 ~F.col("id").isin(sel_ids) if sel_ids else F.lit(True)
             ).withColumn("score", score_udf(F.col("features")))
-            win_id, win_score, win_features = _argbest(scored, score.higher_is_better)
+            win_id, win_score, (win_features,) = _argbest(scored, score.higher_is_better)
             selected.append((win_id, win_score))
             sel_vecs.append(np.asarray(win_features, dtype=np.float64))
         return selected

@@ -33,7 +33,7 @@ Zipf head collapses in the map-side combiner). All EM rounds run on
 the *word-frequency relation* — bounded by vocabulary, not corpus —
 the same fold surface as ``bpe_train``:
 
-- **in-core path** (vocabulary fits ``incore_vocab_budget``): the
+- **in-core path** (vocabulary fits ``INCORE_VOCAB_BUDGET``): the
   exact EM recurrence on plain Python ints/floats — identical math,
   zero scheduling overhead (the broadcast-small-side rule; curated
   corpora and every test SF land here).
@@ -121,6 +121,12 @@ def _em_incore(
     """The exact EM recurrence on the collected word-frequency relation."""
     words, singles = _prep_words(wf)
     vocab = _em_vocab(words, singles, max_piece, min_count, em_rounds, prune_top)
+    return _vocab_head(vocab, vocab_keep)
+
+
+def _vocab_head(vocab: dict[str, int], vocab_keep: int) -> list[tuple[int, str, int, int]]:
+    """The top ``vocab_keep`` pieces of a trained vocabulary as
+    ``(rank, piece, n_tokens, score_micro)`` rows."""
     total = sum(vocab.values())
     ranked = sorted(vocab.items(), key=lambda t: (-t[1], t[0]))[:vocab_keep]
     return [
@@ -176,7 +182,31 @@ def _em_vocab(
 
 
 #: driver-side budget for collecting the word-frequency relation on the
-#: in-core path — same rationale (and default) as ``bpe_train``.
+#: in-core path, in distinct words — read at call time by every
+#: unigram operator here and by ``bpe.bpe_train``: at or under it the
+#: relation is collected and the folds run on the driver, past it (or
+#: at 0) the distributed plans run.
+INCORE_VOCAB_BUDGET = 1_000_000
+
+
+def _incore_state(
+    wf: DataFrame, max_piece: int, min_count: int, em_rounds: int, prune_top: int
+) -> tuple | None:
+    """The in-core EM state ``(words, singles, vocab)`` of the
+    word-frequency relation ``wf``, or None past
+    :data:`INCORE_VOCAB_BUDGET` — one job decides the path AND fetches
+    the words when they fit."""
+    if INCORE_VOCAB_BUDGET <= 0:
+        return None
+    head = wf.limit(INCORE_VOCAB_BUDGET + 1).collect()
+    if len(head) > INCORE_VOCAB_BUDGET:
+        return None
+    words, singles = _prep_words([(r["w"], r["c"]) for r in head])
+    return words, singles, _em_vocab(
+        words, singles, max_piece, min_count, em_rounds, prune_top
+    )
+
+
 def unigram_train(
     df: DataFrame,
     text_col: str,
@@ -185,7 +215,6 @@ def unigram_train(
     em_rounds: int = 2,
     prune_top: int = 64,
     vocab_keep: int = 48,
-    incore_vocab_budget: int = 1_000_000,
     trained: tuple | None = None,
 ) -> DataFrame:
     """``(rank, piece, n_tokens, score_micro)`` — the trained unigram-LM
@@ -201,28 +230,15 @@ def unigram_train(
     from the collected word-frequency relation at the same knobs (the
     registry's session memo uses it); only the output tail runs.
     """
-    spark = df.sparkSession
-    if trained is not None:
-        words, _singles, vocab = trained
-        total = sum(vocab.values())
-        ranked = sorted(vocab.items(), key=lambda t: (-t[1], t[0]))[:vocab_keep]
-        out = [
-            (r + 1, p, n, _score_micro(n, total))
-            for r, (p, n) in enumerate(ranked)
-        ]
-        return spark.createDataFrame(out, VOCAB_SCHEMA)
-    wf = word_frequencies(df, text_col)
-    if incore_vocab_budget > 0:
-        head = wf.limit(incore_vocab_budget + 1).collect()
-        if len(head) <= incore_vocab_budget:
-            out = _em_incore(
-                [(r["w"], r["c"]) for r in head],
-                max_piece, min_count, em_rounds, prune_top, vocab_keep,
+    if trained is None:
+        wf = word_frequencies(df, text_col)
+        trained = _incore_state(wf, max_piece, min_count, em_rounds, prune_top)
+        if trained is None:
+            return _unigram_distributed(
+                wf, max_piece, min_count, em_rounds, prune_top, vocab_keep
             )
-            return spark.createDataFrame(out, VOCAB_SCHEMA)
-    return _unigram_distributed(
-        wf, max_piece, min_count, em_rounds, prune_top, vocab_keep
-    )
+    _words, _singles, vocab = trained
+    return df.sparkSession.createDataFrame(_vocab_head(vocab, vocab_keep), VOCAB_SCHEMA)
 
 
 def unigram_token_counts(
@@ -232,7 +248,6 @@ def unigram_token_counts(
     min_count: int = 5,
     em_rounds: int = 2,
     prune_top: int = 64,
-    incore_vocab_budget: int = 1_000_000,
     trained: tuple | None = None,
 ) -> DataFrame:
     """``(rank, piece, n_tokens)`` — token counts of ENCODING the corpus
@@ -249,33 +264,20 @@ def unigram_token_counts(
     ``unigram_train`` contract).
     """
     spark = df.sparkSession
-    if trained is not None or incore_vocab_budget > 0:
-        if trained is not None:
-            words, _singles, vocab = trained
-        else:
-            wf = word_frequencies(df, text_col)
-            head = wf.limit(incore_vocab_budget + 1).collect()
-            if len(head) > incore_vocab_budget:
-                return _unigram_distributed(
-                    wf, max_piece, min_count, em_rounds, prune_top,
-                    vocab_keep=0, encode=True,
-                )
-            words, singles = _prep_words(
-                [(r["w"], r["c"]) for r in head]
+    if trained is None:
+        wf = word_frequencies(df, text_col)
+        trained = _incore_state(wf, max_piece, min_count, em_rounds, prune_top)
+        if trained is None:
+            return _unigram_distributed(
+                wf, max_piece, min_count, em_rounds, prune_top,
+                vocab_keep=0, encode=True,
             )
-            vocab = _em_vocab(
-                words, singles, max_piece, min_count, em_rounds, prune_top
-            )
-        usage = _usage_pass(words, vocab, max_piece)
-        ranked = sorted(usage.items(), key=lambda t: (-t[1], t[0]))
-        return spark.createDataFrame(
-            [(r + 1, p, n) for r, (p, n) in enumerate(ranked)],
-            "rank int, piece string, n_tokens long",
-        )
-    wf = word_frequencies(df, text_col)
-    return _unigram_distributed(
-        wf, max_piece, min_count, em_rounds, prune_top,
-        vocab_keep=0, encode=True,
+    words, _singles, vocab = trained
+    usage = _usage_pass(words, vocab, max_piece)
+    ranked = sorted(usage.items(), key=lambda t: (-t[1], t[0]))
+    return spark.createDataFrame(
+        [(r + 1, p, n) for r, (p, n) in enumerate(ranked)],
+        "rank int, piece string, n_tokens long",
     )
 
 
@@ -472,7 +474,6 @@ def tokenizer_fertility(
     min_count: int = 5,
     em_rounds: int = 2,
     prune_top: int = 64,
-    incore_vocab_budget: int = 1_000_000,
     trained: tuple | None = None,
 ) -> DataFrame:
     """``(source, n_words, n_tokens, n_chars, tokens_per_word_ppm,
@@ -498,17 +499,11 @@ def tokenizer_fertility(
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
+    if trained is None:
+        wf = word_frequencies(df, text_col)
+        trained = _incore_state(wf, max_piece, min_count, em_rounds, prune_top)
     if trained is not None:
         words, _singles, vocab = trained
-    else:
-        wf = word_frequencies(df, text_col)
-        head = wf.limit(incore_vocab_budget + 1).collect() if incore_vocab_budget else []
-        if incore_vocab_budget and len(head) <= incore_vocab_budget:
-            words, singles = _prep_words([(r["w"], r["c"]) for r in head])
-            vocab = _em_vocab(words, singles, max_piece, min_count, em_rounds, prune_top)
-        else:
-            words, vocab = None, None
-    if words is not None:
         total = sum(vocab.values())
         scores = {p: _score_micro(n, total) for p, n in vocab.items()}
         np_rows = [(w, len(_viterbi(w, scores, max_piece))) for w, _ in words]
@@ -550,7 +545,6 @@ def unigram_doc_fingerprints(
     min_count: int = 5,
     em_rounds: int = 2,
     prune_top: int = 64,
-    incore_vocab_budget: int = 1_000_000,
     trained: tuple | None = None,
 ) -> DataFrame:
     """``(doc_id, n_tokens, fp)`` — the per-document TOKEN STREAM under
@@ -570,17 +564,11 @@ def unigram_doc_fingerprints(
     from spark_ifs_spark.functions.hashing import md5_int60
 
     spark = df.sparkSession
+    if trained is None:
+        wf = word_frequencies(df, text_col)
+        trained = _incore_state(wf, max_piece, min_count, em_rounds, prune_top)
     if trained is not None:
         words, _singles, vocab = trained
-    else:
-        wf = word_frequencies(df, text_col)
-        head = wf.limit(incore_vocab_budget + 1).collect() if incore_vocab_budget else []
-        if incore_vocab_budget and len(head) <= incore_vocab_budget:
-            words, singles = _prep_words([(r["w"], r["c"]) for r in head])
-            vocab = _em_vocab(words, singles, max_piece, min_count, em_rounds, prune_top)
-        else:
-            words, vocab = None, None
-    if words is not None:
         total = sum(vocab.values())
         scores = {p: _score_micro(n, total) for p, n in vocab.items()}
         rows = []
@@ -627,7 +615,6 @@ def tokenizer_compare(
     min_count: int = 5,
     em_rounds: int = 2,
     prune_top: int = 64,
-    incore_vocab_budget: int = 1_000_000,
     trained: tuple | None = None,
 ) -> DataFrame:
     """``(source, n_words, uni_tokens, bpe_tokens,
@@ -646,7 +633,7 @@ def tokenizer_compare(
     Plan: ONE corpus scan builds the (source, word) counts; the word-
     frequency relation derives from it (no second pass); both
     trainings and the per-word token counts run on the vocabulary-
-    bounded relation (driver in-core under ``incore_vocab_budget``,
+    bounded relation (driver in-core under ``INCORE_VOCAB_BUDGET``,
     distributed EM / distributed merge loop beyond it); the two
     pieces-per-word maps join back broadcast. Ratios are integer ppm
     (floor) — engine-exact.
@@ -674,16 +661,10 @@ def tokenizer_compare(
     # counts of surviving words are identical to the unfiltered
     # relation's, and _prep_words applies the same filter — the same
     # (words, vocab) either way (EM/BPE folds are order-insensitive)
+    if trained is None:
+        trained = _incore_state(wf, max_piece, min_count, em_rounds, prune_top)
     if trained is not None:
         words, _singles, vocab = trained
-    else:
-        head = wf.limit(incore_vocab_budget + 1).collect() if incore_vocab_budget else []
-        if incore_vocab_budget and len(head) <= incore_vocab_budget:
-            words, singles = _prep_words([(r["w"], r["c"]) for r in head])
-            vocab = _em_vocab(words, singles, max_piece, min_count, em_rounds, prune_top)
-        else:
-            words, vocab = None, None
-    if words is not None:
         total = sum(vocab.values())
         scores = {p: _score_micro(n, total) for p, n in vocab.items()}
         merges = [(x, y) for _, x, y, _ in _bpe_incore(words, n_merges)]

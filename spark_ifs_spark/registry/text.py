@@ -2423,11 +2423,7 @@ _UNI_TRAINED: dict[tuple[str, tuple[int, int]], tuple] = {}
 
 
 def _uni_trained(spark: SparkSession, sf_dir: str):
-    from spark_ifs_spark.operators.unigram import (
-        _em_vocab,
-        _prep_words,
-        word_frequencies,
-    )
+    from spark_ifs_spark.operators.unigram import _incore_state, word_frequencies
 
     table = _t(sf_dir, "documents")
     key = (table, _fingerprint(table))
@@ -2436,18 +2432,13 @@ def _uni_trained(spark: SparkSession, sf_dir: str):
         _t0 = time.perf_counter()
         for old_key in [k for k in _UNI_TRAINED if k[0] == table]:
             _UNI_TRAINED.pop(old_key)
-        budget = 1_000_000  # the operators' incore_vocab_budget default
         docs = _read(spark, sf_dir, "documents", fan_out=True)
-        wf = word_frequencies(docs, "text")
-        head = wf.limit(budget + 1).collect()
-        if len(head) > budget:
-            return None  # past the in-core budget: use the operator path
-        words, singles = _prep_words([(r["w"], r["c"]) for r in head])
-        vocab = _em_vocab(
-            words, singles, UNI_MAX_PIECE, UNI_MIN_COUNT,
+        state = _incore_state(
+            word_frequencies(docs, "text"), UNI_MAX_PIECE, UNI_MIN_COUNT,
             UNI_EM_ROUNDS, UNI_PRUNE_TOP,
         )
-        state = (words, singles, vocab)
+        if state is None:
+            return None  # past INCORE_VOCAB_BUDGET: use the operator path
         _UNI_TRAINED[key] = state
         _note_staged_build("unigram_em", time.perf_counter() - _t0)
     return state

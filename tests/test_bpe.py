@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from spark_ifs_spark.operators import unigram as unigram_mod
 from spark_ifs_spark.operators.bpe import (
     _merge_incore,
     bpe_train,
@@ -44,17 +45,16 @@ def test_bpe_train_tiny_corpus(spark):
     assert rows == [(0, "a", "b", 5), (1, "ab", "c", 2)]
 
 
-def test_bpe_paths_agree(spark, sf_dir):
+def test_bpe_paths_agree(spark, sf_dir, monkeypatch):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     incore = [
         tuple(r)
         for r in bpe_train(docs, "text", 6).orderBy("rank").collect()
     ]
+    monkeypatch.setattr(unigram_mod, "INCORE_VOCAB_BUDGET", 0)
     dist = [
         tuple(r)
-        for r in bpe_train(docs, "text", 6, incore_vocab_budget=0)
-        .orderBy("rank")
-        .collect()
+        for r in bpe_train(docs, "text", 6).orderBy("rank").collect()
     ]
     assert incore == dist
     assert len(incore) == 6

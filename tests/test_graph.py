@@ -5,8 +5,10 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
+from spark_ifs_spark.operators import graph as graph_mod
 from spark_ifs_spark.operators.graph import (
     cluster_representatives,
     connected_components,
@@ -41,12 +43,12 @@ def _check(spark, edges, max_iter=25):
         for r in connected_components(df, max_iter=max_iter).collect()
     }
     assert incore == want
-    dist = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            df, max_iter=max_iter, incore_edge_budget=0
-        ).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(graph_mod, "INCORE_EDGE_BUDGET", 0)
+        dist = {
+            r["id"]: r["component"]
+            for r in connected_components(df, max_iter=max_iter).collect()
+        }
     assert dist == want
     return incore
 
@@ -65,7 +67,7 @@ def test_chain_converges_fast(spark):
     assert set(got.values()) == {0}
 
 
-def test_pointer_jump_driver_syncs_are_bounded(spark):
+def test_pointer_jump_driver_syncs_are_bounded(spark, monkeypatch):
     """The inner pointer-jump loop must not pay one driver round-trip
     per jump: sum-based convergence checks run every SECOND jump and
     the jump count is capped at ceil(log2(n_active)) — on a deep chain
@@ -74,12 +76,8 @@ def test_pointer_jump_driver_syncs_are_bounded(spark):
     edges = [(i, i + 1) for i in range(200)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     want = _union_find(edges)
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            df, incore_edge_budget=0
-        ).collect()
-    }
+    monkeypatch.setattr(graph_mod, "INCORE_EDGE_BUDGET", 0)
+    got = {r["id"]: r["component"] for r in connected_components(df).collect()}
     assert got == want
     stats = connected_components.last_stats
     assert stats["outer_rounds"] >= 1 and stats["jumps"] >= 1

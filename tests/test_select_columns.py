@@ -3,6 +3,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from spark_ifs_spark.operators import select_columns as select_columns_mod
 from spark_ifs_spark.operators.select_columns import select_columns
 from spark_ifs_spark.sources.generator import engineered_fixture, random_matrix
 from tests.oracle_mrmr import greedy_mrmr
@@ -58,7 +59,7 @@ def test_num_cap_and_validation(spark):
         select_columns(df, "label", names, num=0)
 
 
-def test_fast_and_incremental_paths_agree(spark):
+def test_fast_and_incremental_paths_agree(spark, monkeypatch):
     """The cost-based strategy choice must be semantically invisible:
     in-core numpy and incremental per-round distributed plans pick identical
     features with matching scores."""
@@ -66,31 +67,11 @@ def test_fast_and_incremental_paths_agree(spark):
 
     wide, names = random_conventional_df(spark, rows=400, cols=13, seed=7)
     fast = select_columns(wide, "label", names, num=6)
-    slow = select_columns(wide, "label", names, num=6, incore_cell_budget=0)
+    monkeypatch.setattr(select_columns_mod, "INCORE_CELL_BUDGET", 0)
+    slow = select_columns(wide, "label", names, num=6)
     assert [i for i, _ in fast] == [i for i, _ in slow]
     for (_, sf), (_, ss) in zip(fast, slow):
         assert abs(sf - ss) < 1e-9
-
-
-def test_column_score_sql_expr_parity(spark):
-    """sql_expr is documented as the JVM-side mirror of score(); evaluate
-    both on the same (relevance, redundancy) samples so the two surfaces
-    cannot silently drift (redundancy NULL encodes round 1 / empty S)."""
-    from pyspark.sql import functions as F
-
-    from spark_ifs_spark.operators.scores import MiqColumnScore, MrmrColumnScore
-
-    vals = [(0.5, None), (0.5, 0.2), (0.3, 0.0), (0.0, 0.4), (1.2, 1e-15), (0.7, 0.7)]
-    df = spark.createDataFrame(vals, "relevance double, redundancy double")
-    for sc in (MrmrColumnScore(), MiqColumnScore()):
-        got = [
-            r["s"]
-            for r in df.select(F.expr(sc.sql_expr()).alias("s")).collect()
-        ]
-        want = [
-            sc.score(rel, [] if red is None else [red]) for rel, red in vals
-        ]
-        assert got == pytest.approx(want, abs=0.0), type(sc).__name__
 
 
 def test_incore_cardinality_guard(spark):

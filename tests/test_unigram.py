@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 
+from spark_ifs_spark.operators import unigram as unigram_mod
 from spark_ifs_spark.operators.unigram import (
     _em_incore,
     _viterbi,
@@ -71,14 +72,15 @@ def test_em_incore_matches_hand_reference():
     assert ranks == list(range(1, len(out) + 1))
 
 
-def test_distributed_path_matches_incore(spark, sf_dir):
+def test_distributed_path_matches_incore(spark, sf_dir, monkeypatch):
     """The mapInPandas E-step + DataFrame M-step path is the SAME
     integer recurrence as the collected path."""
     from spark_ifs_spark.sources.parquet import load_table
 
     docs = load_table(spark, sf_dir, "documents").limit(200)
     a = unigram_train(docs, "text", em_rounds=2)
-    b = unigram_train(docs, "text", em_rounds=2, incore_vocab_budget=0)
+    monkeypatch.setattr(unigram_mod, "INCORE_VOCAB_BUDGET", 0)
+    b = unigram_train(docs, "text", em_rounds=2)
     rows_a = sorted(tuple(r) for r in a.collect())
     rows_b = sorted(tuple(r) for r in b.collect())
     assert rows_a == rows_b
@@ -93,33 +95,25 @@ def test_long_words_are_excluded(spark):
     assert not any("aaaaa" in r["piece"] for r in out)
 
 
-def test_fertility_distributed_matches_incore(spark, sf_dir):
+def test_fertility_distributed_matches_incore(spark, sf_dir, monkeypatch):
     from spark_ifs_spark.operators.unigram import tokenizer_fertility
     from spark_ifs_spark.sources.parquet import load_table
 
     docs = load_table(spark, sf_dir, "documents").limit(200)
     a = sorted(tuple(r) for r in tokenizer_fertility(docs, "source", "text").collect())
-    b = sorted(
-        tuple(r)
-        for r in tokenizer_fertility(
-            docs, "source", "text", incore_vocab_budget=0
-        ).collect()
-    )
+    monkeypatch.setattr(unigram_mod, "INCORE_VOCAB_BUDGET", 0)
+    b = sorted(tuple(r) for r in tokenizer_fertility(docs, "source", "text").collect())
     assert a == b and len(a) > 0
 
 
-def test_doc_fingerprints_distributed_matches_incore(spark, sf_dir):
+def test_doc_fingerprints_distributed_matches_incore(spark, sf_dir, monkeypatch):
     from spark_ifs_spark.operators.unigram import unigram_doc_fingerprints
     from spark_ifs_spark.sources.parquet import load_table
 
     docs = load_table(spark, sf_dir, "documents").limit(150)
     a = sorted(tuple(r) for r in unigram_doc_fingerprints(docs, "doc_id", "text").collect())
-    b = sorted(
-        tuple(r)
-        for r in unigram_doc_fingerprints(
-            docs, "doc_id", "text", incore_vocab_budget=0
-        ).collect()
-    )
+    monkeypatch.setattr(unigram_mod, "INCORE_VOCAB_BUDGET", 0)
+    b = sorted(tuple(r) for r in unigram_doc_fingerprints(docs, "doc_id", "text").collect())
     assert a == b and len(a) == 150
 
 
@@ -184,18 +178,14 @@ def test_viterbi_optimal_vs_bruteforce_property():
     check()
 
 
-def test_tokenizer_compare_distributed_matches_incore(spark, sf_dir):
+def test_tokenizer_compare_distributed_matches_incore(spark, sf_dir, monkeypatch):
     from spark_ifs_spark.operators.unigram import tokenizer_compare
     from spark_ifs_spark.sources.parquet import load_table
 
     docs = load_table(spark, sf_dir, "documents").limit(200)
     a = sorted(tuple(r) for r in tokenizer_compare(docs, "source", "text").collect())
-    b = sorted(
-        tuple(r)
-        for r in tokenizer_compare(
-            docs, "source", "text", incore_vocab_budget=0
-        ).collect()
-    )
+    monkeypatch.setattr(unigram_mod, "INCORE_VOCAB_BUDGET", 0)
+    b = sorted(tuple(r) for r in tokenizer_compare(docs, "source", "text").collect())
     assert a == b and len(a) > 0
 
 

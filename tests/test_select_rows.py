@@ -101,6 +101,19 @@ def test_generic_row_score_plugin(spark):
     assert [i for i, _ in default] == [i for i, _ in plugin]
 
 
+def test_incore_and_distributed_paths_agree(spark, monkeypatch):
+    """The in-core escape hatch must be semantically invisible vs the
+    distributed per-round plan (both score orders and values)."""
+    mat = random_matrix(rows=60, cols=9, seed=11)
+    alt, labels = _alternate_df(spark, mat)
+    incore = select_rows(alt, num=4, labels_row=labels)
+    monkeypatch.setattr(select_columns_mod, "INCORE_CELL_BUDGET", 0)
+    dist = select_rows(alt, num=4, labels_row=labels)
+    assert [int(i) for i, _ in incore] == [int(i) for i, _ in dist]
+    for (_, a), (_, b) in zip(incore, dist):
+        assert a == b
+
+
 def test_cross_encoding_agreement_miq(spark, monkeypatch):
     """Cross-encoding differential invariant holds for the MIQ plug-in
     too, through both the in-core and distributed paths."""

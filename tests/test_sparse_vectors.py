@@ -109,6 +109,47 @@ def test_row_selector_sparse_equals_dense(spark):
     assert m_d.getSelectedRows()[0] == 2
 
 
+def test_select_rows_sparse_equals_dense_distributed(spark, monkeypatch):
+    """The sparse-native distributed path (select_rows_sparse past the
+    in-core gate) must produce EXACTLY the dense path's selections and
+    scores: mi_vec_sparse == mi_vec bit-for-bit, same recurrence, same
+    lowest-id tie-break."""
+    from spark_ifs_spark.operators import select_columns as select_columns_mod
+    from spark_ifs_spark.operators.select_rows import select_rows, select_rows_sparse
+
+    rng = np.random.default_rng(41)
+    n_feat, n_inst = 12, 300
+    M = np.zeros((n_feat, n_inst))
+    for j in range(n_feat):
+        nz = rng.choice(n_inst, size=n_inst // 10, replace=False)
+        M[j, nz] = rng.choice([1.0, 2.0, 3.0], size=nz.size)
+    labels = M[5].tolist()
+
+    dense = spark.createDataFrame(
+        [(j, M[j].tolist()) for j in range(n_feat)], "id long, features array<double>"
+    )
+    sparse = spark.createDataFrame(
+        [
+            (
+                j,
+                n_inst,
+                np.flatnonzero(M[j]).tolist(),
+                M[j][np.flatnonzero(M[j])].tolist(),
+            )
+            for j in range(n_feat)
+        ],
+        "id long, n int, indices array<int>, values array<double>",
+    )
+    for budget in (0, 10**9):  # distributed and in-core sparse paths
+        monkeypatch.setattr(select_columns_mod, "INCORE_CELL_BUDGET", budget)
+        got = select_rows_sparse(sparse, 4, labels)
+        want = select_rows(dense, 4, labels)
+        assert [i for i, _ in got] == [i for i, _ in want]
+        for (_, a), (_, b) in zip(got, want):
+            assert a == b, (budget, a, b)
+    assert got[0][0] == 5.0  # label row itself wins round 1
+
+
 def test_features_as_sparse_normalizes_all_layouts(spark):
     """Dense VectorUDT, sparse VectorUDT (incl. an explicit stored zero),
     and array<double> input all normalize to the same strictly-nonzero

@@ -1,49 +1,32 @@
 """Incremental / streaming ANN index maintenance: fold arriving
 embedding vectors into the IVF-partitioned corpus layout
-(``sources/sinks.py:write_ivf_corpus``) without rebuilding it.
+(``sources/sinks.py:write_ivf_corpus``) without rebuilding it, as a
+:class:`~spark_ifs_spark.streaming._pointer.PointerIndex` (the
+pointer-commit contract, stated once in ``streaming/_pointer.py``).
 
-Consistency design — a POINTER COMMIT, the table-format pattern
-(Iceberg/Delta metadata commits) in miniature, because an append-only
-file sink plus side files cannot otherwise deliver the guarantees a
-maintained index needs:
-
-- ``current.json`` is the ONLY commit point: it names the live corpus
-  version directory and carries the centroids AND the append
-  high-watermark, and it is replaced atomically (``os.replace``). A
-  reader (probe/refresh) resolving through it always sees a complete,
-  mutually-consistent (corpus, centroids) pair — there is no instant
-  where a re-clustered corpus is paired with stale centroids.
-- appends write each micro-batch to its own ``batch=<id>`` partition
-  of the live corpus version with ``mode("overwrite")`` — a REPLAYED
-  batch (at-least-once delivery, or a crash between the data write and
-  the pointer update) rewrites the same directory with the same rows:
-  idempotent by construction, not by bookkeeping. The watermark in the
-  pointer exists for one case only: batches already ABSORBED into a
-  compacted version by a refresh, which a directory overwrite could
-  otherwise duplicate.
-- a refresh retrains centroids from the full accumulated corpus,
-  rewrites it cell-partitioned into a NEW version directory
-  (``corpus-v{k+1}/batch=-1/cell=*``), then commits pointer + new
-  centroids + unchanged watermark in one atomic replace; the old
-  version is deleted only after the commit (a crash leaves an orphan
-  directory, cleaned on the next refresh — never a torn index).
+The pointer carries the centroids next to the live corpus version and
+the append watermark, so a reader (probe/refresh) resolving it once
+always sees a complete, mutually-consistent (corpus, centroids) pair —
+there is no instant where a re-clustered corpus is paired with stale
+centroids. Appends cell-assign each micro-batch against the committed
+centroids (the first batch trains them) and write it to its own
+``batch=<id>`` directory, partitioned by ``cell``. A refresh retrains
+centroids on the committed corpus and rewrites it cell-partitioned
+into a NEW version (``corpus-v{k+1}/batch=-1/cell=*``), committing
+corpus + centroids + unchanged watermark in one pointer swap.
 
 At 100 TB: appends touch only the partitions the batch's vectors land
 in; the refresh is the only corpus-wide pass and is deliberately
 periodic (amortized), exactly how production IVF services (FAISS
-OnDisk / Milvus segment compaction) schedule re-clustering. On an
-object store, ``os.replace`` of the pointer becomes the catalog/table
--format commit. No oracle entry — streaming-only surface (the package
-convention); batch ≡ stream parity, replay absorption, crash-window
-recovery, and probe partition-pruning are pinned by
-``tests/test_streaming_ann.py``.
+OnDisk / Milvus segment compaction) schedule re-clustering. No oracle
+entry — streaming-only surface (the package convention); batch ≡
+stream parity, replay absorption, crash-window recovery, and probe
+partition-pruning are pinned by ``tests/test_streaming_ann.py``.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,28 +36,35 @@ from spark_ifs_spark.operators.similarity import (
     ivf_cell_expr,
     ivf_centroids,
 )
+from spark_ifs_spark.streaming._pointer import PointerIndex
 
 
-from spark_ifs_spark.streaming._pointer import (  # noqa: F401
-    _commit_state,
-    _pointer_path,
-    _read_state,
-)
+def _index(index_path: str) -> PointerIndex:
+    return PointerIndex(index_path, "corpus-v", "index")
+
+
+def _centroids(state: dict) -> list[tuple[int, list[float]]]:
+    return [(int(c), [float(x) for x in v]) for c, v in state["centroids"]]
 
 
 def corpus_dir(index_path: str) -> str:
     """Directory of the LIVE corpus version (resolved via the pointer)."""
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed index at {index_path}")
-    return os.path.join(index_path.rstrip("/"), state["corpus"])
+    index = _index(index_path)
+    return os.path.join(index.path, index.state()["dir"])
 
 
 def read_centroids(index_path: str) -> list[tuple[int, list[float]]] | None:
-    state = _read_state(index_path)
-    if state is None:
+    try:
+        state = _index(index_path).state()
+    except FileNotFoundError:
         return None
-    return [(int(c), [float(x) for x in v]) for c, v in state["centroids"]]
+    return _centroids(state)
+
+
+def _write_cells(corpus: DataFrame, cents, path: str) -> None:
+    corpus.withColumn("cell", ivf_cell_expr(cents, "vec")).write.mode(
+        "overwrite"
+    ).partitionBy("cell").parquet(path)
 
 
 def streaming_ivf_index(
@@ -89,99 +79,49 @@ def streaming_ivf_index(
     """Maintain an IVF-partitioned ANN index over a vector stream.
 
     Returns the StreamingQuery. ``refresh_every=0`` disables retraining
-    (append-only against the first batch's centroids).
+    (append-only against the first batch's centroids); otherwise a
+    refresh follows every committed batch whose id + 1 is a multiple of
+    ``refresh_every``.
     """
     spark = stream.sparkSession
-    root = index_path.rstrip("/")
-    os.makedirs(root, exist_ok=True)
+    index = _index(index_path)
 
-    def _append(batch: DataFrame, batch_id: int) -> None:
-        rows = batch.select(
-            F.col(id_col).alias("id"), as_double_array(vec_col).alias("vec")
+    def _append(batch: DataFrame, batch_id: int, state: dict) -> None:
+        if "centroids" not in state:
+            state["centroids"] = ivf_centroids(batch, "id", "vec", num_centroids)
+        _write_cells(
+            batch, _centroids(state),
+            os.path.join(index.path, state["dir"], f"batch={batch_id}"),
         )
-        state = _read_state(index_path)
-        if state is not None and batch_id <= state["last_batch_id"]:
-            # Replay skip. Valid ONLY under the SAME checkpoint, where
-            # Structured Streaming guarantees a replayed batch id
-            # carries exactly the rows it carried before (offsets are
-            # in the checkpoint WAL). Pointing a FRESH checkpoint at an
-            # existing index is not supported: the new run may group
-            # old+new source files into one low-numbered batch, and
-            # skipping it would silently drop the new rows — start a
-            # fresh index (or key idempotence on content, not batch id)
-            # for cross-checkpoint reruns.
-            return
-        if state is None:
-            if rows.isEmpty():
-                return
-            cents = ivf_centroids(rows, "id", "vec", num_centroids)
-            state = {
-                "version": 0,
-                "corpus": "corpus-v0",
-                "centroids": cents,
-                "last_batch_id": -1,
-            }
-        cents = [(int(c), [float(x) for x in v]) for c, v in state["centroids"]]
-        tagged = rows.withColumn("cell", ivf_cell_expr(cents, "vec"))
-        # per-batch directory + overwrite = replay-idempotent data write;
-        # a crash before the pointer update simply rewrites it verbatim
-        tagged.write.mode("overwrite").partitionBy("cell").parquet(
-            os.path.join(root, state["corpus"], f"batch={batch_id}")
-        )
-        state["last_batch_id"] = batch_id
-        _commit_state(index_path, state)
+
+    def _refresh(batch_id: int) -> None:
         if refresh_every and (batch_id + 1) % refresh_every == 0:
             refresh_ivf_index(spark, index_path, num_centroids)
 
-    return (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    rows = stream.select(
+        F.col(id_col).alias("id"), as_double_array(vec_col).alias("vec")
     )
+    return index.sink(rows, checkpoint, {}, _append, after_commit=_refresh)
 
 
 def refresh_ivf_index(
     spark: SparkSession, index_path: str, num_centroids: int
 ) -> None:
-    """Retrain centroids on the accumulated corpus and rewrite it
-    compacted into a new version directory; commit corpus + centroids +
-    watermark in ONE atomic pointer replace. Crash-safe at every
-    instant: the pointer always names a complete version, and orphan
-    version directories (crash after data write, before commit — or
-    after commit, before cleanup) are swept here."""
-    root = index_path.rstrip("/")
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed index at {index_path}")
-    # sweep orphans from any earlier crash
-    for d in os.listdir(root):
-        if d.startswith("corpus-v") and d != state["corpus"]:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    corpus = spark.read.parquet(os.path.join(root, state["corpus"])).select(
-        "id", "vec"
+    """Retrain centroids on the committed corpus and rewrite it
+    compacted into a new version directory (``batch=-1`` keeps the
+    (batch, cell) directory shape uniform, so partition discovery and
+    cell pruning are unchanged); corpus + centroids + watermark commit
+    in one pointer swap."""
+    index = _index(index_path)
+    # centroid training and the rewrite must read the same snapshot
+    corpus = (
+        index.committed(spark, "").select("id", "vec").localCheckpoint(eager=True)
     )
-    corpus = corpus.localCheckpoint(eager=True)
     cents = ivf_centroids(corpus, "id", "vec", num_centroids)
-    new_version = state["version"] + 1
-    new_dir = f"corpus-v{new_version}"
-    tagged = corpus.withColumn("cell", ivf_cell_expr(cents, "vec"))
-    # batch=-1 = "compacted": keeps the (batch, cell) directory shape
-    # uniform so partition discovery and cell pruning are unchanged
-    tagged.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(root, new_dir, "batch=-1")
+    index.swap(
+        lambda vdir: _write_cells(corpus, cents, os.path.join(vdir, "batch=-1")),
+        centroids=cents,
     )
-    old_dir = state["corpus"]
-    _commit_state(
-        index_path,
-        {
-            "version": new_version,
-            "corpus": new_dir,
-            "centroids": cents,
-            "last_batch_id": state["last_batch_id"],
-        },
-    )
-    shutil.rmtree(os.path.join(root, old_dir), ignore_errors=True)
 
 
 def probe_ivf_index(
@@ -199,15 +139,13 @@ def probe_ivf_index(
 
     from spark_ifs_spark.operators.similarity import cosine
 
-    # ONE pointer read: centroids and corpus directory MUST come from
-    # the same snapshot, else a refresh committing between two reads
-    # would pair old centroids with a re-clustered corpus (wrong cells
-    # pruned) or point the scan at a just-deleted version directory.
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed index at {index_path}")
-    cents = [(int(c), [float(x) for x in v]) for c, v in state["centroids"]]
-    corpus_path = os.path.join(index_path.rstrip("/"), state["corpus"])
+    # ONE pointer read: centroids, corpus directory and watermark MUST
+    # come from the same snapshot, else a refresh committing between
+    # two reads would pair old centroids with a re-clustered corpus
+    # (wrong cells pruned) or point the scan at a just-deleted version.
+    index = _index(index_path)
+    state = index.state()
+    cents = _centroids(state)
     qn = math.sqrt(sum(x * x for x in query_vec)) or 1.0
     by_sim = sorted(
         cents,
@@ -218,7 +156,7 @@ def probe_ivf_index(
         ),
     )
     cells = [cid for cid, _ in by_sim[:probe]]
-    corpus = spark.read.parquet(corpus_path).where(F.col("cell").isin(cells))
+    corpus = index.committed(spark, "", state=state).where(F.col("cell").isin(cells))
     q = F.array(*[F.lit(float(x) / qn) for x in query_vec])
     scored = corpus.select("id", cosine(F.col("vec"), q).alias("cos"))
     return scored.orderBy(F.col("cos").desc(), F.col("id").asc()).limit(k)

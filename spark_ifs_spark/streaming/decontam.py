@@ -2,14 +2,11 @@
 documents (new benchmarks, refreshed test splits) into a maintained
 n-gram digest relation, then flag corpus documents against the
 committed index — the streaming side of
-``operators/dedup.py:contaminated_ids``, under the same pointer-commit
-consistency design as ``streaming/{ann,minhash,profile}.py``
-(``streaming/_pointer.py``):
+``operators/dedup.py:contaminated_ids``, as a :class:`~spark_ifs_spark.
+streaming._pointer.PointerIndex` (the pointer-commit contract, stated
+once in ``streaming/_pointer.py``; the shingle width ``n`` is the
+guarded parameter — flags from mixed widths would be silently wrong):
 
-- ``current.json`` is the only commit point (atomic ``os.replace``),
-  carrying the live version directory, the append high-watermark and
-  the shingle width ``n`` (mismatched ``n`` is a hard error — flags
-  from mixed widths would be silently wrong).
 - the index stores DIGESTS ONLY (``shingles/batch=<id>``: h — 60-bit
   md5 of each distinct eval n-gram), never eval text: an eval suite's
   contents stay out of the lake, and the per-batch relation is
@@ -18,16 +15,12 @@ consistency design as ``streaming/{ann,minhash,profile}.py``
   (vs the batch operator's raw-string join) — at a billion shingles a
   side that is ~10⁻⁴ expected false flags, the right trade for an
   index that must never hold benchmark text.
-- every per-batch directory is written with ``mode("overwrite")`` — a
-  replayed batch rewrites the same bytes, idempotent by construction;
-  appends never read previously-committed digests (append = write new
+- appends never read previously-committed digests (append = write new
   batch + advance watermark), so batch ≡ stream parity is exact by
   mergeability, the ``streaming/profile.py`` argument.
-- ``flag_contaminated`` reads the committed prefix (``batch <=
-  watermark`` partition filter — orphan directories from a crash
-  between data write and pointer update are invisible) and semi-joins
-  corpus shingle digests against it: flags are always computed against
-  a complete, mutually-consistent eval snapshot. The join strategy is
+- ``flag_contaminated`` semi-joins corpus shingle digests against the
+  committed prefix: flags are always computed against a complete,
+  mutually-consistent eval snapshot. The join strategy is
   deliberately UNHINTED: AQE broadcasts the digest relation while its
   runtime size fits (an eval suite is small by definition) and falls
   back to a shuffle semi-join past that — a hard `broadcast()` hint
@@ -36,43 +29,29 @@ consistency design as ``streaming/{ann,minhash,profile}.py``
   regime (``contaminated_ids_bloom``) composes by building the sketch
   FROM this index's digests instead of from raw eval text.
 - ``compact_decontam_index`` rewrites the accumulated digests
-  DISTINCT into a new version directory (``batch=-1``) and swings the
-  pointer in one replace — cross-batch duplicate digests (the same
-  n-gram appearing in two benchmarks) exist until compaction and are
-  harmless to semi-join semantics.
+  DISTINCT into the new version's base — cross-batch duplicate digests
+  (the same n-gram appearing in two benchmarks) exist until compaction
+  and are harmless to semi-join semantics.
 
-Replay scope: the ``batch_id <= last_batch_id`` skip is valid under
-the SAME checkpoint (or an identical feed), exactly as documented in
-``streaming/ann.py``. No oracle entry — streaming-only surface (the
-package convention); parity, replay, crash windows and compaction are
-pytest-pinned in ``tests/test_streaming_decontam.py``.
+No oracle entry — streaming-only surface (the package convention);
+parity, replay, crash windows and compaction are pytest-pinned in
+``tests/test_streaming_decontam.py``.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_ifs_spark.functions.hashing import md5_int60
 from spark_ifs_spark.operators.dedup import word_shingles
-from spark_ifs_spark.streaming._pointer import (  # noqa: F401
-    _commit_state,
-    _pointer_path,
-    _read_state,
-)
+from spark_ifs_spark.streaming._pointer import PointerIndex
 
 
-def _read_digests(spark: SparkSession, root: str, corpus: str, watermark: int) -> DataFrame:
-    """Committed digest prefix: partition-pruned to ``batch <=
-    watermark`` so orphan (uncommitted) batch directories are
-    invisible."""
-    path = os.path.join(root, corpus, "shingles")
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], "h long, batch int")
-    return spark.read.parquet(path).where(F.col("batch") <= watermark)
+def _index(index_path: str) -> PointerIndex:
+    return PointerIndex(index_path, "corpus-v", "index")
 
 
 def streaming_decontam_index(
@@ -86,32 +65,9 @@ def streaming_decontam_index(
     """Maintain the eval-set n-gram digest index over an eval-document
     stream. Returns the StreamingQuery. Appends never read committed
     state — exact batch ≡ stream parity by mergeability."""
-    root = index_path.rstrip("/")
-    os.makedirs(root, exist_ok=True)
-    params = {"n": n}
+    index = _index(index_path)
 
-    def _append(batch: DataFrame, batch_id: int) -> None:
-        state = _read_state(index_path)
-        if state is not None:
-            if state["params"] != params:
-                raise ValueError(
-                    f"index at {index_path} was built with {state['params']}, "
-                    f"appender configured with {params} — mixed shingle widths "
-                    "flag silently wrong; rebuild or match parameters"
-                )
-            if batch_id <= state["last_batch_id"]:
-                # same-checkpoint replay skip — see streaming/ann.py for
-                # the cross-checkpoint scope caveat
-                return
-        if state is None:
-            if batch.isEmpty():
-                return
-            state = {
-                "version": 0,
-                "corpus": "corpus-v0",
-                "last_batch_id": -1,
-                "params": params,
-            }
+    def _append(batch: DataFrame, batch_id: int, state: dict) -> None:
         docs = batch.select(
             F.col(id_col).alias("id"), F.col(text_col).alias("text")
         )
@@ -120,21 +76,11 @@ def streaming_decontam_index(
             .select(md5_int60(F.col("sh")).alias("h"))
             .distinct()
         )
-        # data first, pointer last — a crash in between leaves only an
-        # orphan directory no reader can see; the batch partition value
-        # comes from the DIRECTORY NAME, never a data column
         digests.write.mode("overwrite").parquet(
-            os.path.join(root, state["corpus"], "shingles", f"batch={batch_id}")
+            os.path.join(index.path, state["dir"], "shingles", f"batch={batch_id}")
         )
-        state["last_batch_id"] = batch_id
-        _commit_state(index_path, state)
 
-    return (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return index.sink(stream, checkpoint, {"n": n}, _append)
 
 
 def flag_contaminated(
@@ -147,11 +93,9 @@ def flag_contaminated(
     """``(id)`` — corpus documents sharing ≥1 word n-gram digest with
     the committed eval index (the shingle width comes FROM the index,
     so a caller cannot accidentally flag at the wrong n)."""
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed index at {index_path}")
-    root = index_path.rstrip("/")
-    eval_h = _read_digests(spark, root, state["corpus"], state["last_batch_id"]).select("h")
+    index = _index(index_path)
+    state = index.state()
+    eval_h = index.committed(spark, "shingles", state=state).select("h")
     corpus_sh = word_shingles(corpus, id_col, text_col, state["params"]["n"])
     return (
         corpus_sh.select("id", md5_int60(F.col("sh")).alias("h"))
@@ -163,40 +107,12 @@ def flag_contaminated(
 
 def compact_decontam_index(spark: SparkSession, index_path: str) -> None:
     """Rewrite the committed digests DISTINCT into a new version
-    directory (``batch=-1``) and swing the pointer in one atomic
-    replace; watermark unchanged. Old version deleted only after the
-    commit; orphan versions swept here — the segment-compaction shape
-    shared with ``compact_minhash_index``.
-
-    SINGLE-WRITER assumption (the package's pointer-commit convention,
-    as in ``streaming/ann.py`` / ``streaming/minhash.py``): exactly
-    one compactor/writer at a time. The pre-commit orphan sweep
-    deletes every non-current ``corpus-v*`` directory, so a second
-    CONCURRENT compaction's in-flight (not-yet-committed) version
-    directory would be swept; readers are always safe (they only
-    follow the committed pointer), writers must be serialized."""
-    root = index_path.rstrip("/")
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed index at {index_path}")
-    for d in os.listdir(root):
-        if d.startswith("corpus-v") and d != state["corpus"]:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    wm = state["last_batch_id"]
-    new_version = state["version"] + 1
-    new_dir = os.path.join(root, f"corpus-v{new_version}")
-    df = _read_digests(spark, root, state["corpus"], wm)
-    df.select("h").distinct().write.mode("overwrite").parquet(
-        os.path.join(new_dir, "shingles", "batch=-1")
+    directory (``batch=-1``) — the segment-compaction shape shared with
+    ``compact_minhash_index``."""
+    index = _index(index_path)
+    digests = index.committed(spark, "shingles").select("h").distinct()
+    index.swap(
+        lambda vdir: digests.write.mode("overwrite").parquet(
+            os.path.join(vdir, "shingles", "batch=-1")
+        )
     )
-    old = state["corpus"]
-    _commit_state(
-        index_path,
-        {
-            "version": new_version,
-            "corpus": f"corpus-v{new_version}",
-            "last_batch_id": wm,
-            "params": state["params"],
-        },
-    )
-    shutil.rmtree(os.path.join(root, old), ignore_errors=True)

@@ -16,9 +16,6 @@ Spark's native state implementation.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -249,72 +246,3 @@ def upsert_materialized_view(
         .start()
     )
 
-
-def streaming_hll(
-    stream: DataFrame,
-    key_cols: list[str],
-    value_col: str,
-    store_path: str,
-    checkpoint: str,
-    p: int = 9,
-):
-    """Incremental distinct-count sketching: fold each micro-batch's
-    HLL register file into a parquet register store by bucket-wise max
-    (:func:`~spark_ifs_spark.operators.sketches.hll_merge`). Estimating
-    at any point is :func:`~spark_ifs_spark.operators.sketches.
-    hll_estimate` over the store — distinct-users-per-key over an
-    UNBOUNDED stream with keys × 2^p cells of state and zero re-scan of
-    history.
-
-    Same ``foreachBatch`` posture as :func:`upsert_materialized_view`
-    (the store IS the state; restarts resume from the checkpoint), with
-    one extra property the merge law gives for free: replayed batches
-    are ABSORBED, not double-counted — max is idempotent, so
-    at-least-once delivery still yields the exact register file
-    (stronger than the upsert view, where idempotence relies on the
-    newer-version rule). Batch ≡ stream parity is asserted in
-    ``test_streaming.py``: the folded store equals the one-shot batch
-    register file bit-for-bit, hence identical estimates.
-
-    Returns the StreamingQuery.
-    """
-    from spark_ifs_spark.operators.sketches import hll_merge, hll_registers
-
-    spark = stream.sparkSession
-
-    old_path = store_path.rstrip("/") + ".old"
-
-    def _read_store() -> DataFrame | None:
-        # Explicit existence probe (driver-visible path) instead of a
-        # bare except: a transient IO/parse error must FAIL the batch,
-        # not silently reset the accumulated registers. `.old` is the
-        # previous committed store — present only if a crash hit the
-        # swap window below, in which case it is complete and current.
-        for path in (store_path, old_path):
-            if os.path.isdir(path):
-                return spark.read.parquet(path)
-        return None
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        regs = hll_registers(batch, key_cols, value_col, p)
-        store = _read_store()
-        merged = hll_merge(store, regs, key_cols) if store is not None else regs
-        # Two-phase commit: write the merged store to a temp dir, then
-        # swap via renames. At every instant either `store_path` or
-        # `.old` holds a complete committed register file, so a crash
-        # mid-write can no longer discard history (the failure mode the
-        # old in-place mode('overwrite') rewrite had).
-        tmp_path = store_path.rstrip("/") + f".tmp-{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp_path)
-        shutil.rmtree(old_path, ignore_errors=True)
-        if os.path.isdir(store_path):
-            os.rename(store_path, old_path)
-        os.rename(tmp_path, store_path)
-        shutil.rmtree(old_path, ignore_errors=True)
-
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )

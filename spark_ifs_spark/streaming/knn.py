@@ -14,17 +14,16 @@ reached) merge the new candidate into their top-k lists. Per-batch
 work is O(|batch| · ef · deg) scorings + |touched| list re-ranks —
 independent of corpus size.
 
-Consistency is the package's POINTER COMMIT (``streaming/ann.py``,
-``streaming/_pointer.py``): ``current.json`` atomically names the live
-edge/vector version and the append high-watermark; per-batch delta
-directories are written with ``mode("overwrite")`` so a replayed batch
-(at-least-once delivery, or a crash between data write and pointer
-update) rewrites itself verbatim — idempotent by construction. Each
-delta carries the FULL replacement top-k list of every node it
-touches, so the read side is last-writer-wins per node
-(:func:`read_knn_edges` keeps each id's rows from its highest batch —
-the ``compact_latest`` changelog-compaction shape); ``compact_knn_
-graph`` periodically folds deltas into a fresh ``batch=-1`` base, the
+Consistency is the package's POINTER COMMIT (:class:`~spark_ifs_spark.
+streaming._pointer.PointerIndex`, contract stated once in
+``streaming/_pointer.py``); there are no parameters to guard
+(``params={}``), the live edge version lives under ``edges-v<k>`` and
+the vectors under the unversioned ``vectors/batch=<id>``. Each delta
+carries the FULL replacement top-k list of every node it touches, so
+the read side is last-writer-wins per node (:func:`read_knn_edges`
+keeps each id's rows from its highest committed batch — the
+``compact_latest`` changelog-compaction shape); ``compact_knn_graph``
+periodically folds deltas into a fresh ``batch=-1`` base, the
 small-files maintenance every streaming sink needs.
 
 Batch ≡ stream parity: the per-batch transition is the pure function
@@ -41,27 +40,29 @@ No counterpart in the reference; extension operator.
 from __future__ import annotations
 
 import os
-import shutil
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_ifs_spark.operators.knn import graph_search, knn_graph
 from spark_ifs_spark.operators.similarity import as_double_array
 from spark_ifs_spark.operators.topk import topk_per_key
-from spark_ifs_spark.streaming._pointer import (  # noqa: F401
-    _commit_state,
-    _pointer_path,
-    _read_state,
-)
+from spark_ifs_spark.streaming._pointer import PointerIndex
 
 
-def _edges_root(index_path: str, state: dict) -> str:
-    return os.path.join(index_path.rstrip("/"), state["edges"])
+def _index(index_path: str) -> PointerIndex:
+    return PointerIndex(index_path, "edges-v", "graph")
 
 
-def _vectors_root(index_path: str) -> str:
-    return os.path.join(index_path.rstrip("/"), "vectors")
+def _latest(rows: DataFrame, *cols: str) -> DataFrame:
+    """Per id, the rows of its highest committed batch."""
+    latest = F.max("batch").over(Window.partitionBy("id"))
+    return (
+        rows.withColumn("_mx", latest)
+        .filter(F.col("batch") == F.col("_mx"))
+        .select(*cols)
+    )
 
 
 def read_knn_vectors(spark: SparkSession, index_path: str) -> DataFrame:
@@ -74,52 +75,26 @@ def read_knn_vectors(spark: SparkSession, index_path: str) -> DataFrame:
     Batches above the pointer watermark are pruned BEFORE the per-id
     window: in the crash gap between a vectors write and its pointer
     commit, the orphan batch must not shadow the committed vector."""
-    from pyspark.sql import Window
-
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed graph at {index_path}")
-    rows = spark.read.parquet(_vectors_root(index_path)).filter(
-        F.col("batch") <= F.lit(state["last_batch_id"])
-    )
-    latest = F.max("batch").over(Window.partitionBy("id"))
-    return (
-        rows.withColumn("_mx", latest)
-        .filter(F.col("batch") == F.col("_mx"))
-        .select("id", "vec")
-    )
+    rows = _index(index_path).committed(spark, "vectors", versioned=False)
+    return _latest(rows, "id", "vec")
 
 
 def read_knn_edges(spark: SparkSession, index_path: str) -> DataFrame:
     """``(id, nb, score, rank)`` — the LIVE edge relation: per node,
-    the rows of its highest delta batch win (every delta writes a
-    node's full replacement list, so last-writer-wins per id is exact
-    — the ``compact_latest`` changelog rule, applied at id grain with
-    one bounded per-id window over ≤ versions·k rows)."""
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed graph at {index_path}")
-    # Prune uncommitted deltas (crash gap between delta write and
-    # pointer commit) before the last-writer-wins window, matching
-    # read_cms / the pointer-commit contract.
-    rows = spark.read.parquet(_edges_root(index_path, state)).filter(
-        F.col("batch") <= F.lit(state["last_batch_id"])
-    )
-    from pyspark.sql import Window
-
-    latest = F.max("batch").over(Window.partitionBy("id"))
-    return (
-        rows.withColumn("_mx", latest)
-        .filter(F.col("batch") == F.col("_mx"))
-        .select("id", "nb", "score", "rank")
-    )
+    the rows of its highest committed delta batch win (every delta
+    writes a node's full replacement list, so last-writer-wins per id
+    is exact — the ``compact_latest`` changelog rule, applied at id
+    grain with one bounded per-id window over ≤ versions·k rows)."""
+    rows = _index(index_path).committed(spark, "")
+    return _latest(rows, "id", "nb", "score", "rank")
 
 
-def _insert_batch(
-    spark: SparkSession,
-    index_path: str,
+def _write_batch(
+    index: PointerIndex,
     rows: DataFrame,
     batch_id: int,
+    state: dict,
+    *,
     k: int,
     work_degree: int,
     num_centroids: int,
@@ -128,29 +103,21 @@ def _insert_batch(
     n_entry: int,
     scale: int,
 ) -> None:
-    """The pure per-batch transition both the streaming sink and the
-    batch-parity loop run: build (first batch) or insert (later
-    batches), write the delta + vectors, commit the pointer."""
-    root = index_path.rstrip("/")
-    os.makedirs(root, exist_ok=True)
-    state = _read_state(index_path)
-    if state is not None and batch_id <= state["last_batch_id"]:
-        return  # replay under the same checkpoint: already absorbed
+    """Build (first batch) or insert (later batches); write the edge
+    delta and the batch's vectors."""
+    spark = rows.sparkSession
     rows = rows.select(
         F.col(rows.columns[0]).cast("long").alias("id"),
         as_double_array(rows.columns[1]).alias("vec"),
     ).localCheckpoint(eager=True)
-    if rows.isEmpty():
-        return
-    if state is None:
+    if state["last_batch_id"] < 0:  # the seeded state: nothing committed yet
         edges = knn_graph(
             rows, "id", "vec", k=k, num_centroids=num_centroids,
             work_degree=work_degree, scale=scale,
         )
-        state = {"version": 0, "edges": "edges-v0", "last_batch_id": -1}
     else:
-        corpus = read_knn_vectors(spark, index_path)
-        cur = read_knn_edges(spark, index_path).localCheckpoint(eager=True)
+        corpus = read_knn_vectors(spark, index.path)
+        cur = read_knn_edges(spark, index.path).localCheckpoint(eager=True)
         # NEW × CORPUS: each new node beam-walks the current graph to
         # its approximate neighborhood — corpus is never self-rejoined
         found = graph_search(
@@ -186,13 +153,21 @@ def _insert_batch(
         ).select("id", "nb", "score", "rank")
         edges = new_edges.unionByName(merged)
     edges.write.mode("overwrite").parquet(
-        os.path.join(root, state["edges"], f"batch={batch_id}")
+        os.path.join(index.path, state["dir"], f"batch={batch_id}")
     )
     rows.write.mode("overwrite").parquet(
-        os.path.join(_vectors_root(index_path), f"batch={batch_id}")
+        os.path.join(index.path, "vectors", f"batch={batch_id}")
     )
-    state["last_batch_id"] = batch_id
-    _commit_state(index_path, state)
+
+
+def _insert_batch(
+    spark: SparkSession, index_path: str, rows: DataFrame, batch_id: int, **knobs
+) -> None:
+    """One batch through the same ``apply`` + :func:`_write_batch`
+    transition the streaming sink runs — the batch-parity loop's entry
+    point. ``rows`` is ``(id, vec)`` by position."""
+    index = _index(index_path)
+    index.apply(rows, batch_id, {}, partial(_write_batch, index, **knobs))
 
 
 def streaming_knn_graph(
@@ -212,51 +187,24 @@ def streaming_knn_graph(
     """Maintain the kNN graph over a vector stream; returns the
     StreamingQuery. First batch = full NN-descent build; later batches
     = beam-search insertion (see module docstring)."""
-    kk = 4 * k if work_degree is None else work_degree
-
-    def _append(batch: DataFrame, batch_id: int) -> None:
-        _insert_batch(
-            batch.sparkSession, index_path,
-            batch.select(F.col(id_col), F.col(vec_col)), batch_id,
-            k=k, work_degree=kk, num_centroids=num_centroids,
-            ef=ef, hops=hops, n_entry=n_entry, scale=scale,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    index = _index(index_path)
+    write = partial(
+        _write_batch, index, k=k,
+        work_degree=4 * k if work_degree is None else work_degree,
+        num_centroids=num_centroids, ef=ef, hops=hops, n_entry=n_entry,
+        scale=scale,
     )
+    return index.sink(stream.select(id_col, vec_col), checkpoint, {}, write)
 
 
 def compact_knn_graph(spark: SparkSession, index_path: str) -> None:
     """Fold every delta into a fresh ``batch=-1`` base in a NEW version
-    directory and commit it atomically — the periodic maintenance that
-    bounds the per-id read window (and the small-file count) by
-    resetting the version history to one base; crash-safe like
-    ``refresh_ivf_index`` (pointer names only complete versions,
-    orphans swept here)."""
-    root = index_path.rstrip("/")
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed graph at {index_path}")
-    for d in os.listdir(root):
-        if d.startswith("edges-v") and d != state["edges"]:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    live = read_knn_edges(spark, index_path).localCheckpoint(eager=True)
-    new_version = state["version"] + 1
-    new_dir = f"edges-v{new_version}"
-    live.write.mode("overwrite").parquet(
-        os.path.join(root, new_dir, "batch=-1")
+    directory — the periodic maintenance that bounds the per-id read
+    window (and the small-file count) by resetting the version history
+    to one base."""
+    live = read_knn_edges(spark, index_path)
+    _index(index_path).swap(
+        lambda vdir: live.write.mode("overwrite").parquet(
+            os.path.join(vdir, "batch=-1")
+        )
     )
-    old = state["edges"]
-    _commit_state(
-        index_path,
-        {
-            "version": new_version,
-            "edges": new_dir,
-            "last_batch_id": state["last_batch_id"],
-        },
-    )
-    shutil.rmtree(os.path.join(root, old), ignore_errors=True)

@@ -2,82 +2,55 @@
 into a maintained band-postings index and emit verified near-duplicate
 pairs per micro-batch — the streaming side of
 ``operators/dedup.py:minhash_lsh_pairs_against`` (the batch
-new×corpus operator), under the SAME pointer-commit consistency design
-as ``streaming/ann.py``:
+new×corpus operator), as a :class:`~spark_ifs_spark.streaming._pointer.
+PointerIndex` (the pointer-commit contract, stated once in
+``streaming/_pointer.py``; the MinHash parameters are the guarded
+ones — a mismatch would yield silently wrong candidates):
 
-- ``current.json`` is the only commit point (atomic ``os.replace``),
-  carrying the live corpus version directory, the append
-  high-watermark, and the MinHash parameters (a reader/appender always
-  sees a complete, mutually-consistent index; mismatched parameters
-  are a hard error, not silent wrong candidates).
 - the index stores DIGESTS, never bodies: per-document band keys
   (``bands/batch=<id>``: id, band, bkey), shingle digests
   (``shingles/batch=<id>``: id, h — needed to verify candidates with
-  EXACT Jaccard) and shingle-set sizes (``sizes/batch=<id>``). Every
-  per-batch directory is written with ``mode("overwrite")`` — a
-  replayed batch rewrites the same bytes, idempotent by construction.
-- appends read the corpus THROUGH the watermark (``batch <=
-  last_batch_id`` partition filter), so an orphan directory from a
-  crash between the data write and the pointer update is invisible
-  until its own commit — the replay recomputes the same pairs against
-  the same corpus prefix.
+  EXACT Jaccard) and shingle-set sizes (``sizes/batch=<id>``).
+- appends read the corpus through its committed prefix, so the replay
+  of a batch whose pointer commit was lost recomputes the same pairs
+  against the same corpus.
 - the CORPUS IS NEVER SELF-JOINED: each batch pays new-batch
   signatures + one new×(corpus ∪ new) band-collision join; detected
-  pairs accumulate under ``pairs/batch=<id>`` (same overwrite
-  idempotence). Union over batches equals the batch operator's
-  all-pairs result at the same parameters (pinned by
-  ``tests/test_streaming_minhash.py``).
-- ``compact_minhash_index`` rewrites the accumulated postings into a
-  new version directory (``batch=-1``) and commits pointer + unchanged
-  watermark in one replace; old version deleted only after the commit,
-  orphans swept on the next compaction — the segment-compaction shape.
-  At 100 TB the compacted bands would additionally be written bucketed
-  on ``(band, bkey)`` (``sinks.write_bucketed``) so the per-batch
+  pairs accumulate under the unversioned ``pairs/batch=<id>``. Union
+  over batches equals the batch operator's all-pairs result at the
+  same parameters (pinned by ``tests/test_streaming_minhash.py``).
+- ``compact_minhash_index`` rewrites the accumulated postings into the
+  new version's base — the segment-compaction shape. At 100 TB the
+  compacted bands would additionally be written bucketed on
+  ``(band, bkey)`` (``sinks.write_bucketed``) so the per-batch
   collision join is exchange-free on the corpus side.
 
-Replay scope: the ``batch_id <= last_batch_id`` skip is valid under
-the SAME checkpoint (or an identical feed), exactly as documented in
-``streaming/ann.py``. No oracle entry — streaming-only surface (the
-package convention); parity, replay, crash windows and compaction are
-pytest-pinned.
+No oracle entry — streaming-only surface (the package convention);
+parity, replay, crash windows and compaction are pytest-pinned.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_ifs_spark.functions.hashing import md5_int60
 from spark_ifs_spark.operators.dedup import _lsh_bands, word_shingles
+from spark_ifs_spark.streaming._pointer import PointerIndex
 
-
-from spark_ifs_spark.streaming._pointer import (  # noqa: F401
-    _commit_state,
-    _pointer_path,
-    _read_state,
-)
-
-
-_EMPTY = {
+# the versioned corpus relations, with their schemas for a first batch
+# (nothing committed yet)
+_RELS = {
     "bands": "id long, band int, bkey long, batch int",
     "shingles": "id long, h long, batch int",
     "sizes": "id long, n_sh long, batch int",
 }
 
 
-def _read_corpus(
-    spark: SparkSession, root: str, corpus: str, rel: str, watermark: int
-) -> DataFrame:
-    """Committed prefix of a stored relation: partition-pruned to
-    ``batch <= watermark`` so orphan (uncommitted) batch directories
-    are invisible."""
-    path = os.path.join(root, corpus, rel)
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], _EMPTY[rel])
-    return spark.read.parquet(path).where(F.col("batch") <= watermark)
+def _index(index_path: str) -> PointerIndex:
+    return PointerIndex(index_path, "corpus-v", "index")
 
 
 def streaming_minhash_dedup(
@@ -96,9 +69,7 @@ def streaming_minhash_dedup(
     write verified near-dup pairs (``pairs/batch=<id>``: id_a, id_b,
     jaccard — id_a < id_b) of the batch against everything committed
     before it plus itself. Returns the StreamingQuery."""
-    spark = stream.sparkSession
-    root = index_path.rstrip("/")
-    os.makedirs(root, exist_ok=True)
+    index = _index(index_path)
     params = {
         "n": n,
         "num_hashes": num_hashes,
@@ -107,29 +78,8 @@ def streaming_minhash_dedup(
         "seed": seed,
     }
 
-    def _append(batch: DataFrame, batch_id: int) -> None:
-        state = _read_state(index_path)
-        if state is not None:
-            if state["params"] != params:
-                raise ValueError(
-                    f"index at {index_path} was built with {state['params']}, "
-                    f"appender configured with {params} — candidates would be "
-                    "silently wrong; rebuild or match parameters"
-                )
-            if batch_id <= state["last_batch_id"]:
-                # same-checkpoint replay skip — see streaming/ann.py for
-                # the cross-checkpoint scope caveat
-                return
-        if state is None:
-            if batch.isEmpty():
-                return
-            state = {
-                "version": 0,
-                "corpus": "corpus-v0",
-                "last_batch_id": -1,
-                "params": params,
-            }
-        wm = state["last_batch_id"]
+    def _append(batch: DataFrame, batch_id: int, state: dict) -> None:
+        spark = batch.sparkSession
         docs = batch.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
         shingles = word_shingles(docs, "id", "text", n)
         sh_new = shingles.select("id", md5_int60(F.col("sh")).alias("h")).persist()
@@ -140,9 +90,10 @@ def streaming_minhash_dedup(
         try:
             sizes_new = sh_new.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
 
-            corpus_bands = _read_corpus(spark, root, state["corpus"], "bands", wm)
-            corpus_sh = _read_corpus(spark, root, state["corpus"], "shingles", wm)
-            corpus_sizes = _read_corpus(spark, root, state["corpus"], "sizes", wm)
+            corpus_bands, corpus_sh, corpus_sizes = (
+                index.committed(spark, rel, schema, state)
+                for rel, schema in _RELS.items()
+            )
 
             right_bands = corpus_bands.select("id", "band", "bkey").unionByName(
                 bands_new.select("id", "band", "bkey")
@@ -183,11 +134,11 @@ def streaming_minhash_dedup(
                 .select("id_a", "id_b", "jaccard")
             )
 
-            cdir = os.path.join(root, state["corpus"])
+            cdir = os.path.join(index.path, state["dir"])
             # per-batch directory + overwrite = replay idempotence; pairs
             # first, pointer last — a crash leaves only invisible orphans
             pairs.write.mode("overwrite").parquet(
-                os.path.join(root, "pairs", f"batch={batch_id}")
+                os.path.join(index.path, "pairs", f"batch={batch_id}")
             )
             # the batch partition value comes from the DIRECTORY NAME —
             # never duplicated as a data column
@@ -203,60 +154,30 @@ def streaming_minhash_dedup(
         finally:
             sh_new.unpersist()
             bands_new.unpersist()
-        state["last_batch_id"] = batch_id
-        _commit_state(index_path, state)
 
-    return (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return index.sink(stream, checkpoint, params, _append)
 
 
 def compact_minhash_index(spark: SparkSession, index_path: str) -> None:
     """Rewrite the committed postings compacted into a new version
-    directory (``batch=-1``) and swing the pointer in one atomic
-    replace; watermark unchanged. Crash-safe at every instant — the
-    pointer always names a complete version; orphan versions are swept
-    here."""
-    root = index_path.rstrip("/")
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed index at {index_path}")
-    for d in os.listdir(root):
-        if d.startswith("corpus-v") and d != state["corpus"]:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    wm = state["last_batch_id"]
-    new_version = state["version"] + 1
-    new_dir = os.path.join(root, f"corpus-v{new_version}")
-    for rel in ("bands", "shingles", "sizes"):
-        df = _read_corpus(spark, root, state["corpus"], rel, wm)
-        df.drop("batch").write.mode("overwrite").parquet(
-            os.path.join(new_dir, rel, "batch=-1")
-        )
-    old = state["corpus"]
-    _commit_state(
-        index_path,
-        {
-            "version": new_version,
-            "corpus": f"corpus-v{new_version}",
-            "last_batch_id": wm,
-            "params": state["params"],
-        },
-    )
-    shutil.rmtree(os.path.join(root, old), ignore_errors=True)
+    directory (``batch=-1``)."""
+    index = _index(index_path)
+    state = index.state()
+    live = {rel: index.committed(spark, rel, state=state) for rel in _RELS}
+
+    def _write(vdir: str) -> None:
+        for rel, df in live.items():
+            df.drop("batch").write.mode("overwrite").parquet(
+                os.path.join(vdir, rel, "batch=-1")
+            )
+
+    index.swap(_write)
 
 
 def read_pairs(spark: SparkSession, index_path: str) -> DataFrame:
-    """All committed near-dup pairs (``batch <= watermark`` — orphan
-    pair directories from a crashed append are invisible)."""
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed index at {index_path}")
-    path = os.path.join(index_path.rstrip("/"), "pairs")
+    """All committed near-dup pairs (orphan pair directories from a
+    crashed append are invisible)."""
     return (
-        spark.read.parquet(path)
-        .where(F.col("batch") <= state["last_batch_id"])
+        _index(index_path).committed(spark, "pairs", versioned=False)
         .select("id_a", "id_b", "jaccard")
     )

@@ -1,7 +1,8 @@
 """Streaming corpus-profile maintenance: fold arriving documents into
 a per-source profile — doc/char/token counts plus a KMV
-distinct-vocabulary sketch — under the SAME pointer-commit consistency
-design as ``streaming/ann.py`` / ``streaming/minhash.py``.
+distinct-vocabulary sketch — as a :class:`~spark_ifs_spark.streaming.
+_pointer.PointerIndex` (the pointer-commit contract, stated once in
+``streaming/_pointer.py``).
 
 Why this shape works: every statistic in the profile is MERGEABLE —
 counts by addition, vocabulary by KMV sketch union
@@ -13,24 +14,10 @@ at all: each micro-batch writes only its own bounded partial
 ``counts/batch=<id>`` and ``kmv/batch=<id>``, and the READ step folds
 the committed partials — the profile of a 100 TB corpus is maintained
 by touching only the arriving bytes, with reads over
-(batches × sources × k) rows, never documents.
-
-Consistency contract (identical to the sibling modules):
-
-- ``current.json`` is the only commit point (atomic ``os.replace``)
-  carrying the live version directory, the append high-watermark, and
-  the sketch parameters (mismatched parameters are a hard error).
-- per-batch directories are written ``mode("overwrite")`` — a
-  replayed batch rewrites the same bytes, idempotent by construction;
-  the ``batch_id <= last_batch_id`` skip is valid under the same
-  checkpoint (cross-checkpoint scope caveat as in ``streaming/ann.py``).
-- readers partition-prune to ``batch <= watermark``, so an orphan
-  directory from a crash between data write and pointer update is
-  invisible until its own commit.
-- ``compact_profile`` folds the committed partials into a new version
-  directory (counts summed to one row per source, sketches re-top-k'd
-  to ≤ k rows per source — the KMV merge IS the compaction) and swings
-  the pointer atomically; old version removed only after the commit.
+(batches × sources × k) rows, never documents. ``compact_profile``
+writes that same fold as the new version's base (counts summed to one
+row per source, sketches re-top-k'd to ≤ k rows per source — the KMV
+merge IS the compaction).
 
 No oracle entry — streaming-only surface (the package convention);
 batch≡stream parity (exact, thanks to mergeability), replay, crash
@@ -40,31 +27,15 @@ windows and compaction are pinned in ``tests/test_streaming_profile.py``.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_ifs_spark.streaming._pointer import (  # noqa: F401
-    _commit_state,
-    _pointer_path,
-    _read_state,
-)
+from spark_ifs_spark.streaming._pointer import PointerIndex
 
 
-_EMPTY = {
-    "counts": "source string, n_docs long, n_chars long, n_tokens long, batch int",
-    "kmv": "source string, h long, batch int",
-}
-
-
-def _read_rel(
-    spark: SparkSession, root: str, version: str, rel: str, watermark: int
-) -> DataFrame:
-    path = os.path.join(root, version, rel)
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], _EMPTY[rel])
-    return spark.read.parquet(path).where(F.col("batch") <= watermark)
+def _index(profile_path: str) -> PointerIndex:
+    return PointerIndex(profile_path, "profile-v", "profile")
 
 
 def _batch_partial(
@@ -111,51 +82,37 @@ def streaming_profile(
     """Maintain the per-source corpus profile over a document stream.
     Append-only: each batch writes its own bounded partials; nothing
     reads the accumulated state. Returns the StreamingQuery."""
-    root = profile_path.rstrip("/")
-    os.makedirs(root, exist_ok=True)
-    params = {"k": k}
+    index = _index(profile_path)
 
-    def _append(batch: DataFrame, batch_id: int) -> None:
-        state = _read_state(profile_path)
-        if state is not None:
-            if state["params"] != params:
-                raise ValueError(
-                    f"profile at {profile_path} was built with "
-                    f"{state['params']}, appender configured with {params} — "
-                    "sketches would not merge; rebuild or match parameters"
-                )
-            if batch_id <= state["last_batch_id"]:
-                # same-checkpoint replay skip — scope caveat as in
-                # streaming/ann.py
-                return
-        if state is None:
-            if batch.isEmpty():
-                return
-            state = {
-                "version": 0,
-                "dir": "profile-v0",
-                "last_batch_id": -1,
-                "params": params,
-            }
-        counts, sketch = _batch_partial(batch, text_col, source_col, k)
-        vdir = os.path.join(root, state["dir"])
-        # data first, pointer last — a crash leaves invisible orphans;
-        # the batch partition value comes from the DIRECTORY NAME
-        counts.write.mode("overwrite").parquet(
-            os.path.join(vdir, "counts", f"batch={batch_id}")
-        )
-        sketch.write.mode("overwrite").parquet(
-            os.path.join(vdir, "kmv", f"batch={batch_id}")
-        )
-        state["last_batch_id"] = batch_id
-        _commit_state(profile_path, state)
+    def _append(batch: DataFrame, batch_id: int, state: dict) -> None:
+        vdir = os.path.join(index.path, state["dir"])
+        for rel, part in zip(
+            ("counts", "kmv"), _batch_partial(batch, text_col, source_col, k)
+        ):
+            part.write.mode("overwrite").parquet(
+                os.path.join(vdir, rel, f"batch={batch_id}")
+            )
 
-    return (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return index.sink(stream, checkpoint, {"k": k}, _append)
+
+
+def _fold(spark: SparkSession, index: PointerIndex) -> tuple[DataFrame, DataFrame, int]:
+    """(per-source count totals, merged ≤ k-per-source sketch, k) over
+    one consistent (version, watermark) snapshot."""
+    from spark_ifs_spark.operators.topk import salted_topk_per_key
+
+    state = index.state()
+    k = state["params"]["k"]
+    totals = index.committed(spark, "counts", state=state).groupBy("source").agg(
+        F.sum("n_docs").alias("n_docs"),
+        F.sum("n_chars").alias("n_chars"),
+        F.sum("n_tokens").alias("n_tokens"),
     )
+    merged = index.committed(spark, "kmv", state=state).select("source", "h").distinct()
+    sketch = salted_topk_per_key(
+        merged, ["source"], "h", k=k, descending=False
+    ).select("source", "h")
+    return totals, sketch, k
 
 
 def read_profile(spark: SparkSession, profile_path: str) -> DataFrame:
@@ -166,24 +123,9 @@ def read_profile(spark: SparkSession, profile_path: str) -> DataFrame:
     the standard ``(k−1)·2^60 / h_(k)`` estimator. Reads
     (batches × sources × k) rows, never documents."""
     from spark_ifs_spark.operators.sketches import kmv_estimate
-    from spark_ifs_spark.operators.topk import salted_topk_per_key
 
-    state = _read_state(profile_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed profile at {profile_path}")
-    k = state["params"]["k"]
-    root = profile_path.rstrip("/")
-    wm = state["last_batch_id"]
-    counts = _read_rel(spark, root, state["dir"], "counts", wm)
-    kmv = _read_rel(spark, root, state["dir"], "kmv", wm)
-    totals = counts.groupBy("source").agg(
-        F.sum("n_docs").alias("n_docs"),
-        F.sum("n_chars").alias("n_chars"),
-        F.sum("n_tokens").alias("n_tokens"),
-    )
-    merged = kmv.select("source", "h").distinct()
-    sketch = salted_topk_per_key(merged, ["source"], "h", k=k, descending=False)
-    est = kmv_estimate(sketch.select("source", "h"), ["source"], k=k)
+    totals, sketch, k = _fold(spark, _index(profile_path))
+    est = kmv_estimate(sketch, ["source"], k=k)
     # left join + fills: defensive against a source with counts but no
     # sketch rows (cannot happen through _batch_partial, but a profile
     # must never silently DROP a source it has counted)
@@ -197,49 +139,14 @@ def read_profile(spark: SparkSession, profile_path: str) -> DataFrame:
 
 def compact_profile(spark: SparkSession, profile_path: str) -> None:
     """Fold the committed partials into a new version directory — one
-    counts row and ≤ k sketch rows per source, under ``batch=-1`` —
-    and swing the pointer in one atomic replace (watermark unchanged).
-    The KMV merge IS the compaction: folded state answers identically
-    to the unfolded partials. Crash-safe at every instant; orphan
-    versions swept here."""
-    from spark_ifs_spark.operators.topk import salted_topk_per_key
+    counts row and ≤ k sketch rows per source, under ``batch=-1``. The
+    KMV merge IS the compaction: folded state answers identically to
+    the unfolded partials."""
+    index = _index(profile_path)
+    totals, sketch, _ = _fold(spark, index)
 
-    root = profile_path.rstrip("/")
-    state = _read_state(profile_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed profile at {profile_path}")
-    for d in os.listdir(root):
-        if d.startswith("profile-v") and d != state["dir"]:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    k = state["params"]["k"]
-    wm = state["last_batch_id"]
-    counts = _read_rel(spark, root, state["dir"], "counts", wm)
-    kmv = _read_rel(spark, root, state["dir"], "kmv", wm)
-    folded_counts = counts.groupBy("source").agg(
-        F.sum("n_docs").alias("n_docs"),
-        F.sum("n_chars").alias("n_chars"),
-        F.sum("n_tokens").alias("n_tokens"),
-    )
-    folded_kmv = salted_topk_per_key(
-        kmv.select("source", "h").distinct(), ["source"], "h", k=k,
-        descending=False,
-    ).select("source", "h")
-    new_version = state["version"] + 1
-    new_dir = os.path.join(root, f"profile-v{new_version}")
-    folded_counts.write.mode("overwrite").parquet(
-        os.path.join(new_dir, "counts", "batch=-1")
-    )
-    folded_kmv.write.mode("overwrite").parquet(
-        os.path.join(new_dir, "kmv", "batch=-1")
-    )
-    old = state["dir"]
-    _commit_state(
-        profile_path,
-        {
-            "version": new_version,
-            "dir": f"profile-v{new_version}",
-            "last_batch_id": wm,
-            "params": state["params"],
-        },
-    )
-    shutil.rmtree(os.path.join(root, old), ignore_errors=True)
+    def _write(vdir: str) -> None:
+        for rel, df in (("counts", totals), ("kmv", sketch)):
+            df.write.mode("overwrite").parquet(os.path.join(vdir, rel, "batch=-1"))
+
+    index.swap(_write)

@@ -1,6 +1,7 @@
 """Streaming sketch maintenance — the maintained-index family over
-unbounded streams, all under the SAME pointer-commit consistency
-design as ``streaming/profile.py`` / ``streaming/ann.py``:
+unbounded streams, each a :class:`~spark_ifs_spark.streaming._pointer.
+PointerIndex` (the pointer-commit contract, stated once in
+``streaming/_pointer.py``):
 
 - :func:`streaming_cms` — Count-Min grid (frequency, OVERcounts);
   state ``depth × width`` cells, merge = cell addition, parity =
@@ -15,43 +16,24 @@ design as ``streaming/profile.py`` / ``streaming/ann.py``:
   UNDERcounts); state ≤ k·P counters, merge = counter addition,
   parity = the undercount LAW (MG is not a pure function of the
   multiset; stated honestly, pinned by pytest).
+- :func:`streaming_kmv` — per-key K-Minimum-Values distinct sketches;
+  state keys·k rows, merge = bottom-k of the hash-distinct union,
+  parity = exact equality.
 
-The original module narrative, kept because the design generalizes to
-every member above: fold an arriving token/key stream into a persisted
-CMS grid — frequency estimation over an unbounded key space whose
-maintained state is ``depth × width`` cells.
-
-Why this is the cleanest possible maintained index: a Count-Min grid
-is mergeable by plain CELL ADDITION (``operators/sketches.py`` — the
-partial aggregate already IS the merge), so the APPEND step never
+Why these are the cleanest possible maintained indexes: each sketch is
+mergeable by its own partial aggregate (``operators/sketches.py`` —
+the partial aggregate already IS the merge), so the APPEND step never
 reads accumulated state at all: each micro-batch writes only its own
-``depth × width``-bounded grid partial into ``cells/batch=<id>``, and
-the READ step sums the committed partials. The estimate for any probe
-term over a 100 TB stream is maintained by touching only the arriving
-tokens, with reads over (batches × depth × width) rows — which
-``compact_cms`` periodically folds back to one grid.
+sketch-bounded partial into ``<rel>/batch=<id>``, and the READ step
+folds the committed partials. The estimate for any probe over a 100 TB
+stream is maintained by touching only the arriving rows, with reads
+over (batches × sketch size) rows — which the ``compact_*`` functions
+periodically fold back to one ``batch=-1`` base (the merge IS the
+compaction).
 
-Consistency contract (identical to the sibling modules):
-
-- ``current.json`` is the only commit point (atomic ``os.replace``),
-  carrying the live version directory, the append high-watermark, and
-  the hash parameters (mismatched depth/width/seed is a hard error —
-  grids under different hash families must never add).
-- per-batch directories are written ``mode("overwrite")`` — a replayed
-  batch rewrites the same bytes, idempotent by construction; the
-  ``batch_id <= last_batch_id`` skip is valid under the same
-  checkpoint (cross-checkpoint scope caveat as in ``streaming/ann.py``).
-- readers partition-prune to ``batch <= watermark``, so a crash
-  between data write and pointer update leaves an invisible orphan.
-- ``compact_cms`` folds the partials into a ``batch=-1`` base inside a
-  new version directory (cell addition IS the compaction) and swings
-  the pointer atomically; the old version is removed after the commit.
-
-Estimates from the maintained grid are identical to a one-shot
-``cms_build`` over the concatenated stream — exact mergeability, so
-batch ≡ stream parity is EQUALITY, pinned with replay / crash-window /
-compaction tests in ``tests/test_streaming_sketch.py``. No oracle
-entry — streaming-only surface (the package convention).
+Batch ≡ stream parity, replay, crash windows and compaction are pinned
+in ``tests/test_streaming_sketch.py`` and ``tests/test_streaming_kmv.py``.
+No oracle entry — streaming-only surface (the package convention).
 
 No counterpart in the reference; extension operator.
 """
@@ -59,18 +41,48 @@ No counterpart in the reference; extension operator.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_ifs_spark.streaming._pointer import (  # noqa: F401
-    _commit_state,
-    _pointer_path,
-    _read_state,
-)
+from spark_ifs_spark.streaming._pointer import PointerIndex
 
-_CELLS_SCHEMA = "r int, bucket long, c long, batch int"
+
+def _cms(index_path: str) -> PointerIndex:
+    return PointerIndex(index_path, "cms-v", "cms")
+
+
+def _rks(index_path: str) -> PointerIndex:
+    return PointerIndex(index_path, "rks-v", "rank sketch")
+
+
+def _hll(index_path: str) -> PointerIndex:
+    return PointerIndex(index_path, "hll-v", "hll")
+
+
+def _mg(index_path: str) -> PointerIndex:
+    return PointerIndex(index_path, "mg-v", "mg summary")
+
+
+def _kmv(index_path: str) -> PointerIndex:
+    return PointerIndex(index_path, "kmv-v", "kmv")
+
+
+def _base(df: DataFrame, vdir: str, rel: str) -> None:
+    """Write ``df`` as the compacted ``batch=-1`` base of ``rel``."""
+    df.write.mode("overwrite").parquet(os.path.join(vdir, rel, "batch=-1"))
+
+
+def _partial(index: PointerIndex, rel: str, build):
+    """The append step shared by the family: write ``build(batch)`` as
+    the batch's own partial of ``rel`` in the live version."""
+
+    def write(batch: DataFrame, batch_id: int, state: dict) -> None:
+        build(batch).write.mode("overwrite").parquet(
+            os.path.join(index.path, state["dir"], rel, f"batch={batch_id}")
+        )
+
+    return write
 
 
 def streaming_cms(
@@ -87,46 +99,13 @@ def streaming_cms(
     nothing reads the accumulated state. Returns the StreamingQuery."""
     from spark_ifs_spark.operators.sketches import cms_build
 
-    root = index_path.rstrip("/")
-    os.makedirs(root, exist_ok=True)
-    params = {"depth": depth, "width": width, "seed": seed}
-
-    def _append(batch: DataFrame, batch_id: int) -> None:
-        state = _read_state(index_path)
-        if state is not None:
-            if state["params"] != params:
-                raise ValueError(
-                    f"cms at {index_path} was built with {state['params']}, "
-                    f"appender configured with {params} — grids under "
-                    "different hash families must not add; rebuild or match"
-                )
-            if batch_id <= state["last_batch_id"]:
-                return  # same-checkpoint replay — already absorbed
-        # An empty batch adds nothing to any cell: never write an empty
-        # partial or churn the pointer for it (the watermark advances
-        # lazily with the next non-empty batch) — otherwise idle streams
-        # grow read-side batch fan-in until compaction for no content.
-        if batch.isEmpty():
-            return
-        if state is None:
-            state = {
-                "version": 0,
-                "dir": "cms-v0",
-                "last_batch_id": -1,
-                "params": params,
-            }
-        cells = cms_build(batch, col, depth=depth, width=width, seed=seed)
-        cells.write.mode("overwrite").parquet(
-            os.path.join(root, state["dir"], "cells", f"batch={batch_id}")
-        )
-        state["last_batch_id"] = batch_id
-        _commit_state(index_path, state)
-
-    return (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    index = _cms(index_path)
+    return index.sink(
+        stream, checkpoint, {"depth": depth, "width": width, "seed": seed},
+        _partial(
+            index, "cells",
+            lambda b: cms_build(b, col, depth=depth, width=width, seed=seed),
+        ),
     )
 
 
@@ -134,17 +113,8 @@ def read_cms(spark: SparkSession, index_path: str) -> DataFrame:
     """``(r, bucket, c)`` — the live grid, summed from one consistent
     (version, watermark) snapshot of the committed batch partials.
     Bounded by ``depth × width`` cells regardless of stream size."""
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed cms at {index_path}")
-    path = os.path.join(index_path.rstrip("/"), state["dir"], "cells")
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], _CELLS_SCHEMA).select(
-            "r", "bucket", "c"
-        )
     return (
-        spark.read.parquet(path)
-        .where(F.col("batch") <= state["last_batch_id"])
+        _cms(index_path).committed(spark, "cells")
         .groupBy("r", "bucket")
         .agg(F.sum("c").alias("c"))
     )
@@ -158,10 +128,7 @@ def cms_index_estimate(
     a caller cannot probe with mismatched arithmetic)."""
     from spark_ifs_spark.operators.sketches import cms_estimate
 
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed cms at {index_path}")
-    p = state["params"]
+    p = _cms(index_path).state()["params"]
     return cms_estimate(
         read_cms(spark, index_path), terms,
         depth=p["depth"], width=p["width"], seed=p["seed"],
@@ -170,37 +137,11 @@ def cms_index_estimate(
 
 def compact_cms(spark: SparkSession, index_path: str) -> None:
     """Fold the committed batch partials into a single ``batch=-1``
-    base inside a NEW version directory and commit it atomically —
-    cell addition IS the compaction, so the folded grid is exactly the
-    pre-compaction read. Crash-safe like the sibling modules: the
-    pointer names only complete versions; orphans are swept here."""
-    root = index_path.rstrip("/")
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed cms at {index_path}")
-    for d in os.listdir(root):
-        if d.startswith("cms-v") and d != state["dir"]:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    live = read_cms(spark, index_path).localCheckpoint(eager=True)
-    new_version = state["version"] + 1
-    new_dir = f"cms-v{new_version}"
-    live.write.mode("overwrite").parquet(
-        os.path.join(root, new_dir, "cells", "batch=-1")
-    )
-    old = state["dir"]
-    _commit_state(
-        index_path,
-        {
-            "version": new_version,
-            "dir": new_dir,
-            "last_batch_id": state["last_batch_id"],
-            "params": state["params"],
-        },
-    )
-    shutil.rmtree(os.path.join(root, old), ignore_errors=True)
-
-
-_RANK_SCHEMA = "h long, v long, batch int"
+    base inside a NEW version directory — cell addition IS the
+    compaction, so the folded grid is exactly the pre-compaction
+    read."""
+    live = read_cms(spark, index_path)
+    _cms(index_path).swap(lambda vdir: _base(live, vdir, "cells"))
 
 
 def streaming_rank_sketch(
@@ -214,53 +155,20 @@ def streaming_rank_sketch(
     """Maintain a bottom-k-by-hash rank sketch
     (:func:`~spark_ifs_spark.operators.sketches.rank_sketch`) over a
     keyed value stream — quantile estimation whose maintained state is
-    ``k`` rows regardless of stream size, under the same pointer-commit
-    contract as :func:`streaming_cms`. Append-only like the CMS: each
-    micro-batch writes its OWN k-bounded bottom-k partial (the batch's
-    sketch), never reading accumulated state; the KMV merge law — the k
-    smallest hashes of a union are contained in the union of each
-    part's k smallest — makes the read-side fold EXACTLY the one-shot
-    sketch of the concatenated stream, so batch ≡ stream parity is
-    equality (pinned in ``tests/test_streaming_sketch.py``). Returns
-    the StreamingQuery."""
+    ``k`` rows regardless of stream size. Append-only like the CMS:
+    each micro-batch writes its OWN k-bounded bottom-k partial (the
+    batch's sketch), never reading accumulated state; the KMV merge
+    law — the k smallest hashes of a union are contained in the union
+    of each part's k smallest — makes the read-side fold EXACTLY the
+    one-shot sketch of the concatenated stream, so batch ≡ stream
+    parity is equality (pinned in ``tests/test_streaming_sketch.py``).
+    Returns the StreamingQuery."""
     from spark_ifs_spark.operators.sketches import rank_sketch
 
-    root = index_path.rstrip("/")
-    os.makedirs(root, exist_ok=True)
-    params = {"k": k}
-
-    def _append(batch: DataFrame, batch_id: int) -> None:
-        state = _read_state(index_path)
-        if state is not None:
-            if state["params"] != params:
-                raise ValueError(
-                    f"rank sketch at {index_path} was built with "
-                    f"{state['params']}, appender configured with {params} — "
-                    "sketches under different k must not fold; rebuild or match"
-                )
-            if batch_id <= state["last_batch_id"]:
-                return  # same-checkpoint replay — already absorbed
-        if batch.isEmpty():
-            return  # nothing to sketch: no empty partial, no pointer churn
-        if state is None:
-            state = {
-                "version": 0,
-                "dir": "rks-v0",
-                "last_batch_id": -1,
-                "params": params,
-            }
-        part = rank_sketch(batch, key_col, val_col, k=k)
-        part.write.mode("overwrite").parquet(
-            os.path.join(root, state["dir"], "rows", f"batch={batch_id}")
-        )
-        state["last_batch_id"] = batch_id
-        _commit_state(index_path, state)
-
-    return (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    index = _rks(index_path)
+    return index.sink(
+        stream, checkpoint, {"k": k},
+        _partial(index, "rows", lambda b: rank_sketch(b, key_col, val_col, k=k)),
     )
 
 
@@ -271,16 +179,10 @@ def read_rank_sketch(spark: SparkSession, index_path: str) -> DataFrame:
     folds that back to k), never the stream."""
     from spark_ifs_spark.operators.topk import topk_per_key
 
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed rank sketch at {index_path}")
-    path = os.path.join(index_path.rstrip("/"), state["dir"], "rows")
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], _RANK_SCHEMA).select("h", "v")
-    rows = (
-        spark.read.parquet(path)
-        .where(F.col("batch") <= state["last_batch_id"])
-        .select(F.lit(0).alias("_g"), "h", "v")
+    index = _rks(index_path)
+    state = index.state()
+    rows = index.committed(spark, "rows", state=state).select(
+        F.lit(0).alias("_g"), "h", "v"
     )
     return topk_per_key(
         rows, ["_g"], "h", k=state["params"]["k"], descending=False
@@ -289,33 +191,10 @@ def read_rank_sketch(spark: SparkSession, index_path: str) -> DataFrame:
 
 def compact_rank_sketch(spark: SparkSession, index_path: str) -> None:
     """Fold the committed partials into a single ``batch=-1`` base in a
-    NEW version directory and swing the pointer atomically — the KMV
-    merge is exact, so the folded sketch equals the pre-compaction
-    read. Crash-safe like the sibling modules."""
-    root = index_path.rstrip("/")
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed rank sketch at {index_path}")
-    for d in os.listdir(root):
-        if d.startswith("rks-v") and d != state["dir"]:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    live = read_rank_sketch(spark, index_path).localCheckpoint(eager=True)
-    new_version = state["version"] + 1
-    new_dir = f"rks-v{new_version}"
-    live.write.mode("overwrite").parquet(
-        os.path.join(root, new_dir, "rows", "batch=-1")
-    )
-    old = state["dir"]
-    _commit_state(
-        index_path,
-        {
-            "version": new_version,
-            "dir": new_dir,
-            "last_batch_id": state["last_batch_id"],
-            "params": state["params"],
-        },
-    )
-    shutil.rmtree(os.path.join(root, old), ignore_errors=True)
+    NEW version directory — the KMV merge is exact, so the folded
+    sketch equals the pre-compaction read."""
+    live = read_rank_sketch(spark, index_path)
+    _rks(index_path).swap(lambda vdir: _base(live, vdir, "rows"))
 
 
 def streaming_hll(
@@ -335,47 +214,17 @@ def streaming_hll(
     read-side fold is EXACTLY the one-shot register file of the
     concatenated stream — batch ≡ stream parity is equality, like the
     CMS grid and the rank sketch (idempotence even makes double-counted
-    rows harmless, the property neither of those has). Same
-    pointer-commit contract as the sibling indexes. Returns the
+    rows harmless, the property neither of those has). Returns the
     StreamingQuery."""
     from spark_ifs_spark.operators.sketches import hll_registers
 
-    root = index_path.rstrip("/")
-    os.makedirs(root, exist_ok=True)
-    params = {"p": p, "keys": list(key_cols), "value": value_col}
-
-    def _append(batch: DataFrame, batch_id: int) -> None:
-        state = _read_state(index_path)
-        if state is not None:
-            if state["params"] != params:
-                raise ValueError(
-                    f"hll at {index_path} was built with {state['params']}, "
-                    f"appender configured with {params} — register files "
-                    "under different p/keys must not merge; rebuild or match"
-                )
-            if batch_id <= state["last_batch_id"]:
-                return  # same-checkpoint replay — already absorbed
-        if batch.isEmpty():
-            return  # no empty partial, no pointer churn
-        if state is None:
-            state = {
-                "version": 0,
-                "dir": "hll-v0",
-                "last_batch_id": -1,
-                "params": params,
-            }
-        part = hll_registers(batch, list(key_cols), value_col, p=p)
-        part.write.mode("overwrite").parquet(
-            os.path.join(root, state["dir"], "regs", f"batch={batch_id}")
-        )
-        state["last_batch_id"] = batch_id
-        _commit_state(index_path, state)
-
-    return (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    index = _hll(index_path)
+    return index.sink(
+        stream, checkpoint, {"p": p, "keys": list(key_cols), "value": value_col},
+        _partial(
+            index, "regs",
+            lambda b: hll_registers(b, list(key_cols), value_col, p=p),
+        ),
     )
 
 
@@ -383,15 +232,11 @@ def read_hll_registers(spark: SparkSession, index_path: str) -> DataFrame:
     """``(key…, _b, _M)`` — the live register file: bucket-max over one
     consistent (version, watermark) snapshot of the committed partials.
     Bounded by keys × 2^p cells (× batch fan-in until ``compact_hll``)."""
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed hll at {index_path}")
-    keys = state["params"]["keys"]
-    path = os.path.join(index_path.rstrip("/"), state["dir"], "regs")
+    index = _hll(index_path)
+    state = index.state()
     return (
-        spark.read.parquet(path)
-        .where(F.col("batch") <= state["last_batch_id"])
-        .groupBy(*keys, "_b")
+        index.committed(spark, "regs", state=state)
+        .groupBy(*state["params"]["keys"], "_b")
         .agg(F.max("_M").alias("_M"))
     )
 
@@ -401,45 +246,18 @@ def hll_index_estimate(spark: SparkSession, index_path: str) -> DataFrame:
     register file, with the index's own committed p."""
     from spark_ifs_spark.operators.sketches import hll_estimate
 
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed hll at {index_path}")
+    params = _hll(index_path).state()["params"]
     return hll_estimate(
-        read_hll_registers(spark, index_path),
-        state["params"]["keys"],
-        p=state["params"]["p"],
+        read_hll_registers(spark, index_path), params["keys"], p=params["p"]
     )
 
 
 def compact_hll(spark: SparkSession, index_path: str) -> None:
     """Fold the committed partials into a single ``batch=-1`` base in a
     NEW version directory — bucket-max IS the compaction, so the folded
-    register file equals the pre-compaction read. Crash-safe like the
-    sibling modules."""
-    root = index_path.rstrip("/")
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed hll at {index_path}")
-    for d in os.listdir(root):
-        if d.startswith("hll-v") and d != state["dir"]:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    live = read_hll_registers(spark, index_path).localCheckpoint(eager=True)
-    new_version = state["version"] + 1
-    new_dir = f"hll-v{new_version}"
-    live.write.mode("overwrite").parquet(
-        os.path.join(root, new_dir, "regs", "batch=-1")
-    )
-    old = state["dir"]
-    _commit_state(
-        index_path,
-        {
-            "version": new_version,
-            "dir": new_dir,
-            "last_batch_id": state["last_batch_id"],
-            "params": state["params"],
-        },
-    )
-    shutil.rmtree(os.path.join(root, old), ignore_errors=True)
+    register file equals the pre-compaction read."""
+    live = read_hll_registers(spark, index_path)
+    _hll(index_path).swap(lambda vdir: _base(live, vdir, "regs"))
 
 
 def streaming_mg(
@@ -468,49 +286,18 @@ def streaming_mg(
     pinned by the undercount-law pytest. Returns the StreamingQuery."""
     from spark_ifs_spark.operators.sketches import mg_summary
 
-    root = index_path.rstrip("/")
-    os.makedirs(root, exist_ok=True)
-    params = {"k": k}
+    index = _mg(index_path)
 
-    def _append(batch: DataFrame, batch_id: int) -> None:
-        state = _read_state(index_path)
-        if state is not None:
-            if state["params"] != params:
-                raise ValueError(
-                    f"mg summary at {index_path} was built with "
-                    f"{state['params']}, appender configured with {params} — "
-                    "summaries under different k must not add; rebuild or match"
-                )
-            if batch_id <= state["last_batch_id"]:
-                return  # same-checkpoint replay — already absorbed
-        if batch.isEmpty():
-            return  # no empty partial, no pointer churn
-        if state is None:
-            state = {
-                "version": 0,
-                "dir": "mg-v0",
-                "last_batch_id": -1,
-                "params": params,
-                "n_rows": 0,
-            }
+    def _append(batch: DataFrame, batch_id: int, state: dict) -> None:
         rows = batch.select(F.col(col)).localCheckpoint(eager=True)
-        n_b = rows.count()
-        part = mg_summary(rows, col, k=k)
-        part.write.mode("overwrite").parquet(
-            os.path.join(root, state["dir"], "counters", f"batch={batch_id}")
+        mg_summary(rows, col, k=k).write.mode("overwrite").parquet(
+            os.path.join(index.path, state["dir"], "counters", f"batch={batch_id}")
         )
         # replay rewrites the same bytes AND must not double-count n:
         # n_rows advances only with the watermark, in the same commit
-        state["last_batch_id"] = batch_id
-        state["n_rows"] = state["n_rows"] + n_b
-        _commit_state(index_path, state)
+        state["n_rows"] = state.get("n_rows", 0) + rows.count()
 
-    return (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return index.sink(stream, checkpoint, {"k": k}, _append)
 
 
 def read_mg(spark: SparkSession, index_path: str) -> DataFrame:
@@ -518,17 +305,8 @@ def read_mg(spark: SparkSession, index_path: str) -> DataFrame:
     over one consistent (version, watermark) snapshot of the committed
     partials. Bounded by batches·k·P rows (``compact_mg`` folds that
     back to k)."""
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed mg summary at {index_path}")
-    path = os.path.join(index_path.rstrip("/"), state["dir"], "counters")
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], "term string, c_low long").select(
-            "term", "c_low"
-        )
     return (
-        spark.read.parquet(path)
-        .where(F.col("batch") <= state["last_batch_id"])
+        _mg(index_path).committed(spark, "counters")
         .groupBy("term")
         .agg(F.sum("c_low").alias("c_low"))
     )
@@ -546,9 +324,7 @@ def mg_index_candidates(
     ``k+1 > 1e6/phi_ppm`` (else the slack swallows the threshold)."""
     if not 1 <= phi_ppm <= 1_000_000:
         raise ValueError(f"phi_ppm must be in [1, 1e6], got {phi_ppm}")
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed mg summary at {index_path}")
+    state = _mg(index_path).state()
     k = state["params"]["k"]
     if (k + 1) * phi_ppm <= 1_000_000:
         raise ValueError(
@@ -569,15 +345,9 @@ def compact_mg(spark: SparkSession, index_path: str) -> None:
     non-positives). NOT value-preserving — compression spends more of
     the deficit budget — but LAW-preserving: the total deficit stays
     ≤ n/(k+1) (the mergeable-summaries theorem), which is the only
-    property readers rely on. Crash-safe like the sibling modules."""
-    root = index_path.rstrip("/")
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed mg summary at {index_path}")
-    for d in os.listdir(root):
-        if d.startswith("mg-v") and d != state["dir"]:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    k = state["params"]["k"]
+    property readers rely on. ``n_rows`` carries over unchanged."""
+    index = _mg(index_path)
+    k = index.state()["params"]["k"]
     live = read_mg(spark, index_path).collect()  # ≤ batches·k·P rows
     counters = {r["term"]: r["c_low"] for r in live}
     if len(counters) > k:
@@ -587,23 +357,7 @@ def compact_mg(spark: SparkSession, index_path: str) -> None:
         [(t, int(c)) for t, c in sorted(counters.items())],
         "term string, c_low long",
     )
-    new_version = state["version"] + 1
-    new_dir = f"mg-v{new_version}"
-    folded.write.mode("overwrite").parquet(
-        os.path.join(root, new_dir, "counters", "batch=-1")
-    )
-    old = state["dir"]
-    _commit_state(
-        index_path,
-        {
-            "version": new_version,
-            "dir": new_dir,
-            "last_batch_id": state["last_batch_id"],
-            "params": state["params"],
-            "n_rows": state["n_rows"],
-        },
-    )
-    shutil.rmtree(os.path.join(root, old), ignore_errors=True)
+    index.swap(lambda vdir: _base(folded, vdir, "counters"))
 
 
 def rank_sketch_index_quantiles(
@@ -662,57 +416,26 @@ def streaming_kmv(
 ):
     """Maintain per-key K-Minimum-Values distinct sketches
     (:func:`~spark_ifs_spark.operators.sketches.kmv_sketch`) over a
-    keyed value stream — the one sketch in the maintained family that
-    had no streaming index (CMS, rank, HLL, MG do). Each micro-batch
-    writes its OWN k-bounded-per-key partial (the batch's sketch),
-    never reading accumulated state; the KMV merge law — the k
-    smallest distinct hashes of a union are contained in the union of
-    each part's k smallest — makes the read-side fold EXACTLY the
-    one-shot sketch of the concatenated stream, so batch ≡ stream
-    parity is row equality (like the rank sketch; the hash-distinct
-    additionally makes replayed VALUES harmless — only a replayed
-    BATCH pointer needs the watermark guard). Same pointer-commit
-    contract as the sibling indexes. Returns the StreamingQuery."""
+    keyed value stream. Each micro-batch writes its OWN
+    k-bounded-per-key partial (the batch's sketch), never reading
+    accumulated state; the KMV merge law — the k smallest distinct
+    hashes of a union are contained in the union of each part's k
+    smallest — makes the read-side fold EXACTLY the one-shot sketch of
+    the concatenated stream, so batch ≡ stream parity is row equality
+    (like the rank sketch; the hash-distinct additionally makes
+    replayed VALUES harmless — only a replayed BATCH needs the
+    watermark guard). Returns the StreamingQuery."""
     from spark_ifs_spark.operators.sketches import kmv_sketch
 
-    root = index_path.rstrip("/")
-    os.makedirs(root, exist_ok=True)
-    params = {"k": k, "keys": list(key_cols), "value": value_col}
-
-    def _append(batch: DataFrame, batch_id: int) -> None:
-        state = _read_state(index_path)
-        if state is not None:
-            if state["params"] != params:
-                raise ValueError(
-                    f"kmv at {index_path} was built with {state['params']}, "
-                    f"appender configured with {params} — sketches under "
-                    "different k/keys must not fold; rebuild or match"
-                )
-            if batch_id <= state["last_batch_id"]:
-                return  # same-checkpoint replay — already absorbed
-        if batch.isEmpty():
-            return  # no empty partial, no pointer churn
-        if state is None:
-            state = {
-                "version": 0,
-                "dir": "kmv-v0",
-                "last_batch_id": -1,
-                "params": params,
-            }
-        part = kmv_sketch(batch, list(key_cols), value_col, k=k).select(
-            *key_cols, "h"
-        )
-        part.write.mode("overwrite").parquet(
-            os.path.join(root, state["dir"], "rows", f"batch={batch_id}")
-        )
-        state["last_batch_id"] = batch_id
-        _commit_state(index_path, state)
-
-    return (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    index = _kmv(index_path)
+    return index.sink(
+        stream, checkpoint, {"k": k, "keys": list(key_cols), "value": value_col},
+        _partial(
+            index, "rows",
+            lambda b: kmv_sketch(b, list(key_cols), value_col, k=k).select(
+                *key_cols, "h"
+            ),
+        ),
     )
 
 
@@ -723,14 +446,11 @@ def read_kmv(spark: SparkSession, index_path: str) -> DataFrame:
     (``compact_kmv`` folds that back to keys·k), never the stream."""
     from spark_ifs_spark.operators.topk import salted_topk_per_key
 
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed kmv at {index_path}")
+    index = _kmv(index_path)
+    state = index.state()
     keys = state["params"]["keys"]
-    path = os.path.join(index_path.rstrip("/"), state["dir"], "rows")
     rows = (
-        spark.read.parquet(path)
-        .where(F.col("batch") <= state["last_batch_id"])
+        index.committed(spark, "rows", state=state)
         .select(*keys, "h")
         .distinct()  # the same hash may survive in several partials
     )
@@ -745,42 +465,15 @@ def kmv_index_estimate(spark: SparkSession, index_path: str) -> DataFrame:
     mirror of :func:`hll_index_estimate`."""
     from spark_ifs_spark.operators.sketches import kmv_estimate
 
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed kmv at {index_path}")
+    params = _kmv(index_path).state()["params"]
     return kmv_estimate(
-        read_kmv(spark, index_path),
-        state["params"]["keys"],
-        k=state["params"]["k"],
+        read_kmv(spark, index_path), params["keys"], k=params["k"]
     )
 
 
 def compact_kmv(spark: SparkSession, index_path: str) -> None:
     """Fold the committed partials into a single ``batch=-1`` base in a
-    NEW version directory and swing the pointer atomically — the KMV
-    merge is exact, so the folded sketch equals the pre-compaction
-    read. Crash-safe like the sibling modules."""
-    root = index_path.rstrip("/")
-    state = _read_state(index_path)
-    if state is None:
-        raise FileNotFoundError(f"no committed kmv at {index_path}")
-    for d in os.listdir(root):
-        if d.startswith("kmv-v") and d != state["dir"]:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    live = read_kmv(spark, index_path).localCheckpoint(eager=True)
-    new_version = state["version"] + 1
-    new_dir = f"kmv-v{new_version}"
-    live.write.mode("overwrite").parquet(
-        os.path.join(root, new_dir, "rows", "batch=-1")
-    )
-    old = state["dir"]
-    _commit_state(
-        index_path,
-        {
-            "version": new_version,
-            "dir": new_dir,
-            "last_batch_id": state["last_batch_id"],
-            "params": state["params"],
-        },
-    )
-    shutil.rmtree(os.path.join(root, old), ignore_errors=True)
+    NEW version directory — the KMV merge is exact, so the folded
+    sketch equals the pre-compaction read."""
+    live = read_kmv(spark, index_path)
+    _kmv(index_path).swap(lambda vdir: _base(live, vdir, "rows"))

@@ -567,66 +567,3 @@ def test_upsert_view_stale_batch_does_not_regress(spark, tmp_path):
     run()
     got = {r["k"]: (r["v"], r["payload"]) for r in spark.read.parquet(str(view)).collect()}
     assert got == {1: (50, "new")}
-
-
-def test_streaming_hll_folds_batches_to_exact_register_file(spark, tmp_path):
-    """Fold two real micro-batches into the HLL register store; the
-    store must equal the one-shot batch register file BIT-FOR-BIT
-    (merge law), hence identical estimates; replaying a batch must not
-    change anything (max is idempotent — at-least-once safe)."""
-    from spark_ifs_spark.operators.sketches import hll_distinct, hll_registers
-    from spark_ifs_spark.streaming.events import streaming_hll
-
-    src = tmp_path / "feed"
-    store = tmp_path / "regs"
-    b1 = spark.createDataFrame(
-        [("a", i) for i in range(400)] + [("b", i) for i in range(50)],
-        "key string, v long",
-    )
-    b2 = spark.createDataFrame(
-        [("a", i) for i in range(200, 600)] + [("c", i) for i in range(30)],
-        "key string, v long",
-    )
-    b1.write.parquet(str(src / "f1.parquet"))
-    schema = b1.schema
-
-    def run(ckpt):
-        stream = spark.readStream.schema(schema).parquet(str(src) + "/*")
-        q = streaming_hll(stream, ["key"], "v", str(store), str(tmp_path / ckpt), p=7)
-        q.awaitTermination(120)
-
-    run("ck")
-    b2.write.parquet(str(src / "f2.parquet"))
-    run("ck")
-
-    folded = {
-        (r["key"], r["_b"]): r["_M"]
-        for r in spark.read.parquet(str(store)).collect()
-    }
-    oneshot = {
-        (r["key"], r["_b"]): r["_M"]
-        for r in hll_registers(b1.unionByName(b2), ["key"], "v", p=7).collect()
-    }
-    assert folded == oneshot  # bit-identical registers -> identical estimates
-
-    # replay the whole feed against the SAME store with a fresh
-    # checkpoint: every batch re-merges, registers must not move
-    run("ck_replay")
-    replayed = {
-        (r["key"], r["_b"]): r["_M"]
-        for r in spark.read.parquet(str(store)).collect()
-    }
-    assert replayed == oneshot
-
-    # and the estimates from the store match the batch operator
-    from spark_ifs_spark.operators.sketches import hll_estimate
-
-    est_stream = {
-        r["key"]: r["est_distinct"]
-        for r in hll_estimate(spark.read.parquet(str(store)), ["key"], p=7).collect()
-    }
-    est_batch = {
-        r["key"]: r["est_distinct"]
-        for r in hll_distinct(b1.unionByName(b2), ["key"], "v", p=7).collect()
-    }
-    assert est_stream == est_batch

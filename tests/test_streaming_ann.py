@@ -9,8 +9,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from spark_ifs_spark.streaming._pointer import _pointer_path
 from spark_ifs_spark.streaming.ann import (
-    _pointer_path,
     corpus_dir,
     probe_ivf_index,
     read_centroids,
@@ -131,7 +131,7 @@ def test_orphan_version_from_crashed_refresh_is_swept(spark, tmp_path):
     refresh_ivf_index(spark, str(store), num_centroids=4)
     assert len(_index_rows(spark, store)) == 25
     assert not (orphan / "batch=-1" / "junk").exists()
-    assert json.load(open(_pointer_path(str(store))))["corpus"] == "corpus-v1"
+    assert json.load(open(_pointer_path(str(store))))["dir"] == "corpus-v1"
 
 
 def test_probe_prunes_partitions_and_ranks(spark, tmp_path):
@@ -166,7 +166,7 @@ def test_refresh_is_idempotent_and_commits_atomically(spark, tmp_path):
     c2, r2 = read_centroids(str(store)), sorted(_index_rows(spark, store))
     assert c1 == c2 and r1 == r2
     state = json.load(open(_pointer_path(str(store))))
-    assert state["version"] == 2 and state["corpus"] == "corpus-v2"
+    assert state["version"] == 2 and state["dir"] == "corpus-v2"
     # exactly one version directory remains
     dirs = [d for d in os.listdir(store) if d.startswith("corpus-v")]
     assert dirs == ["corpus-v2"]
@@ -231,3 +231,36 @@ def test_hot_cell_append_still_prunes_and_refresh_redistributes(spark, tmp_path)
         for r in spark.read.parquet(str(batch_path)).collect()
     }
     assert _index_rows(spark, store) == oneshot and len(oneshot) == 70
+
+
+def test_lost_pointer_update_is_invisible_to_probe_and_refresh(spark, tmp_path):
+    """Crash window: batch 1's cells written but its pointer commit
+    lost. The probe must see only the committed batch; a refresh must
+    not absorb the orphan into the compacted version; and replaying
+    batch 1 from the pre-crash checkpoint must then land it exactly
+    once."""
+    import shutil
+
+    src, store = tmp_path / "feed", tmp_path / "idx"
+    b1, b2 = _mk_batch(spark, range(0, 25)), _mk_batch(spark, range(25, 40))
+    b1.write.parquet(str(src / "f1.parquet"))
+    _run(spark, src, store, tmp_path / "ck", b1.schema, refresh_every=0)
+    shutil.copytree(tmp_path / "ck", tmp_path / "ck_crash")
+    b2.write.parquet(str(src / "f2.parquet"))
+    _run(spark, src, store, tmp_path / "ck", b1.schema, refresh_every=0)
+    p = _pointer_path(str(store))
+    state = json.load(open(p))
+    assert state["last_batch_id"] == 1
+    state["last_batch_id"] = 0  # roll back: batch 1 "uncommitted"
+    json.dump(state, open(p, "w"))
+
+    every_cell = probe_ivf_index(spark, str(store), _vec(7), k=100, probe=4)
+    ids = [r["id"] for r in every_cell.collect()]
+    assert len(ids) == 25 and set(ids) == set(range(25))
+
+    refresh_ivf_index(spark, str(store), num_centroids=4)
+    _run(spark, src, store, tmp_path / "ck_crash", b1.schema, refresh_every=0)
+    ids = [
+        r["id"] for r in spark.read.parquet(corpus_dir(str(store))).collect()
+    ]
+    assert len(ids) == 40 and set(ids) == set(range(40))

@@ -8,8 +8,8 @@ from __future__ import annotations
 import json
 import os
 
+from spark_ifs_spark.streaming._pointer import _pointer_path
 from spark_ifs_spark.streaming.decontam import (
-    _pointer_path,
     compact_decontam_index,
     flag_contaminated,
     streaming_decontam_index,

@@ -11,8 +11,8 @@ import os
 
 import pytest
 
+from spark_ifs_spark.streaming._pointer import _pointer_path
 from spark_ifs_spark.streaming.sketch import (
-    _pointer_path,
     compact_kmv,
     kmv_index_estimate,
     read_kmv,

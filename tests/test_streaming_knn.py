@@ -11,9 +11,9 @@ import os
 
 from pyspark.sql import functions as F
 
+from spark_ifs_spark.streaming._pointer import _pointer_path
 from spark_ifs_spark.streaming.knn import (
     _insert_batch,
-    _pointer_path,
     compact_knn_graph,
     read_knn_edges,
     read_knn_vectors,
@@ -126,7 +126,7 @@ def test_streaming_knn_replay_absorbed_and_compaction(spark, tmp_path):
     compact_knn_graph(spark, str(store))
     assert _edges(spark, store) == before
     state = json.load(open(_pointer_path(str(store))))
-    assert state["edges"] == "edges-v1"
+    assert state["dir"] == "edges-v1"
     # base-only layout: exactly one batch directory remains
     dirs = os.listdir(str(store / "edges-v1"))
     assert dirs == ["batch=-1"]
@@ -148,7 +148,7 @@ def test_streaming_knn_orphan_version_swept(spark, tmp_path):
     compact_knn_graph(spark, str(store))
     assert _edges(spark, store) == before
     assert not (orphan / "batch=-1" / "junk").exists()
-    assert json.load(open(_pointer_path(str(store))))["edges"] == "edges-v1"
+    assert json.load(open(_pointer_path(str(store))))["dir"] == "edges-v1"
 
 
 def test_vector_redelivery_updates_not_duplicates(spark, tmp_path):

@@ -9,8 +9,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from spark_ifs_spark.streaming._pointer import _pointer_path
 from spark_ifs_spark.streaming.minhash import (
-    _pointer_path,
     compact_minhash_index,
     read_pairs,
     streaming_minhash_dedup,

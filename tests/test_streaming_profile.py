@@ -9,8 +9,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from spark_ifs_spark.streaming._pointer import _pointer_path
 from spark_ifs_spark.streaming.profile import (
-    _pointer_path,
     compact_profile,
     read_profile,
     streaming_profile,

@@ -11,8 +11,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from spark_ifs_spark.streaming._pointer import _pointer_path
 from spark_ifs_spark.streaming.sketch import (
-    _pointer_path,
     cms_index_estimate,
     compact_cms,
     read_cms,
@@ -319,24 +319,6 @@ def test_rank_sketch_k_mismatch_is_hard_error(spark, tmp_path):
         q.awaitTermination(120)
 
 
-def test_empty_batch_never_writes_or_commits(spark, tmp_path):
-    """An empty micro-batch must not write an empty partial or churn
-    the pointer once the index exists (both the CMS and the rank
-    sketch hoist the isEmpty early-return above state handling)."""
-    src, store, _ = _feed_all(spark, tmp_path)
-    p = _pointer_path(str(store))
-    before_state = json.load(open(p))
-    before_grid = _grid(spark, store)
-    empty = _df(spark, 0, 0)
-    empty.write.parquet(str(src / "f_empty.parquet"))
-    _run(spark, src, store, store.parent / "ck", empty.schema)
-    assert json.load(open(p)) == before_state
-    assert _grid(spark, store) == before_grid
-    cells = store / "cms-v0" / "cells"
-    batches = sorted(d for d in os.listdir(cells) if d.startswith("batch="))
-    assert batches == ["batch=0", "batch=1"]
-
-
 # -- streaming Misra-Gries maintenance ----------------------------------------
 
 MGK = 16
@@ -372,7 +354,7 @@ def test_streamed_mg_obeys_undercount_law(spark, tmp_path):
     summary is not a pure function of the multiset): the folded read
     obeys c(x) − n/(k+1) ≤ c_low(x) ≤ c(x) on the concatenated stream,
     and the pointer's n_rows is the exact stream length."""
-    from spark_ifs_spark.streaming.sketch import _read_state
+    from spark_ifs_spark.streaming._pointer import _read_state
 
     _, store, all_rows = _feed_mg(spark, tmp_path)
     n = all_rows.count()
@@ -408,7 +390,7 @@ def test_mg_index_candidates_no_false_negatives(spark, tmp_path):
 
 
 def test_mg_replay_absorbed_and_n_not_double_counted(spark, tmp_path):
-    from spark_ifs_spark.streaming.sketch import _read_state
+    from spark_ifs_spark.streaming._pointer import _read_state
 
     src, store, all_rows = _feed_mg(spark, tmp_path)
     before = _mg_counters(spark, store)

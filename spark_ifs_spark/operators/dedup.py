@@ -606,7 +606,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 60) -> DataFr
     # from ONE SQL string: the Column-API spelling issued ~12 driver-
     # blocking py4j calls per bit (~1.5 s of pure construction overhead
     # per run at bits=60) for the identical expression values — the
-    # ivf_cell_expr / all_pairs_mi lesson applied here
+    # ivf.cell_expr / all_pairs_mi lesson applied here
     votes = toks.groupBy("id").agg(
         *[
             F.expr(

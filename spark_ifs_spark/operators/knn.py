@@ -12,7 +12,7 @@ the current edge list — never all-pairs:
 
 - **seeds**: (a) all pairs within an IVF cell (deterministic seed
   centroids — the ``num_centroids`` smallest ids, the package's
-  ``ivf_centroids`` convention from ``similarity.py:590``), the
+  ``ivf.seed_centroids`` convention), the
   locality boost; and (b) a deterministic stand-in for NN-descent's
   random init: a ring over ``row_number`` positions *within hash
   groups* (``id % groups``), so the window is group-bounded — no
@@ -51,7 +51,7 @@ sample, the ``minhash_recall_audit`` discipline.
 hash-joins keyed on node id; candidate relations are (id, nb) pairs —
 k²-bounded per node; the only windows are per-node (degree ≤ 2k rows)
 and per-hash-group (seed ring). At cluster scale, seed cells come from
-``scaled_num_centroids`` (constant cell size ⇒ linear seed cost) and
+``ivf.scaled_num_centroids`` (constant cell size ⇒ linear seed cost) and
 the quantized-vector relation is cached across rounds; both leave the
 per-round plan unchanged.
 
@@ -61,11 +61,10 @@ search surface); extension operator.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_ifs_spark.operators import ivf
 from spark_ifs_spark.operators.similarity import as_double_array
 from spark_ifs_spark.operators.topk import salted_topk_per_key, topk_per_key
 
@@ -145,216 +144,19 @@ def _ring_seed(ids: DataFrame, k: int, groups: int) -> DataFrame:
     ).select("id", "nb")
 
 
-#: past this many seed cells the crossJoin-expression assignment flips
-#: to the broadcast-numpy GEMM kernel — same threshold and same reason
-#: as ``similarity.ivf_assign_np`` (SemDeDup): with corpus-scaled cells
-#: (nc = n/128) the expression path scores n·nc pairs, which is
-#: QUADRATIC in n (measured: 22 s at 20k nodes → 346 s at 200k before
-#: this kernel). The kernel computes the SAME argmax exactly (see
-#: ``_cell_assign_np``), so results are path-independent (pytest-pinned)
-#: and every gate SF (nc = 16) stays on the expression path the oracle
-#: mirrors.
-NP_ASSIGN_MIN_CENTROIDS = 65
-
-
-def _cell_assign_np(q: DataFrame, cents_rows: list) -> DataFrame:
-    """``(id, cell)`` via broadcast-numpy argmax — EXACT integer-state
-    equivalence with the expression path: the quantized components and
-    the int64 dot are integer-valued with |dot| ≤ d·(scale·max|x|)²
-    < 2^53, so the float64 BLAS GEMM computes them exactly; the
-    division by the identical √ssq_c doubles is IEEE-exact; ties
-    (equal doubles) fall to ``np.argmax``'s first-occurrence rule over
-    cid-ascending columns = the expression path's cid-asc tie-break.
-    ``cs == 0`` columns are forced to +0.0 (the expression's literal)."""
-    import numpy as np
-
-    cents_rows = sorted(cents_rows, key=lambda r: r[0])
-    cids = np.array([r[0] for r in cents_rows], dtype=np.int64)
-    C = np.array([r[1] for r in cents_rows], dtype=np.float64)
-    cs = np.array([r[2] for r in cents_rows], dtype=np.float64)
-    # DIVIDE by √cs exactly as the expression path does — a precomputed
-    # reciprocal multiply (dot · fl(1/√cs)) is NOT the same rounding as
-    # fl(dot/√cs) and could flip an ulp-near centroid tie between the
-    # two paths; cs == 0 divisors are patched to 1 and their columns
-    # forced to the expression's literal +0.0 afterwards
-    zero = cs == 0.0
-    rt = np.sqrt(np.where(zero, 1.0, cs))
-    sc = q.sparkSession.sparkContext
-    bc = sc.broadcast((cids, C, rt, zero))
-
-    def assign(batches):
-        import pandas as pd
-
-        bcids, bC, brt, bzero = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(list(pdf["qv"]), dtype=np.float64)
-            s = (X @ bC.T) / brt[None, :]
-            if bzero.any():
-                s[:, bzero] = 0.0
-            best = np.argmax(s, axis=1)
-            yield pd.DataFrame(
-                {"id": pdf["id"].to_numpy(), "cell": bcids[best]}
-            )
-
-    return q.select("id", "qv").mapInPandas(assign, "id long, cell long")
-
-
-#: past this many seed cells the DRIVER COLLECT of the centroid
-#: relation itself becomes the bottleneck — with corpus-scaled cells
-#: (nc = n/128) the collected+broadcast centroid list grows linearly
-#: with the corpus (tens of GB of driver/broadcast footprint at true
-#: 100 TB), so the assignment flips to the TWO-LEVEL coarse-quantizer
-#: path (`_cell_assign_two_level`): only ~√nc coarse centroids are
-#: ever collected, fine centroids stay a distributed relation, and
-#: each point GEMM-scores only the fine centroids of its top-`probes`
-#: coarse cells (the FAISS IVF coarse-quantizer shape). Every gate SF
-#: stays far below this threshold, on the flat oracle-mirrored path;
-#: the two-level path is pytest-pinned to the flat argmax (exactly
-#: equal when probes covers all coarse cells, empirically equal on
-#: the test fixtures at the default probes).
-TWO_LEVEL_MIN_CENTROIDS = 1024
-
-#: coarse cells probed per point on the two-level path. Probing more
-#: cells approaches the flat argmax (probes = all coarse cells IS the
-#: flat argmax, provably); 8 recovers it exactly on every measured
-#: fixture. This is a SEED-QUALITY knob, not a correctness one — a
-#: point assigned to its 2nd-best cell still gets within-cell seed
-#: pairs, and the NN-descent rounds + recall audit own final quality.
-TWO_LEVEL_PROBES = 8
-
-
-def _topp_coarse_np(q: DataFrame, coarse_rows: list, probes: int) -> DataFrame:
-    """``(id, coarse)`` — each point's top-``probes`` coarse cells by
-    the same integer-exact GEMM score as `_cell_assign_np`, ties
-    cid-ascending (np.argsort stable over cid-asc columns)."""
-    import numpy as np
-
-    coarse_rows = sorted(coarse_rows, key=lambda r: r[0])
-    cids = np.array([r[0] for r in coarse_rows], dtype=np.int64)
-    C = np.array([r[1] for r in coarse_rows], dtype=np.float64)
-    cs = np.array([r[2] for r in coarse_rows], dtype=np.float64)
-    zero = cs == 0.0
-    rt = np.sqrt(np.where(zero, 1.0, cs))
-    p = min(probes, len(coarse_rows))
-    sc = q.sparkSession.sparkContext
-    bc = sc.broadcast((cids, C, rt, zero, p))
-
-    def probe(batches):
-        import pandas as pd
-
-        bcids, bC, brt, bzero, bp = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(list(pdf["qv"]), dtype=np.float64)
-            s = (X @ bC.T) / brt[None, :]
-            if bzero.any():
-                s[:, bzero] = 0.0
-            # stable argsort on -score over cid-asc columns = (score
-            # DESC, cid ASC), the expression path's tie order
-            top = np.argsort(-s, axis=1, kind="stable")[:, :bp]
-            ids = np.repeat(pdf["id"].to_numpy(), bp)
-            yield pd.DataFrame({"id": ids, "coarse": bcids[top].ravel()})
-
-    return q.select("id", "qv").mapInPandas(probe, "id long, coarse long")
-
-
-def _cell_assign_two_level(
-    q: DataFrame, cents: DataFrame, probes: int | None = None
-) -> DataFrame:
-    """``(id, cell)`` without ever collecting the fine-centroid
-    relation: (1) the ``⌈√nc⌉`` smallest-cid fine centroids become the
-    COARSE quantizer (the only driver collect — √-scale); (2) fine
-    centroids assign to their top-1 coarse cell with the exact GEMM
-    kernel (distributed, coarse broadcast); (3) each point probes its
-    top-``probes`` coarse cells; (4) the point GEMM-scores only the
-    fine centroids in probed cells — an expression-path integer dot +
-    ``topk_per_key(k=1, cid-asc)``, the SAME scoring and tie-break as
-    the flat path over the surviving candidate set. Per-point work is
-    ~probes·√nc scorings instead of nc; driver/broadcast footprint is
-    √nc centroids instead of nc. With ``probes`` ≥ the coarse-cell
-    count the candidate set is complete and the result EQUALS the flat
-    argmax (pytest-pinned); at fewer probes it is the standard IVF
-    coarse-quantizer approximation — acceptable here because cell
-    assignment only SEEDS the NN-descent, whose recall is audited."""
-    # late-bound default so tests (and callers) can steer the module
-    # knob without re-binding a def-time default
-    if probes is None:
-        probes = TWO_LEVEL_PROBES
-    nc = cents.count()
-    ncc = max(1, math.isqrt(max(nc - 1, 0)) + 1 if nc > 1 else 1)
-    coarse = cents.orderBy("cid").limit(ncc)
-    coarse_rows = [
-        (r["cid"], list(r["_cq"]), r["_cs"]) for r in coarse.collect()
-    ]
-    fine_q = cents.select(F.col("cid").alias("id"), F.col("_cq").alias("qv"))
-    f2c = _cell_assign_np(fine_q, coarse_rows).select(
-        F.col("id").alias("cid"), F.col("cell").alias("coarse")
-    )
-    pprobe = _topp_coarse_np(q, coarse_rows, probes)
-    cand = pprobe.join(f2c, "coarse").select("id", "cid")
-    dot = F.aggregate(
-        F.zip_with("qv", "_cq", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-    cscore = F.when(F.col("_cs") == 0, F.lit(0.0)).otherwise(
-        F.col("_dot").cast("double") / F.sqrt(F.col("_cs").cast("double"))
-    )
-    scored = (
-        cand.join(q.select("id", "qv"), "id")
-        .join(cents, "cid")
-        .withColumn("_dot", dot)
-        .select("id", "cid", cscore.alias("cscore"))
-    )
-    return topk_per_key(
-        scored, ["id"], "cscore", k=1, tiebreak_cols=["cid"]
-    ).select("id", F.col("cid").alias("cell"))
-
-
 def _cell_seed(q: DataFrame, num_centroids: int) -> DataFrame:
-    """All (ordered) pairs sharing an IVF cell. Seed centroids are the
-    ``num_centroids`` smallest ids (the ``ivf_centroids`` convention);
-    assignment is argmax over ``dot/√ssq_c`` (the row norm cancels out
-    of the cosine argmax), centroid-id-asc ties — a broadcast join plus
-    a per-node k=1 window at gate cell counts, the exact-equivalent
-    numpy GEMM kernel past ``NP_ASSIGN_MIN_CENTROIDS`` (the n·nc
-    expression scoring is quadratic under corpus-scaled cells), and
-    the two-level coarse-quantizer past ``TWO_LEVEL_MIN_CENTROIDS``
-    (the nc-sized driver collect is itself linear in the corpus under
-    nc = n/128 — the 100 TB swap). No corpus shuffle on any path."""
-    cents = (
-        q.orderBy("id")
-        .limit(num_centroids)
-        .select(
-            F.col("id").alias("cid"),
-            F.col("qv").alias("_cq"),
-            F.col("ssq").alias("_cs"),
-        )
+    """All (ordered) pairs sharing an IVF cell: the ``ivf`` ladder with
+    the INT scoring (exact int64 ``dot/√ssq_c``, cid-asc ties) over the
+    integer-state relation, seeded with the ``num_centroids`` smallest
+    ids. No corpus shuffle on any rung."""
+    # materialized once: both self-join sides, and the isnotnull(cell)
+    # filter the join infers, would each re-score every vector
+    cells = (
+        ivf.scaled_tagged_cells(q, "id", "qv", num_centroids, ivf.INT)
+        .select("id", "cell")
+        .localCheckpoint(eager=True)
     )
-    if num_centroids >= TWO_LEVEL_MIN_CENTROIDS:
-        assign = _cell_assign_two_level(q, cents.localCheckpoint(eager=True))
-    elif num_centroids >= NP_ASSIGN_MIN_CENTROIDS:
-        rows = [(r["cid"], list(r["_cq"]), r["_cs"]) for r in cents.collect()]
-        assign = _cell_assign_np(q, rows)
-    else:
-        dot = F.aggregate(
-            F.zip_with("qv", "_cq", lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        )
-        cscore = F.when(F.col("_cs") == 0, F.lit(0.0)).otherwise(
-            F.col("_dot").cast("double") / F.sqrt(F.col("_cs").cast("double"))
-        )
-        assign = topk_per_key(
-            q.crossJoin(F.broadcast(cents))
-            .withColumn("_dot", dot)
-            .select("id", "cid", cscore.alias("cscore")),
-            ["id"], "cscore", k=1, tiebreak_cols=["cid"],
-        ).select("id", F.col("cid").alias("cell"))
-    a, b = assign.alias("a"), assign.alias("b")
+    a, b = cells.alias("a"), cells.alias("b")
     return a.join(
         b, (F.col("a.cell") == F.col("b.cell")) & (F.col("a.id") != F.col("b.id"))
     ).select(F.col("a.id").alias("id"), F.col("b.id").alias("nb"))
@@ -380,7 +182,7 @@ def knn_graph(
     # Descent-internal top-ks use the single-window topk_per_key, not
     # the salted two-stage variant: every per-key input here is
     # degree-BOUNDED by construction ((2K)² candidates, ≤ 2K reverse
-    # edges, num_centroids assignment rows per id), so skew is
+    # edges), so skew is
     # impossible and the second window would be pure overhead. The
     # recall audit's truth top-k (per-key input = the whole corpus)
     # stays salted.

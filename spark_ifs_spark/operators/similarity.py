@@ -15,6 +15,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spark_ifs_spark.operators import ivf
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -155,7 +157,7 @@ def _blocked_pairs_kernel(
     any corpus size by raising ``num_blocks``. The B(B+1)/2 groups are
     the irreducible cost of an EXACT all-pairs query; for approximate
     near-dup at extreme scale, gate with :func:`hyperplane_lsh_buckets`
-    or :func:`ivf_cells` instead (trade recall for replication 1).
+    or the ``ivf`` cells instead (trade recall for replication 1).
     """
     import numpy as np
     import pandas as pd
@@ -605,269 +607,6 @@ def lsh_candidate_pairs(
     )
 
 
-def ivf_centroids(
-    df: DataFrame, id_col: str, vec_col: str, num_centroids: int = 16
-) -> list[tuple[int, list[float]]]:
-    """Deterministic seed centroids: the vectors of the ``num_centroids``
-    smallest ids — no Lloyd iterations, bit-reproducible across engines
-    (and across the DuckDB oracle). Production IVF would k-means these;
-    every downstream plan shape is identical either way."""
-    return [
-        (int(r["id"]), [float(x) for x in r["v"]])
-        for r in df.select(
-            F.col(id_col).alias("id"), as_double_array(vec_col).alias("v")
-        )
-        .orderBy("id")
-        .limit(num_centroids)
-        .collect()
-    ]
-
-
-def ivf_cell_expr(cents: Sequence[tuple[int, Sequence[float]]], vec_col: str) -> Column:
-    """Map-side cell-assignment expression: argmax over
-    ``dot(v, unit_centroid)`` with centroid-id-asc tie-break.
-
-    The row norm cancels out of the cosine argmax (it is a positive
-    constant across centroids), so assignment is ``num_centroids`` plain
-    dot products against unit-normalized centroid literals — a pure
-    per-row projection: no shuffle, no join, no broadcast of any
-    per-row state. This is what keeps IVF viable at 100 TB: tagging or
-    probing touches each row once, and the cell column doubles as the
-    write partition key (see ``sources.sinks.write_ivf_corpus``).
-    """
-    units = []
-    for cid, cvec in cents:
-        n = math.sqrt(sum(x * x for x in cvec)) or 1.0
-        units.append((cid, [float(x) / n for x in cvec]))
-    # Built as ONE SQL string, not nested Column calls: the Column API
-    # spelling issued a py4j round-trip per centroid-coordinate literal
-    # (k x d calls, ~0.8 s of driver time per 16 x 64 expression before
-    # Spark even sees the plan); parsing one string is a single call for
-    # the IDENTICAL expression tree — same fold order, same doubles
-    # (repr round-trips exactly), same struct-max tie-break.
-    v = f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
-    structs = []
-    for cid, cunit in units:
-        arr = ",".join(repr(x) + "D" for x in cunit)
-        dot = (
-            f"aggregate(zip_with({v}, array({arr}), (x, y) -> x * y), "
-            f"0.0D, (acc, x) -> acc + x)"
-        )
-        structs.append(f"struct({dot} AS dot, {-cid} AS ncid)")
-    return -F.expr(f"array_max(array({','.join(structs)}))")["ncid"]
-
-
-def scaled_num_centroids(
-    n: int, target_cell_size: int = 128, floor: int = 16
-) -> int:
-    """Corpus-scaled centroid count: ``max(floor, n // target_cell_size)``.
-
-    Production SemDeDup keeps the *cell size* (not the cell count)
-    roughly constant as the corpus grows, so in-cell pair compute stays
-    ``n × target_cell_size`` — linear — instead of ``n²/k`` with a
-    fixed ``k`` (which is quadratic in n). At gate scale (≤ 2k vectors)
-    this returns the floor, so seeded-centroid oracles are unchanged;
-    at 500k vectors it returns ~3.9k cells.
-    """
-    return max(int(floor), int(n) // int(target_cell_size))
-
-
-def ivf_assign_np(
-    df: DataFrame,
-    cents: Sequence[tuple[int, Sequence[float]]],
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """``(id, cell, v)`` via a broadcast-numpy argmax assigner.
-
-    Same assignment rule as :func:`ivf_cell_expr` (argmax of
-    ``dot(v, unit_centroid)``, centroid-id-asc ties) but evaluated as
-    ONE Arrow ``mapInPandas`` GEMM against a broadcast ``k × d``
-    centroid matrix. This is the large-``k`` path: past ~64 centroids
-    the flat literal expression tree hits the janino compile wall
-    (~O(k·d) code), while the numpy kernel is O(1) plan size and
-    BLAS-speed per batch. Still a pure per-row projection — no
-    shuffle, no join; the centroid matrix ships once per executor.
-    """
-    import numpy as np
-    import pandas as pd
-
-    ordered = sorted(((int(cid), list(map(float, cv))) for cid, cv in cents))
-    cids = np.array([cid for cid, _ in ordered], dtype=np.int64)
-    M = np.array([cv for _, cv in ordered], dtype=np.float64)
-    M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-300)
-    src = df.select(F.col(id_col).alias("id"), as_double_array(vec_col).alias("v"))
-
-    def _assign(batches):
-        for pdf in batches:
-            V = np.array(pdf["v"].tolist(), dtype=np.float64)
-            # cids ascend, so argmax's first-max rule == smallest-cid tie-break
-            cells = cids[np.argmax(V @ M.T, axis=1)] if len(pdf) else np.array([], dtype=np.int64)
-            yield pd.DataFrame({"id": pdf["id"], "cell": cells, "v": pdf["v"]})
-
-    return src.mapInPandas(_assign, "id long, cell long, v array<double>")
-
-
-# past this many centroids the literal argmax expression tree is
-# janino-compile-bound; switch to the broadcast-numpy assigner
-_EXPR_ASSIGN_LIMIT = 64
-
-#: past this many centroids the nc-sized DRIVER COLLECT inside
-#: ``ivf_centroids`` is itself the scale problem (corpus-scaled
-#: nc = n/128 makes the collected+broadcast list linear in the corpus
-#: — tens of GB at true 100 TB), so ``scaled_tagged_cells`` flips to
-#: the two-level coarse-quantizer path: only ~√nc coarse centroids are
-#: collected and each point GEMM-scores the fine centroids of its
-#: top-``probes`` coarse cells (the FAISS IVF shape; the integer-state
-#: twin with a provable equality pin lives in ``knn.py``). Every gate
-#: SF stays far below this threshold on the flat oracle-mirrored path.
-SIM_TWO_LEVEL_MIN_CENTROIDS = 1024
-
-#: coarse cells probed per point on the two-level path — a seed/cell-
-#: QUALITY knob (a point landing in its 2nd-best cell still dedups/
-#: mines within a near-best cell), pinned to reproduce the flat
-#: assignment on the test fixtures.
-SIM_TWO_LEVEL_PROBES = 8
-
-
-def _probe_coarse_np(
-    src: DataFrame, coarse: Sequence[tuple[int, Sequence[float]]], probes: int
-) -> DataFrame:
-    """``(id, coarse)`` — each point's top-``probes`` coarse cells by
-    ``dot(v, unit_centroid)``, cid-asc ties (stable argsort over
-    cid-ascending columns), the :func:`ivf_assign_np` scoring."""
-    import numpy as np
-    import pandas as pd
-
-    ordered = sorted(((int(cid), list(map(float, cv))) for cid, cv in coarse))
-    cids = np.array([cid for cid, _ in ordered], dtype=np.int64)
-    M = np.array([cv for _, cv in ordered], dtype=np.float64)
-    M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-300)
-    p = min(int(probes), len(ordered))
-    bc = src.sparkSession.sparkContext.broadcast((cids, M, p))
-
-    def _probe(batches):
-        bcids, bM, bp = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(pdf["v"].tolist(), dtype=np.float64)
-            top = np.argsort(-(V @ bM.T), axis=1, kind="stable")[:, :bp]
-            yield pd.DataFrame(
-                {
-                    "id": np.repeat(pdf["id"].to_numpy(), bp),
-                    "coarse": bcids[top].ravel(),
-                }
-            )
-
-    return src.select("id", "v").mapInPandas(_probe, "id long, coarse long")
-
-
-def scaled_tagged_cells(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    num_centroids: int,
-    probes: int = SIM_TWO_LEVEL_PROBES,
-) -> DataFrame:
-    """``(id, cell, v)`` with the centroid collect BOUNDED: the flat
-    :func:`ivf_centroids` + :func:`tagged_cells` path below
-    ``SIM_TWO_LEVEL_MIN_CENTROIDS``, the two-level coarse quantizer
-    above it — (1) collect only the ``⌈√nc⌉`` smallest-id vectors as
-    the coarse quantizer, (2) assign the nc fine centroids (a
-    DISTRIBUTED ``limit(nc)`` relation, never collected) to their
-    top-1 coarse cell via :func:`ivf_assign_np`, (3) probe each
-    point's top-``probes`` coarse cells, (4) score the point against
-    only the fine centroids in probed cells (unit-centroid dot, the
-    same rule) and keep the ``(dot DESC, cid ASC)`` argbest.
-
-    Per-point work drops from nc to ~probes·√nc scorings; the driver/
-    broadcast footprint drops from nc to √nc vectors. With ``probes``
-    covering every coarse cell the candidate set is complete and the
-    argmax rule is identical; the path-parity pin is empirical on the
-    fixtures (float summation order differs between the GEMM and the
-    expression dot at ulp level — real-embedding argmax gaps are far
-    wider; the provably-exact integer-state twin is
-    ``knn._cell_assign_two_level``)."""
-    if num_centroids < SIM_TWO_LEVEL_MIN_CENTROIDS:
-        cents = ivf_centroids(df, id_col, vec_col, num_centroids)
-        return tagged_cells(df, cents, id_col, vec_col)
-    src = df.select(
-        F.col(id_col).alias("id"), as_double_array(vec_col).alias("v")
-    ).localCheckpoint(eager=True)
-    ncc = max(1, math.isqrt(max(int(num_centroids) - 1, 0)) + 1)
-    coarse = ivf_centroids(src, "id", "v", ncc)
-    fines = src.orderBy("id").limit(int(num_centroids))
-    f2c = ivf_assign_np(fines, coarse, "id", "v").select(
-        F.col("id").alias("fid"),
-        F.col("cell").alias("coarse"),
-        F.col("v").alias("fv"),
-    )
-    cand = _probe_coarse_np(src, coarse, probes).join(f2c, "coarse")
-    fnorm = F.sqrt(
-        F.aggregate(
-            F.col("fv"), F.lit(0.0), lambda a, x: a + x * x
-        )
-    )
-    unit = F.transform(
-        F.col("fv"),
-        lambda x: x / F.greatest(F.col("_fn"), F.lit(1e-300)),
-    )
-    scored = (
-        cand.join(src, "id")
-        .withColumn("_fn", fnorm)
-        .withColumn(
-            "score",
-            F.aggregate(
-                F.zip_with(F.col("v"), unit, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ),
-        )
-        .select("id", "fid", "score")
-    )
-    from spark_ifs_spark.operators.topk import topk_per_key
-
-    best = topk_per_key(
-        scored, ["id"], "score", k=1, tiebreak_cols=["fid"]
-    ).select("id", F.col("fid").alias("cell"))
-    return best.join(src, "id").select("id", "cell", "v")
-
-
-def tagged_cells(
-    df: DataFrame,
-    cents: Sequence[tuple[int, Sequence[float]]],
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """``(id, cell, v)`` choosing the assigner by centroid count:
-    the codegen'd literal expression (oracle-exact, zero Python) up to
-    ``_EXPR_ASSIGN_LIMIT`` centroids, the broadcast-numpy kernel
-    (:func:`ivf_assign_np`) beyond it."""
-    if len(cents) <= _EXPR_ASSIGN_LIMIT:
-        return df.select(
-            F.col(id_col).alias("id"),
-            ivf_cell_expr(cents, vec_col).alias("cell"),
-            as_double_array(vec_col).alias("v"),
-        )
-    return ivf_assign_np(df, cents, id_col, vec_col)
-
-
-def ivf_cells(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    num_centroids: int = 16,
-) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
-    """IVF-Flat inverted-file assignment: ``((id, cell) DataFrame,
-    centroids)`` — :func:`ivf_centroids` + :func:`ivf_cell_expr`."""
-    cents = ivf_centroids(df, id_col, vec_col, num_centroids)
-    cells = df.select(
-        F.col(id_col).alias("id"), ivf_cell_expr(cents, vec_col).alias("cell")
-    )
-    return cells, cents
-
-
 def ivf_centroids_kmeans(
     df: DataFrame,
     id_col: str,
@@ -876,7 +615,8 @@ def ivf_centroids_kmeans(
     iters: int = 2,
 ) -> list[tuple[int, list[float]]]:
     """Lloyd-trained IVF centroids: start from the deterministic seed
-    centroids (:func:`ivf_centroids`) and run ``iters`` k-means
+    centroids (:func:`~spark_ifs_spark.operators.ivf.seed_centroids`)
+    and run ``iters`` k-means
     iterations, each being exactly the :func:`kmeans_step` plan — one
     corpus scan with map-side cell assignment + one hash aggregate of
     ``num_centroids × dims`` cells. The driver holds only the ``k × d``
@@ -890,10 +630,10 @@ def ivf_centroids_kmeans(
     by ``test_similarity.py::test_ivf_kmeans_improves_recall``); use
     with ``cosine_topk_ivf(..., centroids=...)``.
     """
-    cents = ivf_centroids(df, id_col, vec_col, num_centroids)
+    cents = ivf.seed_centroids(df, id_col, vec_col, num_centroids)
     dims = len(cents[0][1]) if cents else 0
     for _ in range(iters):
-        tagged = tagged_cells(df, cents, id_col, vec_col).select("cell", "v")
+        tagged = ivf.tagged_cells(df, cents, id_col, vec_col).select("cell", "v")
         rows = (
             tagged.select("cell", F.posexplode("v").alias("dim", "x"))
             .groupBy("cell", "dim")
@@ -935,7 +675,7 @@ def kmeans_train_stats(
     quantized inputs the whole trained trajectory is engine-exact.
     """
     cents = ivf_centroids_kmeans(df, id_col, vec_col, num_centroids, iters)
-    assigned = tagged_cells(df, cents, id_col, vec_col).select(
+    assigned = ivf.tagged_cells(df, cents, id_col, vec_col).select(
         "cell", F.posexplode("v").alias("dim", "x")
     )
     return assigned.groupBy("cell", "dim").agg(
@@ -971,63 +711,36 @@ def kmeans_train_stats_q8(
     operands everywhere.
 
     Plan shape per iteration (and final stats pass): one scan with the
-    map-side literal-array argmax + ONE ``k × d``-bounded integer-sum
-    hash aggregate; driver holds only the integer centroid table.
+    map-side ``ivf.INT`` numpy argmax + ONE ``k × d``-bounded
+    integer-sum hash aggregate; driver holds only the integer centroid
+    table.
     Exact at any corpus size while ``|S| · 8·max|x| · d < 2^53``
     (petascale headroom for unit-norm embeddings).
     """
-    import math
-
     v8 = F.expr(
         f"transform({vec_col}, x -> CAST(floor(x * 8) AS BIGINT))"
     )
     src = df.select(F.col(id_col).alias("id"), v8.alias("v8"))
-    seeds = src.orderBy("id").limit(num_centroids).collect()
     # state: cid -> (S vector of int64, n)
     state: dict[int, tuple[list[int], int]] = {
-        int(r["id"]): ([int(x) for x in r["v8"]], 1) for r in seeds
+        cid: (s, 1)
+        for cid, s in ivf.seed_centroids(src, "id", "v8", num_centroids, ivf.INT)
     }
 
     def assigned() -> DataFrame:
-        # Arrow-batched integer GEMM assigner. The original spelling
-        # built a fresh k x d literal expression tree per iteration (16
-        # centroids x 64 lits + one aggregate-fold each), paying
+        # The numpy rung directly, not the ladder: the literal rung
+        # would build a fresh k x d expression tree per iteration and pay
         # analysis + janino codegen every Lloyd round — ~2 s/round of
         # pure driver overhead at any data size. The INTEGER state makes
-        # the numpy route bit-exact: V8 @ S.T is exact int64 (no float
-        # reassociation), the score is the same int-as-double / denom
-        # division, and argmax's first-max rule over cid-ascending rows
-        # equals the struct max's min-cid tie-break. Still a pure
-        # per-row projection — no shuffle, centroids ship in the task
-        # closure (k x d ints).
-        import numpy as np
-        import pandas as pd
-
-        ordered = sorted(state)
-        S = np.array([state[cid][0] for cid in ordered], dtype=np.int64)
-        denoms = np.array(
-            [
-                math.sqrt(float(sum(x * x for x in state[cid][0]))) or 1.0
-                for cid in ordered
-            ]
+        # the GEMM bit-exact, so it decides exactly as the literal rung.
+        # Only v8 crosses the Arrow boundary (opaque functions defeat
+        # column pruning — select first).
+        cents = [(cid, s) for cid, (s, _) in state.items()]
+        tagged = ivf.assign_np(src.select("v8"), cents, "v8", ivf.INT)
+        return tagged.select(
+            F.col("cell").cast("int").alias("cell"),
+            F.posexplode("v8").alias("dim", "x"),
         )
-        cids = np.array(ordered, dtype=np.int64)
-
-        def _assign(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.array(pdf["v8"].tolist(), dtype=np.int64)
-                scores = (V @ S.T).astype(np.float64) / denoms
-                cells = cids[np.argmax(scores, axis=1)]
-                yield pd.DataFrame({"cell": cells, "v8": pdf["v8"]})
-
-        # pass ONLY v8 across the boundary (guide §4: opaque functions
-        # defeat column pruning — select first)
-        tagged = src.select("v8").mapInPandas(
-            _assign, "cell int, v8 array<bigint>"
-        )
-        return tagged.select("cell", F.posexplode("v8").alias("dim", "x"))
 
     dims = len(state[min(state)][0]) if state else 0
     for _ in range(iters):
@@ -1085,18 +798,25 @@ def cosine_topk_ivf(
     cents = (
         [(int(c), [float(x) for x in v]) for c, v in centroids]
         if centroids is not None
-        else ivf_centroids(df, id_col, vec_col, num_centroids)
+        else ivf.seed_centroids(df, id_col, vec_col, num_centroids)
     )
-    qn = math.sqrt(sum(x * x for x in query))
-
-    def _cos(cvec: list[float]) -> float:
-        cn = math.sqrt(sum(x * x for x in cvec))
-        return sum(a * b for a, b in zip(cvec, query)) / (cn * qn)
-
-    probe = sorted(cents, key=lambda c: (-_cos(c[1]), c[0]))[:n_probe]
-    probe_ids = [cid for cid, _ in probe]
-    candidates = df.filter(ivf_cell_expr(cents, vec_col).isin(*probe_ids))
+    candidates = _probed(df, vec_col, cents, query, n_probe)
     return cosine_topk(candidates, id_col, vec_col, query, k, exclude_ids)
+
+
+def _probed(
+    df: DataFrame,
+    vec_col: str,
+    cents: Sequence[tuple[int, Sequence[float]]],
+    query: Sequence[float],
+    n_probe: int,
+) -> DataFrame:
+    """The rows of ``df`` whose cell is one of the ``n_probe`` cells
+    nearest ``query`` — the IVF gate of :func:`cosine_topk_ivf` and
+    :func:`topk_ivfpq`."""
+    probe_ids = ivf.rank_probes(cents, query, n_probe)
+    tagged = ivf.with_cells(df, cents, vec_col)
+    return tagged.filter(F.col("cell").isin(*probe_ids)).drop("cell")
 
 
 def cosine_topk_lsh(
@@ -1338,25 +1058,16 @@ def kmeans_step(
     coordinates plus each cell's population.
 
     The per-iteration plan shape k-means has at any scale: assignment
-    is the map-side :func:`ivf_cell_expr` projection (no shuffle, no
-    broadcast of per-row state), and the centroid update is ONE hash
-    aggregate keyed on ``(cell, dim)`` — cardinality
-    ``num_centroids × dims`` regardless of corpus size, with partial
-    aggregation combining map-side. Iterating = re-running this with
-    the returned means as the next centroid literals; each iteration
-    is one scan + one bounded shuffle, which is the 100 TB contract.
+    is the map-side ``ivf`` projection (no shuffle, no broadcast of
+    per-row state), and the centroid update is ONE hash aggregate keyed
+    on ``(cell, dim)`` — cardinality ``num_centroids × dims`` regardless
+    of corpus size, with partial aggregation combining map-side.
+    Iterating = re-running this with the returned means as the next
+    centroid literals; each iteration is one scan + one bounded
+    shuffle, which is the 100 TB contract. It is
+    :func:`kmeans_train_stats` with ``iters=0``.
     """
-    cents = ivf_centroids(df, id_col, vec_col, num_centroids)
-    # two projections: mixing the struct-array argmax with a generator in
-    # one select loses the struct field names during resolution
-    tagged = df.select(
-        ivf_cell_expr(cents, vec_col).alias("cell"),
-        as_double_array(vec_col).alias("v"),
-    )
-    assigned = tagged.select("cell", F.posexplode("v").alias("dim", "x"))
-    return assigned.groupBy("cell", "dim").agg(
-        F.count(F.lit(1)).alias("n"), F.avg("x").alias("mean")
-    )
+    return kmeans_train_stats(df, id_col, vec_col, num_centroids, iters=0)
 
 
 def random_project(
@@ -1416,7 +1127,7 @@ def sq8_params(df: DataFrame, vec_col: str, dims: int) -> list[tuple[float, floa
     aggregate: partial aggregation collapses every task to ``dims``
     rows before the (tiny) shuffle, and the driver holds only
     ``O(dims)`` scalars (the same bounded-metadata posture as
-    ``ivf_centroids``). The explode-free alternative — ``2·dims``
+    ``ivf.seed_centroids``). The explode-free alternative — ``2·dims``
     separate aggregate expressions — is plan-quadratic (compile cost
     dominated a measured run 50:1) and was replaced by this shape."""
     rows = (
@@ -1511,7 +1222,7 @@ def pq_codebooks(
     dims, each with ``kcode`` codewords = the integer-quantized
     (``floor(x*scale)``) subvectors of the ``kcode`` smallest-id
     vectors. Deterministic seed-codeword choice (the
-    :func:`ivf_centroids` pattern): no Lloyd fitting, bit-reproducible
+    ``ivf.seed_centroids`` pattern): no Lloyd fitting, bit-reproducible
     across engines and the SQL oracle; production PQ would k-means
     each subspace, with every downstream plan shape identical.
     Driver state is ``O(m·kcode·dim/m) = O(kcode·dim)`` ints."""
@@ -1631,6 +1342,28 @@ def topk_pq(
     return rescored.orderBy(F.col("cos").desc(), F.col("id").asc()).limit(k)
 
 
+def _gated_cells(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    num_centroids: int | None,
+    target_cell_size: int,
+    centroids: Sequence[tuple[int, Sequence[float]]] | None,
+) -> DataFrame:
+    """``(id, cell, v)`` for the cell-gated curation operators: the
+    given ``centroids``, else ``num_centroids`` seed cells, else a
+    corpus-scaled count — through the ladder that keeps the centroid
+    collect bounded."""
+    if centroids is not None:
+        return ivf.tagged_cells(df, list(centroids), id_col, vec_col)
+    k = (
+        int(num_centroids)
+        if num_centroids is not None
+        else ivf.scaled_num_centroids(df.count(), target_cell_size)
+    )
+    return ivf.scaled_tagged_cells(df, id_col, vec_col, k)
+
+
 def semantic_dedup(
     df: DataFrame,
     id_col: str,
@@ -1655,9 +1388,7 @@ def semantic_dedup(
     near-duplicates, never fewer — the safe direction for training-data
     hygiene.
 
-    Plan: cell assignment is map-side — a codegen'd expression over
-    centroid literals (:func:`ivf_cell_expr`) up to 64 centroids, a
-    broadcast-numpy GEMM (:func:`ivf_assign_np`) beyond — no shuffle,
+    Plan: cell assignment is the map-side ``ivf`` ladder — no shuffle,
     no fitting; within each cell one ``applyInPandas`` GEMM emits
     ≥-threshold pairs (the per-bucket kernel of
     :func:`cosine_lsh_pairs`); survivors are a left-anti join against
@@ -1665,7 +1396,8 @@ def semantic_dedup(
     per document — never pairs.
 
     ``num_centroids=None`` (the default) scales the cell count with
-    the corpus (:func:`scaled_num_centroids`): cell SIZE stays ~
+    the corpus (:func:`~spark_ifs_spark.operators.ivf.scaled_num_centroids`):
+    cell SIZE stays ~
     ``target_cell_size`` as the corpus grows, so the in-cell pair
     compute is linear in n, not quadratic. Pass ``centroids=`` (e.g.
     from :func:`ivf_centroids_kmeans`) to dedup inside trained cells.
@@ -1675,18 +1407,10 @@ def semantic_dedup(
 
     thr = float(threshold)
     # one assignment evaluation: survivors join back to THIS relation
-    # (ivf_cells would re-evaluate the centroid argmax in a second
-    # scan for no reason). The corpus-scaled default routes through
-    # scaled_tagged_cells so the centroid collect stays bounded.
-    if centroids is not None:
-        src = tagged_cells(df, list(centroids), id_col, vec_col)
-    else:
-        k = (
-            int(num_centroids)
-            if num_centroids is not None
-            else scaled_num_centroids(df.count(), target_cell_size)
-        )
-        src = scaled_tagged_cells(df, id_col, vec_col, k)
+    # (re-tagging would evaluate the centroid argmax in a second scan)
+    src = _gated_cells(
+        df, id_col, vec_col, num_centroids, target_cell_size, centroids
+    )
     cells = src.select("id", "cell")
 
     def _cell_drops(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1741,18 +1465,10 @@ def topk_ivfpq(
     cents = (
         list(centroids)
         if centroids is not None
-        else ivf_centroids(df, id_col, vec_col, num_centroids)
+        else ivf.seed_centroids(df, id_col, vec_col, num_centroids)
     )
-    qn = math.sqrt(sum(float(x) * float(x) for x in query))
-
-    def _cos(cvec: Sequence[float]) -> float:
-        cn = math.sqrt(sum(x * x for x in cvec))
-        return sum(a * b for a, b in zip(cvec, query)) / (cn * qn)
-
-    probe = sorted(cents, key=lambda c: (-_cos(c[1]), c[0]))[:n_probe]
-    probe_ids = [cid for cid, _ in probe]
     books = pq_codebooks(df, id_col, vec_col, len(query), m, kcode, scale)
-    gated = df.filter(ivf_cell_expr(cents, vec_col).isin(*probe_ids))
+    gated = _probed(df, vec_col, cents, query, n_probe)
     return topk_pq(
         gated,
         id_col,
@@ -1788,7 +1504,7 @@ def hard_negatives(
     Cell-gated by design (the SemDeDup/IVF posture): candidates come
     only from the anchor's own centroid cell, and with the default
     corpus-scaled cell count (``num_centroids=None`` →
-    :func:`scaled_num_centroids`) cell size stays ~``target_cell_size``
+    ``ivf.scaled_num_centroids``) cell size stays ~``target_cell_size``
     as the corpus grows, so per-cell GEMM compute is linear in n. The
     shuffle is one (id, cell, vector) row per document. Ranking is on
     ``round(cos, 6)`` with neg-id-asc ties, so both engines order
@@ -1797,15 +1513,9 @@ def hard_negatives(
     import numpy as np
     import pandas as pd
 
-    if centroids is not None:
-        src = tagged_cells(df, list(centroids), id_col, vec_col)
-    else:
-        kc = (
-            int(num_centroids)
-            if num_centroids is not None
-            else scaled_num_centroids(df.count(), target_cell_size)
-        )
-        src = scaled_tagged_cells(df, id_col, vec_col, kc)
+    src = _gated_cells(
+        df, id_col, vec_col, num_centroids, target_cell_size, centroids
+    )
     ceil_ = float(dup_ceiling)
     kk = int(k)
 

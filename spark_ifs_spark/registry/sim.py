@@ -1568,6 +1568,7 @@ JOIN cnt cb ON cb.source = dot.source_b
 
 
 # --- approximate kNN graph (NN-descent) --------------------------------
+from spark_ifs_spark.operators import ivf  # noqa: E402
 from spark_ifs_spark.operators import knn as _knn  # noqa: E402
 
 KNN_GRAPH_K = 4  # emitted out-degree
@@ -1585,7 +1586,7 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     same edges. Each ORACLE still rebuilds the graph from scratch in
     SQL, so the value-hash gate keeps auditing the full build."""
     emb = _read(spark, sf_dir, "embeddings")
-    nc = similarity.scaled_num_centroids(emb.count())
+    nc = ivf.scaled_num_centroids(emb.count())
     return _knn.knn_graph(
         emb, "vec_id", "embedding", k=KNN_GRAPH_K, num_centroids=nc,
         rounds=KNN_GRAPH_ROUNDS, groups=KNN_GRAPH_GROUPS,

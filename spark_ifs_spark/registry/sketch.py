@@ -1053,7 +1053,7 @@ def q_overlap_cross_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The whole aggregate is parsed from ONE SQL array string: the
     # Column-API spelling issued ~10 driver-blocking py4j round-trips
     # per hash (~1.5 s of pure construction per call at H=128) for the
-    # identical expression tree — the dedup_simhash / ivf_cell_expr
+    # identical expression tree — the dedup_simhash / ivf.cell_expr
     # lesson. posexplode's 0-based position IS the former struct index.
     params = minhash_params(OV_MH_H)
     xs = dvoc.select("source", md5_int60(F.col("term")).alias("x"))

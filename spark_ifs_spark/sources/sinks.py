@@ -6,10 +6,11 @@ scale the layout you WRITE determines every later scan's cost, so the
 engine ships two write strategies whose benefits are plan-verifiable
 (tests assert partition pruning / absent shuffles, not vibes):
 
-- :func:`write_partitioned` — hive-style ``partitionBy`` layout. Used
-  with :func:`~spark_ifs_spark.operators.similarity.ivf_cells` it
-  materializes the IVF inverted file: probing n of C cells reads n/C of
-  the data via partition pruning (``PartitionFilters`` in the scan).
+- :func:`write_partitioned` — hive-style ``partitionBy`` layout. With
+  the :mod:`~spark_ifs_spark.operators.ivf` cell column
+  (:func:`write_ivf_corpus`) it materializes the IVF inverted file:
+  probing n of C cells reads n/C of the data via partition pruning
+  (``PartitionFilters`` in the scan).
 - :func:`write_bucketed` — pre-shuffled bucketed table. Joins and
   aggregations on the bucket key skip their Exchange entirely — the
   co-located-join strategy for repeated big-big joins (e.g. the
@@ -52,13 +53,13 @@ def write_ivf_corpus(
     the corpus; probes need them). Probe-time reads prune to the probed
     cells only.
 
-    The cell tag is the inline map-side assignment expression — one scan,
-    no join, no per-row broadcast (only the ≤ ``num_centroids`` centroid
-    literals travel)."""
-    from spark_ifs_spark.operators.similarity import ivf_cell_expr, ivf_centroids
+    The cell tag is the map-side ``ivf`` ladder assignment — one scan,
+    no join, no per-row broadcast (only the ``num_centroids`` centroids
+    travel)."""
+    from spark_ifs_spark.operators import ivf
 
-    cents = ivf_centroids(df, id_col, vec_col, num_centroids)
-    tagged = df.withColumn("cell", ivf_cell_expr(cents, vec_col))
+    cents = ivf.seed_centroids(df, id_col, vec_col, num_centroids)
+    tagged = ivf.with_cells(df, cents, vec_col)
     write_partitioned(tagged, path, ["cell"])
     return cents
 

@@ -31,11 +31,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_ifs_spark.operators.similarity import (
-    as_double_array,
-    ivf_cell_expr,
-    ivf_centroids,
-)
+from spark_ifs_spark.operators import ivf
+from spark_ifs_spark.operators.similarity import as_double_array
 from spark_ifs_spark.streaming._pointer import PointerIndex
 
 
@@ -62,7 +59,7 @@ def read_centroids(index_path: str) -> list[tuple[int, list[float]]] | None:
 
 
 def _write_cells(corpus: DataFrame, cents, path: str) -> None:
-    corpus.withColumn("cell", ivf_cell_expr(cents, "vec")).write.mode(
+    ivf.with_cells(corpus, cents, "vec").write.mode(
         "overwrite"
     ).partitionBy("cell").parquet(path)
 
@@ -88,7 +85,7 @@ def streaming_ivf_index(
 
     def _append(batch: DataFrame, batch_id: int, state: dict) -> None:
         if "centroids" not in state:
-            state["centroids"] = ivf_centroids(batch, "id", "vec", num_centroids)
+            state["centroids"] = ivf.seed_centroids(batch, "id", "vec", num_centroids)
         _write_cells(
             batch, _centroids(state),
             os.path.join(index.path, state["dir"], f"batch={batch_id}"),
@@ -117,7 +114,7 @@ def refresh_ivf_index(
     corpus = (
         index.committed(spark, "").select("id", "vec").localCheckpoint(eager=True)
     )
-    cents = ivf_centroids(corpus, "id", "vec", num_centroids)
+    cents = ivf.seed_centroids(corpus, "id", "vec", num_centroids)
     index.swap(
         lambda vdir: _write_cells(corpus, cents, os.path.join(vdir, "batch=-1")),
         centroids=cents,
@@ -146,17 +143,9 @@ def probe_ivf_index(
     index = _index(index_path)
     state = index.state()
     cents = _centroids(state)
-    qn = math.sqrt(sum(x * x for x in query_vec)) or 1.0
-    by_sim = sorted(
-        cents,
-        key=lambda cv: (
-            -sum(q * x for q, x in zip(query_vec, cv[1]))
-            / (math.sqrt(sum(x * x for x in cv[1])) or 1.0),
-            cv[0],
-        ),
-    )
-    cells = [cid for cid, _ in by_sim[:probe]]
+    cells = ivf.rank_probes(cents, query_vec, probe)
     corpus = index.committed(spark, "", state=state).where(F.col("cell").isin(cells))
+    qn = math.sqrt(sum(x * x for x in query_vec)) or 1.0
     q = F.array(*[F.lit(float(x) / qn) for x in query_vec])
     scored = corpus.select("id", cosine(F.col("vec"), q).alias("cos"))
     return scored.orderBy(F.col("cos").desc(), F.col("id").asc()).limit(k)

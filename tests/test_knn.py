@@ -8,6 +8,7 @@ import math
 
 from pyspark.sql import functions as F
 
+from spark_ifs_spark.operators import ivf
 from spark_ifs_spark.operators.knn import (
     _ring_seed,
     knn_graph,
@@ -98,7 +99,7 @@ def test_cell_assign_np_path_matches_expression_path(spark, sf_dir, monkeypatch)
     expr_pairs = sorted(
         (r["id"], r["nb"]) for r in knn_mod._cell_seed(q, 24).collect()
     )
-    monkeypatch.setattr(knn_mod, "NP_ASSIGN_MIN_CENTROIDS", 1)
+    monkeypatch.setattr(ivf, "EXPR_MAX_CENTROIDS", 0)
     np_pairs = sorted(
         (r["id"], r["nb"]) for r in knn_mod._cell_seed(q, 24).collect()
     )
@@ -201,14 +202,9 @@ def test_label_propagation_planted_clusters_recovered(spark):
         assert r["label"] == r["id"] % 2, (r["id"], r["label"])
 
 
-def _flat_assign(knn_mod, q, nc):
-    cents = (
-        q.orderBy("id").limit(nc)
-        .select(F.col("id").alias("cid"), F.col("qv").alias("_cq"),
-                F.col("ssq").alias("_cs"))
-    )
-    rows = [(r["cid"], list(r["_cq"]), r["_cs"]) for r in cents.collect()]
-    return knn_mod._cell_assign_np(q, rows), cents
+def _flat_assign(q, nc):
+    cents = ivf.seed_centroids(q, "id", "qv", nc, ivf.INT)
+    return ivf.assign_np(q, cents, "qv", ivf.INT)
 
 
 def test_two_level_assign_with_full_probes_equals_flat(spark, sf_dir):
@@ -216,18 +212,17 @@ def test_two_level_assign_with_full_probes_equals_flat(spark, sf_dir):
     the two-level argmax EQUALS the flat path by construction (same
     integer-exact scoring, same cid-asc tie-break) — the mathematical
     pin behind the 100 TB swap."""
-    import spark_ifs_spark.operators.knn as knn_mod
     from spark_ifs_spark.operators.knn import quantized_vectors
 
     df = _emb(spark, sf_dir, 300)
     q = quantized_vectors(df, "vec_id", "embedding", 1024).localCheckpoint(eager=True)
     nc = 100  # coarse count = ceil(sqrt(100)) = 10
-    flat, cents = _flat_assign(knn_mod, q, nc)
+    flat = _flat_assign(q, nc)
     want = {r["id"]: r["cell"] for r in flat.collect()}
     got = {
         r["id"]: r["cell"]
-        for r in knn_mod._cell_assign_two_level(
-            q, cents.localCheckpoint(eager=True), probes=10
+        for r in ivf.two_level_cells(
+            q, "id", "qv", nc, ivf.INT, probes=10
         ).collect()
     }
     assert got == want and len(got) > 0
@@ -239,19 +234,16 @@ def test_two_level_assign_default_probes_high_agreement(spark, sf_dir):
     approximation — deterministic, and on this corpus it recovers the
     flat argmax for ≥90% of points (the rest land in a probed
     near-best cell; cell assignment only SEEDS the audited descent)."""
-    import spark_ifs_spark.operators.knn as knn_mod
     from spark_ifs_spark.operators.knn import quantized_vectors
 
     df = _emb(spark, sf_dir, 400)
     q = quantized_vectors(df, "vec_id", "embedding", 1024).localCheckpoint(eager=True)
     nc = 120
-    flat, cents = _flat_assign(knn_mod, q, nc)
+    flat = _flat_assign(q, nc)
     want = {r["id"]: r["cell"] for r in flat.collect()}
     got = {
         r["id"]: r["cell"]
-        for r in knn_mod._cell_assign_two_level(
-            q, cents.localCheckpoint(eager=True)
-        ).collect()
+        for r in ivf.two_level_cells(q, "id", "qv", nc, ivf.INT).collect()
     }
     assert set(got) == set(want)  # every point assigned exactly once
     agree = sum(got[i] == want[i] for i in want)
@@ -271,8 +263,8 @@ def test_cell_seed_two_level_path_parity(spark, sf_dir, monkeypatch):
     flat_pairs = sorted(
         (r["id"], r["nb"]) for r in knn_mod._cell_seed(q, 80).collect()
     )
-    monkeypatch.setattr(knn_mod, "TWO_LEVEL_MIN_CENTROIDS", 1)
-    monkeypatch.setattr(knn_mod, "TWO_LEVEL_PROBES", 9)  # = all coarse cells
+    monkeypatch.setattr(ivf, "TWO_LEVEL_MIN_CENTROIDS", 1)
+    monkeypatch.setattr(ivf, "TWO_LEVEL_PROBES", 9)  # = all coarse cells
     two_pairs = sorted(
         (r["id"], r["nb"]) for r in knn_mod._cell_seed(q, 80).collect()
     )

@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from spark_ifs_spark.operators import similarity
+from spark_ifs_spark.operators import ivf, similarity
 
 
 @pytest.fixture(scope="module")
@@ -132,7 +132,6 @@ def test_ivf_probe_subsets_and_agrees_with_brute_force(spark, sf_dir):
     from spark_ifs_spark.operators.similarity import (
         cosine_topk,
         cosine_topk_ivf,
-        ivf_cells,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -145,7 +144,8 @@ def test_ivf_probe_subsets_and_agrees_with_brute_force(spark, sf_dir):
     ).collect()]
     assert full == exact
     # assignment covers the whole corpus, one cell per vector
-    cells, cents = ivf_cells(emb, "vec_id", "embedding", num_centroids=8)
+    cents = ivf.seed_centroids(emb, "vec_id", "embedding", num_centroids=8)
+    cells = ivf.tagged_cells(emb, cents, "vec_id", "embedding")
     assert cells.count() == emb.count()
     assert len(cents) == 8
     assert cells.select("cell").distinct().count() <= 8
@@ -161,7 +161,6 @@ def test_ivf_kmeans_improves_recall(spark, sf_dir):
     from spark_ifs_spark.operators.similarity import (
         cosine_topk,
         cosine_topk_ivf,
-        ivf_centroids,
         ivf_centroids_kmeans,
     )
 
@@ -185,7 +184,7 @@ def test_ivf_kmeans_improves_recall(spark, sf_dir):
         return len(got & exact) / len(exact)
 
     trained = ivf_centroids_kmeans(emb, "vec_id", "embedding", 16, iters=2)
-    seed = ivf_centroids(emb, "vec_id", "embedding", 16)
+    seed = ivf.seed_centroids(emb, "vec_id", "embedding", 16)
     r_trained, r_seed = recall(trained), recall(seed)
     assert r_trained >= 0.9
     assert r_trained >= r_seed
@@ -424,12 +423,12 @@ def test_semantic_dedup_matches_numpy_replica(spark):
 
 
 def test_scaled_num_centroids():
-    assert similarity.scaled_num_centroids(500) == 16      # gate scale → floor
-    assert similarity.scaled_num_centroids(2000) == 16     # sf0.1 → floor
-    assert similarity.scaled_num_centroids(50_000) == 390
-    assert similarity.scaled_num_centroids(500_000) == 3906
-    assert similarity.scaled_num_centroids(0) == 16
-    assert similarity.scaled_num_centroids(10_000, target_cell_size=100) == 100
+    assert ivf.scaled_num_centroids(500) == 16      # gate scale → floor
+    assert ivf.scaled_num_centroids(2000) == 16     # sf0.1 → floor
+    assert ivf.scaled_num_centroids(50_000) == 390
+    assert ivf.scaled_num_centroids(500_000) == 3906
+    assert ivf.scaled_num_centroids(0) == 16
+    assert ivf.scaled_num_centroids(10_000, target_cell_size=100) == 100
 
 
 def test_ivf_assign_np_matches_expr_assigner(spark, vecs):
@@ -437,32 +436,32 @@ def test_ivf_assign_np_matches_expr_assigner(spark, vecs):
     codegen'd literal-expression assigner cell-for-cell — same argmax,
     same centroid-id-asc tie-break."""
     df, rows = vecs
-    cents = similarity.ivf_centroids(df, "vec_id", "embedding", 8)
+    cents = ivf.seed_centroids(df, "vec_id", "embedding", 8)
     via_expr = {
         r["id"]: r["cell"]
         for r in df.select(
             F.col("vec_id").alias("id"),
-            similarity.ivf_cell_expr(cents, "embedding").alias("cell"),
+            ivf.cell_expr(cents, "embedding").alias("cell"),
         ).collect()
     }
     via_np = {
-        r["id"]: r["cell"]
-        for r in similarity.ivf_assign_np(df, cents, "vec_id", "embedding").collect()
+        r["vec_id"]: r["cell"]
+        for r in ivf.assign_np(df, cents, "embedding").collect()
     }
     assert via_np == via_expr
 
 
 def test_tagged_cells_switches_to_np_past_expr_limit(spark):
-    """Past _EXPR_ASSIGN_LIMIT centroids tagged_cells must route through
+    """Past EXPR_MAX_CENTROIDS centroids tagged_cells must route through
     the numpy assigner (no janino-compile-bound literal tree) and still
     produce a valid one-cell-per-row assignment."""
     rng = np.random.default_rng(7)
     n = 300
     rows = [(i, [float(x) for x in rng.normal(0, 1, 8)]) for i in range(n)]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    k = similarity._EXPR_ASSIGN_LIMIT + 6
-    cents = similarity.ivf_centroids(df, "vec_id", "embedding", k)
-    got = similarity.tagged_cells(df, cents, "vec_id", "embedding").collect()
+    k = ivf.EXPR_MAX_CENTROIDS + 6
+    cents = ivf.seed_centroids(df, "vec_id", "embedding", k)
+    got = ivf.tagged_cells(df, cents, "vec_id", "embedding").collect()
     assert len(got) == n
     cent_ids = {cid for cid, _ in cents}
     assert {r["cell"] for r in got} <= cent_ids
@@ -476,6 +475,40 @@ def test_tagged_cells_switches_to_np_past_expr_limit(spark):
     want = np.array([cid for cid, _ in cents])[np.argmax(V @ M.T, axis=1)]
     got_map = {r["id"]: r["cell"] for r in got}
     assert [got_map[i] for i in range(n)] == list(want)
+
+
+def test_ivf_assignment_lives_only_in_ivf_module():
+    """Source guard: ``operators/ivf.py`` is the only module that scores
+    vectors against centroids — no retired assigner, no copy of the
+    ladder constants and no ``np.argmax(`` may re-grow elsewhere in the
+    package."""
+    import os
+    import re
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "spark_ifs_spark"
+    )
+    home = os.path.join(pkg, "operators", "ivf.py")
+    patterns = [
+        r"\b(ivf_cell_expr|ivf_assign_np|_probe_coarse_np|ivf_cells"
+        r"|_cell_assign_np|_topp_coarse_np|_cell_assign_two_level"
+        r"|NP_ASSIGN_MIN_CENTROIDS|SIM_TWO_LEVEL_\w+|_EXPR_ASSIGN_LIMIT)\b",
+        r"^\s*(EXPR_MAX_CENTROIDS|TWO_LEVEL_MIN_CENTROIDS|TWO_LEVEL_PROBES)\s*=",
+        r"np\.argmax\(",
+    ]
+    offenders = []
+    for dirpath, _, files in os.walk(pkg):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            if not f.endswith(".py") or path == home:
+                continue
+            txt = open(path).read()
+            offenders += [
+                (os.path.relpath(path, pkg), m.group(0))
+                for pat in patterns
+                for m in re.finditer(pat, txt, re.M)
+            ]
+    assert not offenders, f"IVF assignment outside operators/ivf.py: {offenders}"
 
 
 def test_semantic_dedup_scaled_default_matches_explicit_floor(spark, sf_dir):
@@ -559,8 +592,8 @@ def test_kmeans_train_stats_parity_with_trained_centroids(spark, sf_dir):
     gate see one clustering, not two."""
     from pyspark.sql import functions as F
 
+    from spark_ifs_spark.operators.ivf import cell_expr
     from spark_ifs_spark.operators.similarity import (
-        ivf_cell_expr,
         ivf_centroids_kmeans,
         kmeans_train_stats,
         as_double_array,
@@ -576,7 +609,7 @@ def test_kmeans_train_stats_parity_with_trained_centroids(spark, sf_dir):
     # centroids; non-empty cells of one more explicit assignment pass
     # must agree exactly
     tagged = emb.select(
-        ivf_cell_expr(cents, "qe").alias("cell"), as_double_array("qe").alias("v")
+        cell_expr(cents, "qe").alias("cell"), as_double_array("qe").alias("v")
     )
     want = {
         (r["cell"], r["dim"]): (r["n"], r["mean"])
@@ -648,37 +681,35 @@ def test_scaled_tagged_cells_two_level_matches_flat(spark, sf_dir):
     must reproduce the flat assignment on the fixture — both at full
     probe coverage (complete candidate set) and at the default probe
     count; below the budget it IS the flat path."""
-    import spark_ifs_spark.operators.similarity as sim
-
     df = (
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .filter(F.col("vec_id") < 400)
     )
     nc = 90  # ncc = ceil(sqrt(90)) = 10
-    cents = sim.ivf_centroids(df, "vec_id", "embedding", nc)
+    cents = ivf.seed_centroids(df, "vec_id", "embedding", nc)
     want = {
         r["id"]: r["cell"]
-        for r in sim.tagged_cells(df, cents, "vec_id", "embedding").collect()
+        for r in ivf.tagged_cells(df, cents, "vec_id", "embedding").collect()
     }
     flat = {
         r["id"]: r["cell"]
-        for r in sim.scaled_tagged_cells(df, "vec_id", "embedding", nc).collect()
+        for r in ivf.scaled_tagged_cells(df, "vec_id", "embedding", nc).collect()
     }
     assert flat == want  # below budget: identical code path
     import pytest
 
     mp = pytest.MonkeyPatch()
     try:
-        mp.setattr(sim, "SIM_TWO_LEVEL_MIN_CENTROIDS", 1)
+        mp.setattr(ivf, "TWO_LEVEL_MIN_CENTROIDS", 1)
         full = {
             r["id"]: r["cell"]
-            for r in sim.scaled_tagged_cells(
+            for r in ivf.scaled_tagged_cells(
                 df, "vec_id", "embedding", nc, probes=10
             ).collect()
         }
         dflt = {
             r["id"]: r["cell"]
-            for r in sim.scaled_tagged_cells(
+            for r in ivf.scaled_tagged_cells(
                 df, "vec_id", "embedding", nc
             ).collect()
         }

@@ -30,6 +30,31 @@ def test_ivf_corpus_partition_pruning(spark, sf_dir, tmp_path):
     assert cells_read <= {1, 2}
 
 
+def test_ivf_corpus_past_expr_rung_writes_ladder_cells(spark, sf_dir, tmp_path):
+    """Past ``EXPR_MAX_CENTROIDS`` the writer tags through the numpy rung:
+    every id lands under the cell the ladder assigns, and a probe read
+    still prunes to the probed cell directories."""
+    from spark_ifs_spark.operators import ivf
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    path = str(tmp_path / "ivf_corpus_70")
+    cents = write_ivf_corpus(emb, "vec_id", "embedding", path, num_centroids=70)
+    assert len(cents) == 70 > ivf.EXPR_MAX_CENTROIDS
+    want = {
+        r["id"]: r["cell"]
+        for r in ivf.tagged_cells(emb, cents, "vec_id", "embedding").collect()
+    }
+    corpus = spark.read.parquet(path)
+    got = {r["vec_id"]: r["cell"] for r in corpus.select("vec_id", "cell").collect()}
+    assert got == want and len(got) == emb.count()
+
+    probe_ids = ivf.rank_probes(cents, cents[0][1], 4)
+    probe = corpus.filter(F.col("cell").isin(*probe_ids))
+    plan = explain_str(probe)
+    assert "PartitionFilters" in plan and "cell" in plan.split("PartitionFilters", 1)[1][:200]
+    assert {r["cell"] for r in probe.select("cell").distinct().collect()} <= set(probe_ids)
+
+
 def test_bucketed_join_is_shuffle_free(spark, sf_dir, tmp_path):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ
     try:

@@ -42,6 +42,8 @@ from collections import Counter
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spark_ifs_spark.operators.gates import collect_within
+
 #: output schema of bpe_train
 MERGES_SCHEMA = "rank int, x string, y string, n long"
 
@@ -198,7 +200,8 @@ def bpe_train(
 
     May return fewer than ``n_merges`` rows if the vocabulary runs out
     of adjacent pairs. The in-core gate is the tokenizers' shared
-    ``unigram.INCORE_VOCAB_BUDGET`` (0 forces the distributed path).
+    ``unigram.INCORE_VOCAB_BUDGET`` (0 forces the distributed path for
+    any non-empty corpus).
     """
     from spark_ifs_spark.operators import unigram
 
@@ -206,12 +209,10 @@ def bpe_train(
         raise ValueError("n_merges must be > 0")
     spark = df.sparkSession
     wf = word_frequencies(df, text_col)
-    budget = unigram.INCORE_VOCAB_BUDGET
-    if budget > 0:
-        head = wf.limit(budget + 1).collect()
-        if len(head) <= budget:
-            merges = _bpe_incore([(r["w"], r["c"]) for r in head], n_merges)
-            return spark.createDataFrame(merges, MERGES_SCHEMA)
+    head = collect_within(wf, unigram.INCORE_VOCAB_BUDGET)
+    if head is not None:
+        merges = _bpe_incore([(r["w"], r["c"]) for r in head], n_merges)
+        return spark.createDataFrame(merges, MERGES_SCHEMA)
     return spark.createDataFrame(_bpe_distributed(wf, n_merges), MERGES_SCHEMA)
 
 

@@ -48,10 +48,11 @@ import tempfile
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_ifs_spark.operators.gates import collect_within
 
-#: in-core gate of :func:`connected_components`, in edges: at or under
-#: it the pair graph is collected and solved with driver union-find;
-#: past it (or at 0) the distributed contraction loop runs.
+#: in-core gate of :func:`connected_components`, in edges, read at call
+#: time: at or under it the pair graph is collected and solved with
+#: driver union-find; past it the distributed contraction loop runs.
 INCORE_EDGE_BUDGET = 1_000_000
 
 
@@ -92,7 +93,7 @@ def connected_components(
     distributed contraction loop below is the default — volume-validated
     at 1M edges / 2M nodes in SCALE.md; both paths are pinned to agree
     in ``tests/test_graph.py``. ``INCORE_EDGE_BUDGET = 0`` forces the
-    distributed path.
+    distributed path for any non-empty edge set.
 
     Distributed path converges in O(log n) outer rounds (edge
     contraction shrinks the active graph geometrically); raises if
@@ -111,23 +112,19 @@ def connected_components(
         F.col(src).cast("long").alias("a"),
         F.col(dst).cast("long").alias("b"),
     ).where(F.col("a") != F.col("b"))
-    if INCORE_EDGE_BUDGET > 0:
-        # one job decides the path AND fetches the edges when small:
-        # collect at most budget+1 rows — a full count would compute
-        # the (possibly expensive) upstream pair graph twice
-        head = e0.limit(INCORE_EDGE_BUDGET + 1).collect()
-        if len(head) <= INCORE_EDGE_BUDGET:
-            # reset the accounting attribute so a reader after an
-            # in-core call never sees a PREVIOUS distributed call's
-            # stats (zeros = "no distributed rounds ran this call")
-            connected_components.last_stats = {
-                "outer_rounds": 0, "jumps": 0, "sum_checks": 0,
-                "verify_checks": 0,
-            }
-            labels = _union_find_incore((r["a"], r["b"]) for r in head)
-            return spark.createDataFrame(
-                sorted(labels.items()), "id long, component long"
-            )
+    head = collect_within(e0, INCORE_EDGE_BUDGET)
+    if head is not None:
+        # reset the accounting attribute so a reader after an
+        # in-core call never sees a PREVIOUS distributed call's
+        # stats (zeros = "no distributed rounds ran this call")
+        connected_components.last_stats = {
+            "outer_rounds": 0, "jumps": 0, "sum_checks": 0,
+            "verify_checks": 0,
+        }
+        labels = _union_find_incore((r["a"], r["b"]) for r in head)
+        return spark.createDataFrame(
+            sorted(labels.items()), "id long, component long"
+        )
     base = work_dir or tempfile.mkdtemp(prefix="spark_ifs_cc_")
     own_dir = work_dir is None
     # driver-sync accounting for the distributed path, readable after

@@ -193,46 +193,6 @@ def joint_label_mi_vs_column(
     )
 
 
-def round_mi(
-    df: DataFrame,
-    label_col: str,
-    feature_cols: Sequence[str],
-    candidates: Sequence[int],
-    selected: Sequence[int],
-) -> DataFrame:
-    """One greedy round's MI terms ``(cand, other, mi)`` for every
-    candidate × (label ∪ selected feature) — the reference's single-pass
-    multi-column counting pattern (``IFS:65-97``) as one explode + one
-    hash aggregate. Kept as the general (non-incremental) building block;
-    the greedy loop itself uses the cheaper incremental
-    :func:`mi_vs_column` plan.
-    """
-    others = [(LABEL_COL_ID, label_col)] + [(s, feature_cols[s]) for s in selected]
-    cand_arr = F.array(
-        *[
-            F.struct(F.lit(c).alias("cand"), F.col(feature_cols[c]).cast("double").alias("cand_val"))
-            for c in candidates
-        ]
-    )
-    other_arr = F.array(
-        *[
-            F.struct(F.lit(o).alias("other"), F.col(name).cast("double").alias("other_val"))
-            for o, name in others
-        ]
-    )
-    tuples = (
-        df.select(F.explode(cand_arr).alias("_c"), other_arr.alias("_os"))
-        .select("_c.cand", "_c.cand_val", F.explode("_os").alias("_o"))
-        .select("cand", "cand_val", F.col("_o.other").alias("other"), F.col("_o.other_val").alias("other_val"))
-    )
-    joint = tuples.groupBy("cand", "other", "cand_val", "other_val").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    return mi_from_joint_counts(
-        joint, group_cols=["cand", "other"], a_col="cand_val", b_col="other_val"
-    )
-
-
 def all_pairs_mi(
     df: DataFrame,
     label_col: str,

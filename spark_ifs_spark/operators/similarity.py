@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spark_ifs_spark.operators import ivf
+from spark_ifs_spark.operators.gates import collect_within
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -65,39 +66,102 @@ def cosine_topk(
     return scored.orderBy(F.col("cos").desc(), F.col("id").asc()).limit(k)
 
 
+#: in-core gate of the exact all-pairs kernels, in vectors, read at call
+#: time: at or under it the unit-normalized corpus is collected and
+#: broadcast; past it the distributed block-matrix plan runs, in blocks
+#: of at most a quarter of it (:func:`_num_blocks`).
+INCORE_VECTOR_BUDGET = 200_000
+
+#: cells (doubles, 32 MB) of one scored tile of :func:`_emit_pairs`
+_TILE_CELLS = 1 << 22
+
+_PAIRS_SCHEMA = "id_a long, id_b long, cos double"
+
+
+def _emit_pairs(ida, A, idb, B, *, upper: bool, k=None, threshold=None):
+    """The one numpy pair emitter of the exact all-pairs kernels:
+    ``(id_a, id_b, cos)`` with ``id_a < id_b`` between the unit rows of
+    ``A`` (ids ``ida``) and of ``B`` (ids ``idb``).
+
+    ``upper`` says both sides index one corpus, so only cells with
+    ``ida < idb`` are pairs; otherwise the sides are disjoint and every
+    cell is one, oriented to ``id_a < id_b``. ``A``'s rows are scored in
+    tiles of at most ``_TILE_CELLS`` cells (one row at least), so the
+    memory is one tile plus the output, whatever the side sizes. With
+    ``threshold`` every pair at or above it is emitted; with ``k``, at
+    most ``k`` pairs: the best under ``(cos DESC, id_a ASC, id_b ASC)``,
+    a superset of this call's share of the global top-k, which the
+    caller's merge-limit cuts. NaN cosines (zero vectors) are never
+    emitted.
+    """
+    import numpy as np
+    import pandas as pd
+
+    floor = -np.inf if threshold is None else threshold
+    rows = max(1, _TILE_CELLS // max(len(idb), 1))
+    xa, xb, cs = [np.empty(0, np.int64)], [np.empty(0, np.int64)], [np.empty(0)]
+    for lo in range(0, len(ida), rows):
+        S = A[lo : lo + rows] @ B.T
+        keep = S >= floor
+        if upper:
+            keep &= ida[lo : lo + rows, None] < idb
+        if k is not None and 0 < k < np.count_nonzero(keep):
+            best = S[keep]
+            best.partition(best.size - k)
+            keep &= S >= best[best.size - k]
+        r, c = np.nonzero(keep)
+        a, b = ida[lo + r], idb[c]
+        xa.append(np.minimum(a, b))
+        xb.append(np.maximum(a, b))
+        cs.append(S[r, c])
+        if k is not None:
+            xa, xb, cs = (np.concatenate(x) for x in (xa, xb, cs))
+            top = np.lexsort((xb, xa, -cs))[:k]
+            xa, xb, cs = [xa[top]], [xb[top]], [cs[top]]
+    return pd.DataFrame(
+        {"id_a": np.concatenate(xa), "id_b": np.concatenate(xb), "cos": np.concatenate(cs)}
+    )
+
+
+def _num_blocks(df: DataFrame) -> int:
+    """The block count of the distributed plan: ``max(2, ceil(n /
+    (INCORE_VECTOR_BUDGET // 4)))``."""
+    return max(2, -(-df.count() // max(INCORE_VECTOR_BUDGET // 4, 1)))
+
+
 def _gemm_pairs_kernel(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    broadcast_limit_rows: int,
     k: int | None = None,
     threshold: float | None = None,
 ) -> DataFrame:
     """Shared all-pairs cosine kernel: **broadcast-matrix block multiply**.
 
-    The normalized corpus matrix is broadcast once; each partition
-    multiplies its row block against it with numpy (BLAS) and emits,
-    per row, either its local top-``k`` or every pair ≥ ``threshold``
-    (j > i only, so a<b). This beats the naive self-join by orders of
-    magnitude — Catalyst's higher-order array lambdas are interpreted
+    At or under :data:`INCORE_VECTOR_BUDGET` vectors (one
+    :func:`~spark_ifs_spark.operators.gates.collect_within` job decides
+    and fetches), the normalized corpus matrix is broadcast once; each
+    Arrow batch of row indices scores its rows against it with numpy
+    (BLAS) through :func:`_emit_pairs` and emits its top-``k`` pairs or
+    every pair ≥ ``threshold``. This beats the naive self-join by orders
+    of magnitude — Catalyst's higher-order array lambdas are interpreted
     per element, a GEMM is vectorized — at identical full precision.
 
-    Valid while one side fits in executor memory
-    (``broadcast_limit_rows`` guard). Past the guard the kernel falls
-    back to :func:`_blocked_pairs_kernel` — the fully distributed
-    triangular block-matrix plan with the same exact output — instead
-    of collecting an unbounded corpus to the driver.
+    Past the budget the kernel falls back to
+    :func:`_blocked_pairs_kernel` — the fully distributed triangular
+    block-matrix plan with the same exact output, :func:`_num_blocks`
+    blocks — instead of collecting an unbounded corpus to the driver.
     """
     import numpy as np
-    import pandas as pd
 
-    n_rows = df.count()
-    if n_rows > broadcast_limit_rows:
-        num_blocks = -(-n_rows // max(broadcast_limit_rows // 4, 1))
+    rows = collect_within(
+        df.select(F.col(id_col).alias("id"), as_double_array(vec_col).alias("v")),
+        INCORE_VECTOR_BUDGET,
+    )
+    if rows is None:
         return _blocked_pairs_kernel(
-            df, id_col, vec_col, num_blocks=max(num_blocks, 2), k=k, threshold=threshold
+            df, id_col, vec_col, _num_blocks(df), k=k, threshold=threshold
         )
-    rows = df.select(F.col(id_col).alias("id"), as_double_array(vec_col).alias("v")).collect()
     rows.sort(key=lambda r: r["id"])
     ids = np.array([r["id"] for r in rows], dtype=np.int64)
     M = np.array([r["v"] for r in rows], dtype=np.float64)
@@ -111,25 +175,13 @@ def _gemm_pairs_kernel(
             idx = pdf["idx"].to_numpy()
             if len(idx) == 0:
                 continue
-            S = b_m.value[idx] @ b_m.value.T  # (block, n)
-            out_a, out_b, out_c = [], [], []
-            for r, i in enumerate(idx):
-                sims = S[r, i + 1 :]  # only j > i (id-sorted) → a < b
-                if sims.size == 0:
-                    continue
-                if threshold is not None:
-                    hits = np.nonzero(sims >= threshold)[0]
-                else:
-                    hits = np.argsort(-sims, kind="stable")[:k]
-                if hits.size == 0:
-                    continue
-                out_a.extend([b_ids.value[i]] * len(hits))
-                out_b.extend(b_ids.value[i + 1 + hits])
-                out_c.extend(sims[hits])
-            yield pd.DataFrame({"id_a": out_a, "id_b": out_b, "cos": out_c})
+            yield _emit_pairs(
+                b_ids.value[idx], b_m.value[idx], b_ids.value, b_m.value,
+                upper=True, k=k, threshold=threshold,
+            )
 
     blocks = df.sparkSession.range(len(ids)).select(F.col("id").alias("idx"))
-    return blocks.mapInPandas(_block, "id_a long, id_b long, cos double")
+    return blocks.mapInPandas(_block, _PAIRS_SCHEMA)
 
 
 def _blocked_pairs_kernel(
@@ -144,20 +196,21 @@ def _blocked_pairs_kernel(
 
     The corpus is hash-partitioned into ``B = num_blocks`` row blocks;
     every unordered block pair ``(i ≤ j)`` becomes one task group that
-    GEMMs block i against block j and emits pairs ≥ ``threshold`` (or
-    its group-local top-``k``; a global top-k pair is necessarily in its
-    own group's top-k, so a final merge-limit is exact). Every vector
-    pair is scored in exactly ONE group — the plan is recall-COMPLETE,
-    unlike LSH/IVF gating, so it is graded against the same exact SQL
-    oracle as the broadcast kernel.
+    scores block i against block j through :func:`_emit_pairs` and
+    emits pairs ≥ ``threshold`` (or its group-local top-``k``; a global
+    top-k pair is necessarily in its own group's top-k, so a final
+    merge-limit is exact). Every vector pair is scored in exactly ONE
+    group — the plan is recall-COMPLETE, unlike LSH/IVF gating, so it is
+    graded against the same exact SQL oracle as the broadcast kernel.
 
     Scale shape: no driver collect, no full-matrix broadcast. Each row
     is replicated to its B group keys (shuffle volume n×B rows); each
-    task holds two blocks of ~n/B vectors — bounded executor memory at
-    any corpus size by raising ``num_blocks``. The B(B+1)/2 groups are
-    the irreducible cost of an EXACT all-pairs query; for approximate
-    near-dup at extreme scale, gate with :func:`hyperplane_lsh_buckets`
-    or the ``ivf`` cells instead (trade recall for replication 1).
+    task holds two blocks of ~n/B vectors plus one score tile — bounded
+    executor memory at any corpus size by raising ``num_blocks``. The
+    B(B+1)/2 groups are the irreducible cost of an EXACT all-pairs
+    query; for approximate near-dup at extreme scale, gate with
+    :func:`hyperplane_lsh_buckets` or the ``ivf`` cells instead (trade
+    recall for replication 1).
     """
     import numpy as np
     import pandas as pd
@@ -182,46 +235,19 @@ def _blocked_pairs_kernel(
 
     def _gemm_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         gi, gj = int(key[0]), int(key[1])
-        empty = pd.DataFrame({"id_a": pd.Series(dtype="int64"),
-                              "id_b": pd.Series(dtype="int64"),
-                              "cos": pd.Series(dtype="float64")})
         ids = pdf["id"].to_numpy(dtype=np.int64)
         V = np.array(pdf["v"].tolist(), dtype=np.float64)
-        if V.ndim != 2 or len(ids) == 0:
-            return empty
         Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
         if gi == gj:
             order = np.argsort(ids, kind="stable")
             ids, Vn = ids[order], Vn[order]
-            S = Vn @ Vn.T
-            iu, ju = np.triu_indices(len(ids), k=1)
-            id_a, id_b, cs = ids[iu], ids[ju], S[iu, ju]
-        else:
-            ma = (pdf["bid"].to_numpy() == gi)
-            ia, ib = ids[ma], ids[~ma]
-            if len(ia) == 0 or len(ib) == 0:
-                return empty
-            S = Vn[ma] @ Vn[~ma].T
-            ii, jj = np.meshgrid(np.arange(len(ia)), np.arange(len(ib)), indexing="ij")
-            xa, xb = ia[ii.ravel()], ib[jj.ravel()]
-            id_a, id_b = np.minimum(xa, xb), np.maximum(xa, xb)
-            cs = S.ravel()
-            # sort by (id_a, id_b) so the stable top-k argsort below
-            # breaks exact-cosine ties by lowest pair ids — matching the
-            # diagonal branch (whose ids arrive pre-sorted) and the
-            # (cos desc, id_a, id_b) oracle order; without this the k
-            # cut at a tie is partition-order-dependent
-            order = np.lexsort((id_b, id_a))
-            id_a, id_b, cs = id_a[order], id_b[order], cs[order]
-        if threshold is not None:
-            keep = cs >= threshold
-        else:
-            keep = np.argsort(-cs, kind="stable")[:k]
-        return pd.DataFrame({"id_a": id_a[keep], "id_b": id_b[keep], "cos": cs[keep]})
+            return _emit_pairs(ids, Vn, ids, Vn, upper=True, k=k, threshold=threshold)
+        ma = pdf["bid"].to_numpy() == gi
+        return _emit_pairs(
+            ids[ma], Vn[ma], ids[~ma], Vn[~ma], upper=False, k=k, threshold=threshold
+        )
 
-    return rep.groupBy("gi", "gj").applyInPandas(
-        _gemm_group, "id_a long, id_b long, cos double"
-    )
+    return rep.groupBy("gi", "gj").applyInPandas(_gemm_group, _PAIRS_SCHEMA)
 
 
 def cosine_threshold_pairs_blocked(
@@ -230,18 +256,14 @@ def cosine_threshold_pairs_blocked(
     vec_col: str,
     threshold: float = 0.9,
     num_blocks: int | None = None,
-    target_block_rows: int = 50_000,
 ) -> DataFrame:
     """Exact embedding near-dup pairs at any corpus size:
     ``(id_a, id_b, cos)`` for every a<b with cosine ≥ threshold, via the
     distributed :func:`_blocked_pairs_kernel` (no driver collect, no
-    200k guard). ``num_blocks`` defaults to ``ceil(n / target_block_rows)``.
+    in-core gate). ``num_blocks`` defaults to :func:`_num_blocks`.
     """
-    if num_blocks is None:
-        n = df.count()
-        num_blocks = max(-(-n // target_block_rows), 2)
     return _blocked_pairs_kernel(
-        df, id_col, vec_col, num_blocks=num_blocks, threshold=float(threshold)
+        df, id_col, vec_col, num_blocks or _num_blocks(df), threshold=float(threshold)
     )
 
 
@@ -251,15 +273,11 @@ def cosine_top_pairs_blocked(
     vec_col: str,
     k: int = 20,
     num_blocks: int | None = None,
-    target_block_rows: int = 50_000,
 ) -> DataFrame:
     """Exact global top-k most-similar pairs at any corpus size:
     group-local top-k from :func:`_blocked_pairs_kernel`, then a global
     merge-limit (exact — see kernel docstring)."""
-    if num_blocks is None:
-        n = df.count()
-        num_blocks = max(-(-n // target_block_rows), 2)
-    pairs = _blocked_pairs_kernel(df, id_col, vec_col, num_blocks=num_blocks, k=k)
+    pairs = _blocked_pairs_kernel(df, id_col, vec_col, num_blocks or _num_blocks(df), k=k)
     return pairs.orderBy(
         F.col("cos").desc(), F.col("id_a").asc(), F.col("id_b").asc()
     ).limit(k)
@@ -270,12 +288,11 @@ def cosine_top_pairs(
     id_col: str,
     vec_col: str,
     k: int = 20,
-    broadcast_limit_rows: int = 200_000,
 ) -> DataFrame:
     """Top-k most-similar pairs (a<b) by cosine: ``(id_a, id_b, cos)``.
-    Per-block local top-k via :func:`_gemm_pairs_kernel`, then a global
+    Per-batch local top-k via :func:`_gemm_pairs_kernel`, then a global
     top-k merge."""
-    pairs = _gemm_pairs_kernel(df, id_col, vec_col, broadcast_limit_rows, k=k)
+    pairs = _gemm_pairs_kernel(df, id_col, vec_col, k=k)
     return pairs.orderBy(
         F.col("cos").desc(), F.col("id_a").asc(), F.col("id_b").asc()
     ).limit(k)
@@ -286,7 +303,6 @@ def cosine_threshold_pairs(
     id_col: str,
     vec_col: str,
     threshold: float = 0.9,
-    broadcast_limit_rows: int = 200_000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: ``(id_a, id_b, cos)`` for
     every a<b with cosine ≥ threshold — the fifth dedup modality
@@ -294,11 +310,9 @@ def cosine_threshold_pairs(
 
     Emission is sparse at dedup-grade thresholds even though comparison
     is all-pairs (:func:`_gemm_pairs_kernel`; see its docstring for the
-    broadcast-limit / bucketing guidance).
+    in-core gate and the distributed fallback).
     """
-    return _gemm_pairs_kernel(
-        df, id_col, vec_col, broadcast_limit_rows, threshold=float(threshold)
-    )
+    return _gemm_pairs_kernel(df, id_col, vec_col, threshold=float(threshold))
 
 
 def knn_label_accuracy(
@@ -307,7 +321,6 @@ def knn_label_accuracy(
     vec_col: str,
     label_col: str,
     k: int = 5,
-    broadcast_limit_rows: int = 200_000,
 ) -> DataFrame:
     """``(label, n_vecs, n_correct, acc_ppm)`` — leave-one-out k-NN
     classification accuracy of the embedding space against a label
@@ -329,9 +342,7 @@ def knn_label_accuracy(
     """
     from spark_ifs_spark.operators.topk import salted_topk_per_key, topk_per_key
 
-    pairs = _gemm_pairs_kernel(
-        df, id_col, vec_col, broadcast_limit_rows, threshold=-1.01
-    )
+    pairs = _gemm_pairs_kernel(df, id_col, vec_col, threshold=-1.01)
     # symmetrize by exploding both directions off ONE subtree: the
     # fwd/rev unionByName spelling plans the all-pairs GEMM twice, and
     # the duplicated branch is a MapInPandas stage AQE exchange reuse
@@ -507,35 +518,14 @@ def cosine_lsh_pairs(
     )
 
     def _bucket_pairs(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "id_a": pd.Series(dtype="int64"),
-                "id_b": pd.Series(dtype="int64"),
-                "cos": pd.Series(dtype="float64"),
-            }
-        )
-        k = len(pdf)
-        if k < 2 or (max_bucket is not None and k > int(max_bucket)):
-            return empty
         order = np.argsort(pdf["id"].to_numpy(), kind="stable")
-        ids = pdf["id"].to_numpy()[order]
+        if max_bucket is not None and len(pdf) > int(max_bucket):
+            order = order[:0]  # skew guard: score no row of an over-full bucket
+        ids = pdf["id"].to_numpy(dtype=np.int64)[order]
         U = np.array(pdf["u"].tolist(), dtype=np.float64)[order]
-        C = U @ U.T
-        iu, ju = np.triu_indices(k, 1)
-        keep = C[iu, ju] >= thr
-        if not keep.any():
-            return empty
-        return pd.DataFrame(
-            {
-                "id_a": ids[iu[keep]],
-                "id_b": ids[ju[keep]],
-                "cos": C[iu[keep], ju[keep]],
-            }
-        )
+        return _emit_pairs(ids, U, ids, U, upper=True, threshold=thr)
 
-    pairs = sig.groupBy("tbl", "bucket").applyInPandas(
-        _bucket_pairs, "id_a long, id_b long, cos double"
-    )
+    pairs = sig.groupBy("tbl", "bucket").applyInPandas(_bucket_pairs, _PAIRS_SCHEMA)
     # a pair colliding in several tables is emitted once per collision;
     # the dots are bitwise-identical (same unit vectors, same kernel),
     # so first() per pair is exact
@@ -870,7 +860,8 @@ def gram_matrix(df: DataFrame, vec_col: str, dims: int) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    iu_i, iu_j = (a.astype("int32") for a in np.triu_indices(dims))
+    upper = np.triu(np.ones((dims, dims), dtype=bool))
+    iu_i, iu_j = (a.astype("int32") for a in np.nonzero(upper))
 
     def fold(batches):
         acc = np.zeros((dims, dims))
@@ -1414,20 +1405,12 @@ def semantic_dedup(
     cells = src.select("id", "cell")
 
     def _cell_drops(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"id": pd.Series(dtype="int64")})
-        k = len(pdf)
-        if k < 2:
-            return empty
         order = np.argsort(pdf["id"].to_numpy(), kind="stable")
-        ids = pdf["id"].to_numpy()[order]
+        ids = pdf["id"].to_numpy(dtype=np.int64)[order]
         V = np.array(pdf["v"].tolist(), dtype=np.float64)[order]
         U = V / np.linalg.norm(V, axis=1, keepdims=True)
-        C = U @ U.T
-        iu, ju = np.triu_indices(k, 1)
-        dropped = np.unique(ju[C[iu, ju] >= thr])
-        if dropped.size == 0:
-            return empty
-        return pd.DataFrame({"id": ids[dropped]})
+        pairs = _emit_pairs(ids, U, ids, U, upper=True, threshold=thr)
+        return pd.DataFrame({"id": np.unique(pairs["id_b"].to_numpy())})
 
     drops = src.groupBy("cell").applyInPandas(_cell_drops, "id long")
     return cells.join(drops, "id", "left_anti").select("id", "cell")

@@ -25,22 +25,16 @@ bit-for-bit.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spark_ifs_spark.functions.hashing import (
     MINHASH_P,
     md5_int60,
+    md5_int60_py,
     minhash_params,
     universal_hash,
 )
-
-
-def _py_int60(s: str) -> int:
-    """Driver-side twin of ``md5_int60`` (first 15 md5 hex digits)."""
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
 def cms_build(
@@ -94,7 +88,7 @@ def cms_estimate(
     params = minhash_params(depth, seed)
     probe_rows = []
     for t in terms:
-        h = _py_int60(t)
+        h = md5_int60_py(t)
         for r, (a, b) in enumerate(params):
             probe_rows.append((t, r, (a * (h % MINHASH_P) + b) % MINHASH_P % width))
     probes = spark.createDataFrame(probe_rows, ["term", "r", "bucket"])

@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spark_ifs_spark.operators.bpe import word_frequencies
+from spark_ifs_spark.operators.gates import collect_within
 
 #: schema of the trained-vocabulary relation
 VOCAB_SCHEMA = "rank int, piece string, n_tokens long, score_micro long"
@@ -184,8 +185,8 @@ def _em_vocab(
 #: driver-side budget for collecting the word-frequency relation on the
 #: in-core path, in distinct words — read at call time by every
 #: unigram operator here and by ``bpe.bpe_train``: at or under it the
-#: relation is collected and the folds run on the driver, past it (or
-#: at 0) the distributed plans run.
+#: relation is collected and the folds run on the driver, past it the
+#: distributed plans run (at 0, for any non-empty corpus).
 INCORE_VOCAB_BUDGET = 1_000_000
 
 
@@ -196,10 +197,8 @@ def _incore_state(
     word-frequency relation ``wf``, or None past
     :data:`INCORE_VOCAB_BUDGET` — one job decides the path AND fetches
     the words when they fit."""
-    if INCORE_VOCAB_BUDGET <= 0:
-        return None
-    head = wf.limit(INCORE_VOCAB_BUDGET + 1).collect()
-    if len(head) > INCORE_VOCAB_BUDGET:
+    head = collect_within(wf, INCORE_VOCAB_BUDGET)
+    if head is None:
         return None
     words, singles = _prep_words([(r["w"], r["c"]) for r in head])
     return words, singles, _em_vocab(

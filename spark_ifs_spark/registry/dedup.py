@@ -253,10 +253,11 @@ SELECT id_a, id_b, round(cos, 6) AS cos FROM scored WHERE cos >= {EMB_DEDUP_THRE
 def q_dedup_embedding_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same near-dup query through the DISTRIBUTED plan: triangular
     block-matrix GEMM (`similarity.py:_blocked_pairs_kernel`) — no
-    driver collect, no broadcast guard, recall-complete by construction,
+    driver collect, no in-core gate, recall-complete by construction,
     so it is graded against the identical exact oracle as
     ``dedup_embedding``. This is the 100 TB path; the broadcast kernel
-    is the small-corpus fast path that now falls back to this one."""
+    is the fast path at or under ``similarity.INCORE_VECTOR_BUDGET``
+    vectors and falls back to this one past it."""
     emb = _read(spark, sf_dir, "embeddings")
     out = similarity.cosine_threshold_pairs_blocked(
         emb, "vec_id", "embedding", threshold=EMB_DEDUP_THRESHOLD, num_blocks=4

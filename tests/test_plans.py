@@ -61,8 +61,14 @@ def test_word_shingles_are_shuffle_free(spark, sf_dir):
 
 def test_round_counting_is_single_shuffle(spark, sf_dir):
     """The per-round pair-count aggregation (the engine's hot path) must
-    be exactly one shuffle: partial agg → exchange → final agg."""
-    from spark_ifs_spark.operators.select_columns import round_mi
+    be exactly one shuffle: partial agg → exchange → final agg. Pinned on
+    ``mi_vs_column``, the kernel the distributed greedy loop runs each
+    round: its ``(pos, cand_val, other_val)`` count aggregate is one
+    partial → Exchange → final, and both marginals join by broadcast."""
+    import re
+
+    from spark_ifs_spark.functions.mi import LABEL_COL_ID
+    from spark_ifs_spark.operators.select_columns import column_marginals, mi_vs_column
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cols = [f"f{i}" for i in range(8)]
@@ -70,17 +76,18 @@ def test_round_counting_is_single_shuffle(spark, sf_dir):
         F.col("label").cast("double").alias("label"),
         *[F.floor(F.col("embedding")[i].cast("double") * 8).alias(c) for i, c in enumerate(cols)],
     )
+    marginals = column_marginals(wide, "label", cols)
+    mi = mi_vs_column(wide, cols, list(range(8)), LABEL_COL_ID, "label", marginals, 500)
+    plan = explain_str(mi, "simple")
+    key = r"pos#\d+, cand_val#\d+, other_val#\d+"
     joint = (
-        wide.select(
-            F.explode(
-                F.array(*[F.struct(F.lit(i).alias("cand"), F.col(c).alias("cand_val")) for i, c in enumerate(cols)])
-            ).alias("c"),
-            F.col("label"),
-        )
-        .groupBy("c.cand", "c.cand_val", "label")
-        .count()
+        rf"HashAggregate\(keys=\[{key}\], functions=\[count\(1\)\]\)\n"
+        rf"[\s:|+-]*Exchange hashpartitioning\({key}, \d+\)[^\n]*\n"
+        r"[\s:|+-]*HashAggregate\(keys=\[pos#\d+, [^\n]*functions=\[partial_count\(1\)\]\)"
     )
-    assert count_exchanges(joint) == 1
+    assert re.search(joint, plan), plan
+    assert len(re.findall(rf"Exchange hashpartitioning\({key}", plan)) == 1, plan
+    assert plan.count("BroadcastHashJoin") == 2 and "SortMergeJoin" not in plan, plan
 
 
 def test_counting_uses_wholestage_codegen(spark, sf_dir):

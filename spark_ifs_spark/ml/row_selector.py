@@ -10,7 +10,7 @@ params ``numTopRows`` (default 10, >0, ``RS:16-27``), ``idCol`` ("id"),
 (``RS:201``) and, when ``filtered``, keeps only flagged rows (``RS:203``).
 
 The documented usage recipe (``RS:50-67``) — generate ids with
-``monotonically_increasing_id()``, fit, transform, then
+``monotonically_increasing_id``, fit, transform, then
 ``filter($"selected")`` — works verbatim here.
 """
 

@@ -61,12 +61,12 @@ search surface); extension operator.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from spark_ifs_spark.operators import ivf
 from spark_ifs_spark.operators.similarity import as_double_array
-from spark_ifs_spark.operators.topk import salted_topk_per_key, topk_per_key
+from spark_ifs_spark.operators.topk import topk_per_key
 
 
 def quantized_vectors(
@@ -88,32 +88,37 @@ def quantized_vectors(
     )
 
 
+def _int_cosine() -> Column:
+    """The integer-state cosine of the joined ``(_qa, _sa)`` and
+    ``(_qb, _sb)`` vector/ssq columns: exact int64 dot via ``zip_with``
+    + ``aggregate`` (JVM codegen, no Python), then the IEEE-exact
+    ``dot / (√ssq_a · √ssq_b)``; a zero vector scores 0.0."""
+    dot = F.aggregate(
+        F.zip_with("_qa", "_qb", lambda x, y: x * y),
+        F.lit(0).cast("long"),
+        lambda a, x: a + x,
+    )
+    return F.when(
+        (F.col("_sa") == 0) | (F.col("_sb") == 0), F.lit(0.0)
+    ).otherwise(
+        dot.cast("double")
+        / (F.sqrt(F.col("_sa").cast("double")) * F.sqrt(F.col("_sb").cast("double")))
+    )
+
+
 def _scored(pairs: DataFrame, q: DataFrame) -> DataFrame:
-    """``(id, nb, score)`` for a candidate pair relation: exact integer
-    dot via ``zip_with`` + ``aggregate`` (JVM codegen, no Python), then
-    the IEEE-exact cosine. Vectors ride the two id-keyed hash joins."""
+    """``(id, nb, score)`` for a candidate pair relation under
+    :func:`_int_cosine`. Vectors ride the two id-keyed hash joins."""
     qa = q.select("id", F.col("qv").alias("_qa"), F.col("ssq").alias("_sa"))
     qb = q.select(
         F.col("id").alias("nb"),
         F.col("qv").alias("_qb"),
         F.col("ssq").alias("_sb"),
     )
-    dot = F.aggregate(
-        F.zip_with("_qa", "_qb", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-    score = F.when(
-        (F.col("_sa") == 0) | (F.col("_sb") == 0), F.lit(0.0)
-    ).otherwise(
-        F.col("_dot").cast("double")
-        / (F.sqrt(F.col("_sa").cast("double")) * F.sqrt(F.col("_sb").cast("double")))
-    )
     return (
         pairs.join(qa, "id")
         .join(qb, "nb")
-        .withColumn("_dot", dot)
-        .select("id", "nb", score.alias("score"))
+        .select("id", "nb", _int_cosine().alias("score"))
     )
 
 
@@ -179,13 +184,6 @@ def knn_graph(
     refinements over IVF-cell + hash-ring seeds, then emitting the
     final top-``k`` of each node's working list."""
     kk = 4 * k if work_degree is None else work_degree
-    # Descent-internal top-ks use the single-window topk_per_key, not
-    # the salted two-stage variant: every per-key input here is
-    # degree-BOUNDED by construction ((2K)² candidates, ≤ 2K reverse
-    # edges), so skew is
-    # impossible and the second window would be pure overhead. The
-    # recall audit's truth top-k (per-key input = the whole corpus)
-    # stays salted.
     # The quantized-vector relation is read once per scoring join of
     # every round; the edge list feeds 4 downstream relations per round
     # (rev, b×2, co) — without lineage truncation the plan QUADRUPLES
@@ -271,16 +269,17 @@ def knn_graph_recall(
     sq = q.filter((F.col("id") % sample_mod) == 0).select("id")
     # truth scoring goes through the SAME _scored builder as the
     # descent (one definition of the integer-state cosine, not a
-    # drifting copy); the truth top-k stays SALTED — its per-key input
-    # is the whole corpus, the one unbounded window in this module
+    # drifting copy); the truth top-k's per-key input is the whole
+    # corpus, which topk_per_key's partial limit cuts to k per map
+    # partition before the shuffle
     pairs = sq.crossJoin(q.select(F.col("id").alias("nb"))).filter(
         F.col("id") != F.col("nb")
     )
-    truth = salted_topk_per_key(
+    truth = topk_per_key(
         _scored(pairs, q), ["id"], "score", k=k, tiebreak_cols=["nb"]
     ).select("id", "nb")
     # hits and possible in ONE pass over truth: the expensive truth
-    # subtree (sample x corpus scoring + salted top-k) used to be
+    # subtree (sample x corpus scoring + top-k) used to be
     # evaluated twice (semi-join count + plain count); a left join
     # against the distinct edge relation preserves exactly one row per
     # truth pair (knn_graph emits one row per (id, nb)), so count(*) is
@@ -647,32 +646,20 @@ def _scored_vs_queries(
     pairs: DataFrame, q: DataFrame, qq: DataFrame
 ) -> DataFrame:
     """``(qid, id, score)`` for a ``(qid, id)`` candidate relation:
-    the query-side twin of :func:`_scored` — exact integer dot of the
-    quantized corpus vector against the quantized QUERY vector, then
-    the IEEE-exact cosine. The query relation is tiny (a handful of
-    rows) and broadcasts; corpus vectors ride the id-keyed hash join."""
+    the query-side twin of :func:`_scored` — the :func:`_int_cosine` of
+    the quantized corpus vector against the quantized QUERY vector.
+    The query relation is tiny (a handful of rows) and broadcasts;
+    corpus vectors ride the id-keyed hash join."""
     qa = q.select("id", F.col("qv").alias("_qa"), F.col("ssq").alias("_sa"))
     qb = qq.select(
         F.col("id").alias("qid"),
         F.col("qv").alias("_qb"),
         F.col("ssq").alias("_sb"),
     )
-    dot = F.aggregate(
-        F.zip_with("_qa", "_qb", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-    score = F.when(
-        (F.col("_sa") == 0) | (F.col("_sb") == 0), F.lit(0.0)
-    ).otherwise(
-        F.col("_dot").cast("double")
-        / (F.sqrt(F.col("_sa").cast("double")) * F.sqrt(F.col("_sb").cast("double")))
-    )
     return (
         pairs.join(qa, "id")
         .join(F.broadcast(qb), "qid")
-        .withColumn("_dot", dot)
-        .select("qid", "id", score.alias("score"))
+        .select("qid", "id", _int_cosine().alias("score"))
     )
 
 
@@ -708,8 +695,9 @@ def graph_search(
       rendezvous convention), so entry placement is deterministic,
       per-query diversified, and independent of any node's popularity.
       One scan of the node-ID relation per batch (ids only, no
-      vectors); the per-query top-``n_entry`` is salted (corpus-wide
-      per-key input, the one unbounded window here).
+      vectors); the per-query top-``n_entry`` has corpus-wide per-key
+      input, cut to ``n_entry`` per map partition by the grouped
+      top-k's partial limit before the shuffle.
     - **hops**: candidates = current beam ⋈ the symmetrized edge
       relation (each beam node proposes its graph neighbors);
       beam′ = top-``ef`` of beam ∪ scored candidates per query —
@@ -755,7 +743,7 @@ def graph_search(
     )
     ids = q.select("id")
     qids = qq.select(F.col("id").alias("qid"))
-    entry = salted_topk_per_key(
+    entry = topk_per_key(
         ids.crossJoin(F.broadcast(qids)).select("qid", "id", h.alias("score")),
         ["qid"], "score", k=n_entry, tiebreak_cols=["id"],
     ).select("qid", "id")
@@ -828,12 +816,12 @@ def graph_search_recall(
         .filter(F.col("qid") != F.col("id"))
         .select("qid", "id")
     )
-    truth = salted_topk_per_key(
+    truth = topk_per_key(
         _scored_vs_queries(pairs, q, qq),
         ["qid"], "score", k=k, tiebreak_cols=["id"],
     ).select("qid", "id")
     # one pass over the expensive exact-truth subtree (corpus x queries
-    # scoring + salted top-k): left join against the distinct search
+    # scoring + top-k): left join against the distinct search
     # results keeps exactly one row per truth pair, so count(*) is
     # `possible` and count(flag) is `hits` — graph_recall_audit's
     # restructure applied here too

@@ -157,9 +157,10 @@ def skew_salt_plan(df: DataFrame, key_col: str, cap: int) -> DataFrame:
     the hot key. This is the static (pre-computed, engine-agnostic)
     cousin of AQE's runtime skew-join split — the form a pipeline
     persists next to the data so EVERY downstream join of the relation
-    (including non-Spark readers) salts identically, and the
-    ``salted_topk_per_key`` discipline promoted from an internal
-    tactic to a queryable plan.
+    (including non-Spark readers) salts identically — a queryable
+    plan for the joins Catalyst cannot bound by itself (a grouped top-k
+    needs none: its partial window-group limit cuts a hot key on every
+    map partition, see ``topk.topk_per_key``).
 
     ONE map-combined count aggregate over the input (the combine
     absorbs the skew being measured — hot keys partial-aggregate

@@ -25,7 +25,7 @@ side is a broadcast literal; their join is bucket-keyed (inverted
 index), so only postings for buckets a query actually probes are ever
 read; the two reductions (max over chunks, sum over terms) are hash
 aggregates with map-side combine; final top-k per query goes through
-the skew-safe salted two-stage top-k.
+the skew-safe grouped top-k (``topk.topk_per_key``).
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from spark_ifs_spark.functions.hashing import md5_int60
 from spark_ifs_spark.operators.chunking import chunk_documents
-from spark_ifs_spark.operators.topk import salted_topk_per_key
+from spark_ifs_spark.operators.topk import topk_per_key
 
 
 def chunk_bow_vectors(
@@ -97,7 +97,7 @@ def maxsim_topk(
         sims.groupBy("query", "id")
         .agg(F.round(F.sum("ms"), 6).alias("score"))
     )
-    return salted_topk_per_key(
+    return topk_per_key(
         scores, ["query"], "score", k, tiebreak_cols=["id"]
     ).select("query", "rank", "id", "score")
 
@@ -205,7 +205,7 @@ def rrf_fuse(
 
     Scale shape: the inputs are already top-k lists (≤ k rows per key
     each), so everything here — the union, the (key, id) hash
-    aggregate, the salted top-k — runs over ≤ |lists|·k rows per key
+    aggregate, the grouped top-k — runs over ≤ |lists|·k rows per key
     regardless of corpus size. Fusion is never the bottleneck; the legs
     are.
     """
@@ -225,6 +225,6 @@ def rrf_fuse(
         .groupBy(*keys, "id")
         .agg(F.sum("_c").alias("rrf_micro"))
     )
-    return salted_topk_per_key(
+    return topk_per_key(
         fused, keys, "rrf_micro", k, tiebreak_cols=["id"]
     ).select(*keys, "rank", "id", "rrf_micro")

@@ -13,10 +13,12 @@ plans:
   fused into the scan.
 - **cap_per_key**: per-group quota sampling (e.g. "at most N documents
   per domain" — the standard pretraining-mix dedup against domination
-  by one crawl host). Delegates to the skew-safe two-stage salted
-  window (:func:`~spark_ifs_spark.operators.topk.salted_topk_per_key`):
-  a hot domain with 10^9 docs never funnels through one task, and at
-  most ``cap × buckets`` rows per key reach the final ranking.
+  by one crawl host). Delegates to the grouped top-k
+  (:func:`~spark_ifs_spark.operators.topk.topk_per_key`), whose partial
+  window-group limit caps each map partition at ``cap`` rows per key
+  before the shuffle: a hot domain with 10^9 docs never funnels through
+  one task, and at most ``cap × map partitions`` rows per key reach the
+  final ranking.
 - **weighted_mix**: source-weighted mixture sampling against per-source
   size budgets — one bounded aggregate + a scan-fused deterministic
   keep decision in exact integer arithmetic.
@@ -30,7 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from spark_ifs_spark.functions.hashing import md5_int60, sql_md5_int60
-from spark_ifs_spark.operators.topk import salted_topk_per_key
+from spark_ifs_spark.operators.topk import topk_per_key
 
 #: resolution of the hash-bucket space the split thresholds cut
 SPLIT_BUCKETS = 10_000
@@ -158,25 +160,24 @@ def cap_per_key(
     cap: int,
     tiebreak_cols: Sequence[str] = (),
     descending: bool = True,
-    buckets: int = 16,
 ) -> DataFrame:
     """Keep at most ``cap`` rows per key under a total order.
 
     Quota-sampling framing of grouped top-k: "best ``cap`` documents
     per domain" (order by quality desc, id asc). Inherits the
-    skew-safety of the two-stage salted window — see module docstring.
-    Returns the input columns plus ``rank`` (1-based within key).
+    skew-safety of :func:`~spark_ifs_spark.operators.topk.topk_per_key`
+    — see module docstring. Returns the input columns plus ``rank``
+    (1-based within key).
     """
     if cap <= 0:
         raise ValueError("cap must be > 0")
-    return salted_topk_per_key(
+    return topk_per_key(
         df,
         key_cols=key_cols,
         order_col=order_col,
         k=cap,
         tiebreak_cols=tiebreak_cols,
         descending=descending,
-        buckets=buckets,
     )
 
 
@@ -533,11 +534,11 @@ def priority_sample_estimate(
     fold by id (the Bradley-Terry determinism contract).
 
     Plan: priorities are a scan-fused projection; the only distributed
-    step is the salted global top-(k+1) (⌀ ``(id, w, q)`` triples, no
-    payload); everything after is k-bounded driver-scale arithmetic.
+    step is the global top-(k+1) as ``orderBy().limit()`` — Spark's
+    take-ordered, per-partition heads merged (⌀ ``(id, w, q)`` triples,
+    no payload) — and the rank window runs over those k+1 survivors;
+    everything after is k-bounded driver-scale arithmetic.
     """
-    from spark_ifs_spark.operators.topk import salted_topk_per_key
-
     two60 = float(1 << 60)
     w = F.col(weight_col).cast("double")
     u = (
@@ -546,11 +547,12 @@ def priority_sample_estimate(
         )
         + F.lit(1)
     ).cast("double") / F.lit(two60)
-    pr = df.select(
-        F.col(id_col).alias("id"), w.alias("w"), (w / u).alias("q")
-    ).withColumn("_g", F.lit(1))
-    top = salted_topk_per_key(
-        pr, ["_g"], "q", k=k + 1, tiebreak_cols=["id"], descending=True
+    order = [F.col("q").desc(), F.col("id").asc()]
+    top = (
+        df.select(F.col(id_col).alias("id"), w.alias("w"), (w / u).alias("q"))
+        .orderBy(*order)
+        .limit(k + 1)
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
     )
     # tau and the estimator sum are GLOBAL aggregates (always exactly
     # one row, even on empty input — the grouped spelling returned zero

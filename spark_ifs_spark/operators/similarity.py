@@ -340,7 +340,7 @@ def knn_label_accuracy(
     scale swap the neighbor stage for the IVF/PQ ANN operators and keep
     the voting tail unchanged.
     """
-    from spark_ifs_spark.operators.topk import salted_topk_per_key, topk_per_key
+    from spark_ifs_spark.operators.topk import topk_per_key
 
     pairs = _gemm_pairs_kernel(df, id_col, vec_col, threshold=-1.01)
     # symmetrize by exploding both directions off ONE subtree: the
@@ -364,7 +364,7 @@ def knn_label_accuracy(
     ).select(
         F.col("_d.id").alias("id"), F.col("_d.nb").alias("nb"), "cos"
     ).withColumn("cos_r", F.round("cos", 6))
-    knn = salted_topk_per_key(sym, ["id"], "cos_r", k, tiebreak_cols=["nb"])
+    knn = topk_per_key(sym, ["id"], "cos_r", k, tiebreak_cols=["nb"])
     labels = df.select(F.col(id_col).alias("_lid"), F.col(label_col).alias("_lbl"))
     votes = (
         knn.join(labels, knn["nb"] == labels["_lid"])

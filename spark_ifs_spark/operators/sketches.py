@@ -35,6 +35,7 @@ from spark_ifs_spark.functions.hashing import (
     minhash_params,
     universal_hash,
 )
+from spark_ifs_spark.operators.topk import topk_per_key
 
 
 def cms_build(
@@ -401,17 +402,15 @@ def kmv_sketch(
 
     Plan: one distinct aggregate on ``(key, hash)`` (digest-keyed — the
     values themselves never shuffle beyond their 60-bit hashes), then
-    the salted two-stage top-k, so no task ever holds more than
-    ``k × buckets`` rows however skewed the key. Everything downstream
-    of the distinct is k-bounded per key.
+    the grouped top-k, whose partial limit keeps at most ``k`` rows per
+    key on each map partition, so the final sort sees at most
+    ``k × map partitions`` rows however skewed the key. Everything
+    downstream of the distinct is k-bounded per key.
     """
-    from spark_ifs_spark.functions.hashing import md5_int60
-    from spark_ifs_spark.operators.topk import salted_topk_per_key
-
     d = df.select(
         *key_cols, md5_int60(F.col(value_col).cast("string")).alias("h")
     ).distinct()
-    return salted_topk_per_key(d, key_cols, "h", k=k, descending=False)
+    return topk_per_key(d, key_cols, "h", k=k, descending=False)
 
 
 #: KMV estimator numerator (k−1)·2^60 as an exact double (k−1 has few
@@ -459,8 +458,6 @@ def kmv_overlap(
     Jaccard. Sketch-union mergeability is the same KMV law pinned in
     ``test_sketches.py``.
     """
-    from pyspark.sql import Window
-
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     sk = kmv_sketch(df, [key_col], value_col, k=k).select(
@@ -485,10 +482,7 @@ def kmv_overlap(
     both = rows.groupBy("key_a", "key_b", "h").agg(
         F.max("in_a").alias("in_a"), F.max("in_b").alias("in_b")
     )
-    w = Window.partitionBy("key_a", "key_b").orderBy(F.col("h").asc())
-    kept = both.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= k
-    )
+    kept = topk_per_key(both, ["key_a", "key_b"], "h", k, descending=False)
     return kept.groupBy("key_a", "key_b").agg(
         F.count(F.lit(1)).cast("long").alias("n_kept"),
         F.sum((F.col("in_a") * F.col("in_b")).cast("long")).alias("n_both"),
@@ -521,23 +515,23 @@ def rank_sketch(
     HLL over HLL++, md5 MinHash over Spark's). The error is MEASURED,
     not asserted, by the registry's rank audit.
 
-    Plan: one map-side hash projection + the salted two-stage top-k —
-    no task ever holds more than ``k × buckets`` rows, no global sort.
-    ``key_col`` must be unique per row (doc ids), making the kept rows
-    a uniform simple random sample of size k.
+    Plan: one map-side hash projection + ``orderBy(h).limit(k)`` —
+    Spark's take-ordered: each partition keeps its k smallest hashes and
+    the driver merges those heads, so no task holds more than k rows
+    and nothing is globally sorted. ``key_col`` must be unique per row
+    (doc ids), making the kept rows a uniform simple random sample of
+    size k.
     """
-    from spark_ifs_spark.operators.topk import salted_topk_per_key
-
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    d = df.select(
-        F.lit(0).alias("_g"),
-        md5_int60(F.col(key_col).cast("string")).alias("h"),
-        F.col(val_col).alias("v"),
+    return (
+        df.select(
+            md5_int60(F.col(key_col).cast("string")).alias("h"),
+            F.col(val_col).alias("v"),
+        )
+        .orderBy("h")
+        .limit(k)
     )
-    return salted_topk_per_key(
-        d, ["_g"], "h", k=k, descending=False
-    ).select("h", "v")
 
 
 def rank_sketch_by_key(
@@ -550,12 +544,11 @@ def rank_sketch_by_key(
     """``(key…, h, v)`` — one bottom-k-by-hash rank sketch PER KEY
     GROUP (the :func:`rank_sketch` law applied group-wise): fixed
     ``k``-row state per key however the group sizes skew, merges exact
-    per key by the same KMV law, and the salted two-stage top-k keeps
-    any single task under ``k × buckets`` rows even when one key owns
-    most of the corpus — the per-domain/per-source profile shape a
-    curation pipeline actually runs at 100 TB."""
-    from spark_ifs_spark.operators.topk import salted_topk_per_key
-
+    per key by the same KMV law, and the grouped top-k's partial limit
+    cuts every map partition to ``k`` rows per key before the shuffle,
+    even when one key owns most of the corpus — the per-domain/
+    per-source profile shape a curation pipeline actually runs at
+    100 TB."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     d = df.select(
@@ -563,7 +556,7 @@ def rank_sketch_by_key(
         md5_int60(F.col(id_col).cast("string")).alias("h"),
         F.col(val_col).alias("v"),
     )
-    return salted_topk_per_key(
+    return topk_per_key(
         d, list(key_cols), "h", k=k, descending=False
     ).select(*key_cols, "h", "v")
 
@@ -604,11 +597,7 @@ def rank_sketch_quantiles_by_key(
 def rank_sketch_merge(a: DataFrame, b: DataFrame, k: int = 512) -> DataFrame:
     """Union two rank sketches — keep the k smallest hashes of the
     concatenation (``sketch(A ∪ B)`` exactly, the KMV merge law)."""
-    from spark_ifs_spark.operators.topk import topk_per_key
-
-    u = a.unionByName(b).select(F.lit(0).alias("_g"), "h", "v")
-    # ≤ 2k input rows: the plain window top-k is the right tool
-    return topk_per_key(u, ["_g"], "h", k=k, descending=False).select("h", "v")
+    return a.unionByName(b).select("h", "v").orderBy("h").limit(k)
 
 
 def rank_sketch_quantiles(

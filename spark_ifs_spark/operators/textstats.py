@@ -10,6 +10,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spark_ifs_spark.operators.topk import topk_per_key
+
 #: regex for "BPE-ish" word tokens: alnum runs or single non-space symbols.
 #: Kept RE2/Java-portable (no lookarounds) so Spark and DuckDB agree.
 TOKEN_RE = "[a-zA-Z0-9]+"
@@ -272,7 +274,6 @@ def tfidf_top_terms(
     id_col: str,
     text_col: str,
     k: int = 3,
-    broadcast_vocab: bool | None = None,
 ) -> DataFrame:
     """``(id, term, tfidf, rank)`` — top-``k`` whitespace terms per
     document by ``tf · ln(N / df)``.
@@ -284,33 +285,24 @@ def tfidf_top_terms(
     on (id, term) counts, never raw tokens. Rank order is total:
     (tfidf DESC, term ASC).
 
-    ``broadcast_vocab``: force (True) or forbid (False) broadcasting
-    the document-frequency side. Default ``None`` leaves the choice to
-    Catalyst/AQE, which sizes the built side at runtime — the right
-    default because a web-scale vocabulary (URLs, typos, numbers) is
-    NOT small and force-broadcasting it would OOM every executor; a
-    curated vocabulary is, and AQE will broadcast it on its own.
+    The document-frequency join strategy is Catalyst/AQE's choice, made
+    on the runtime size of the built side: a web-scale vocabulary (URLs,
+    typos, numbers) is NOT small and force-broadcasting it would OOM
+    every executor; a curated vocabulary is, and AQE broadcasts it on
+    its own.
     """
+
     n_docs = df.count()
     toks = df.select(
         F.col(id_col).alias("id"), F.explode(F.split(F.col(text_col), " ")).alias("term")
     )
     tf = toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    from pyspark.sql import Window
-
-    if broadcast_vocab is True:
-        dfreq = F.broadcast(dfreq)
-    elif broadcast_vocab is False:
-        dfreq = dfreq.hint("shuffle_hash")
     scored = tf.join(dfreq, "term").withColumn(
         "tfidf", F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df"))
     )
-    w = Window.partitionBy("id").orderBy(F.col("tfidf").desc(), F.col("term").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id", "term", "tfidf", "rank")
+    return topk_per_key(scored, ["id"], "tfidf", k, tiebreak_cols=["term"]).select(
+        "id", "term", "tfidf", "rank"
     )
 
 
@@ -750,7 +742,7 @@ def bm25_multi_topk(
     Scores are bit-identical to running :func:`bm25_topk` per query —
     both paths score through the single shared
     :func:`bm25_score_postings` formula (df computed per (query, term));
-    the per-query top-k goes through the skew-safe salted two-stage
+    the per-query top-k goes through the skew-safe grouped
     top-k rather than Q separate TakeOrdereds.
     """
     spark = df.sparkSession
@@ -799,7 +791,7 @@ def bm25_score_postings(
 
     With ``group_cols`` (e.g. ``["query"]``) document frequency and the
     per-document sum key on the group as well, and the result is the
-    skew-safe salted top-k per group with a ``rank`` column; without,
+    skew-safe grouped top-k per group with a ``rank`` column; without,
     the result is the classic ``(id, score_micro)`` TakeOrdered top-k.
     """
     groups = list(group_cols)
@@ -821,9 +813,7 @@ def bm25_score_postings(
         .agg(F.sum("s_micro").alias("score_micro"))
     )
     if groups:
-        from spark_ifs_spark.operators.topk import salted_topk_per_key
-
-        return salted_topk_per_key(
+        return topk_per_key(
             scored, groups, "score_micro", k, tiebreak_cols=["id"]
         ).select(*groups, "rank", "id", "score_micro")
     return scored.orderBy(F.col("score_micro").desc(), F.col("id").asc()).limit(k)

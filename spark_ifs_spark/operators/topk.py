@@ -1,19 +1,28 @@
 """Skew-safe grouped top-k.
 
-``row_number() OVER (PARTITION BY key ORDER BY …)`` sends EVERY row of a
-hot key through one task — the classic skew collapse at 100 TB (one
-`event_type` being 50% of traffic means one straggler task holding 50%
-of the data). :func:`salted_topk_per_key` is the two-stage fix:
+``row_number() OVER (PARTITION BY key ORDER BY …)`` naively sends EVERY
+row of a hot key through one task — the classic skew collapse at 100 TB
+(one `event_type` being 50% of traffic means one straggler task holding
+50% of the data). Catalyst's ``InsertWindowGroupLimit`` rule (Spark 3.5+)
+removes it for the ``row_number() … <= k`` shape :func:`topk_per_key`
+builds, planning it as
 
-1. salt each row deterministically into ``buckets`` sub-partitions of
-   its key and take a per-(key, salt) top-k — hot keys now spread over
-   ``buckets`` tasks, and at most ``k × buckets`` rows per key survive;
-2. take the final top-k per key over that bounded intermediate.
+    Sort → WindowGroupLimit Partial → Exchange(key) → Sort
+         → WindowGroupLimit Final → Window → Filter
 
-Stage 2's window input is ≤ ``k × buckets`` rows per key regardless of
-input skew, so no task ever sees more than that. Results are identical
-to the single-stage window because a key's global top-k is contained in
-the union of its per-salt top-ks.
+1. the PARTIAL limit keeps each map partition's top-k per key, before
+   anything shuffles — a hot key's rows are cut to k on every task that
+   holds them;
+2. the one exchange moves at most ``k × map partitions`` rows per key;
+   the FINAL limit and the window rank that bounded remainder.
+
+That is a partition-local top-k followed by a global merge. The result
+equals the plain window's, since a key's global top-k is contained in
+the union of its per-partition top-ks. The rule applies when
+``k ≤ spark.sql.optimizer.windowGroupLimitThreshold`` (1000 by default);
+past it the plan falls back to the unlimited window. A global top-k (no
+key) is ``orderBy(...).limit(k)`` — Spark's TakeOrdered — not a
+constant-key window.
 
 Ordering must be total (pass ``tiebreak_cols``) — this is what makes the
 result, and the DuckDB oracle comparison, deterministic.
@@ -32,45 +41,6 @@ def _order_cols(order_col: str, descending: bool, tiebreak_cols: Sequence[str]) 
     return [lead, *[F.col(c).asc() for c in tiebreak_cols]]
 
 
-def salted_topk_per_key(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    order_col: str,
-    k: int,
-    tiebreak_cols: Sequence[str] = (),
-    descending: bool = True,
-    buckets: int = 16,
-) -> DataFrame:
-    """Top-``k`` rows per key under a total order, skew-safely.
-
-    Returns the input columns plus ``rank`` (1-based). The salt is a
-    round-robin over ``monotonically_increasing_id()`` — uniform under
-    ANY value distribution (a content hash would collapse a hot key's
-    duplicate values into one bucket, resurrecting the straggler), and
-    deterministic given the input partitioning, which is the same
-    guarantee Spark's own id generation gives. Correctness never
-    depends on WHICH salt a row gets: stage 2 re-ranks, and a key's
-    global top-k is contained in the union of its per-salt top-ks under
-    any assignment.
-    """
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    order = _order_cols(order_col, descending, tiebreak_cols)
-    salt = F.pmod(F.monotonically_increasing_id(), F.lit(buckets))
-    w1 = Window.partitionBy(*keys, "_salt").orderBy(*order)
-    stage1 = (
-        df.withColumn("_salt", salt)
-        .withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= k)
-        .drop("_r1")
-    )
-    w2 = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        stage1.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .drop("_salt")
-    )
-
-
 def topk_per_key(
     df: DataFrame,
     key_cols: Sequence[str],
@@ -79,8 +49,12 @@ def topk_per_key(
     tiebreak_cols: Sequence[str] = (),
     descending: bool = True,
 ) -> DataFrame:
-    """Single-stage window top-k (the small-data / unskewed baseline;
-    semantically identical to :func:`salted_topk_per_key`)."""
+    """Top-``k`` rows per key under a total order; returns the input
+    columns plus ``rank`` (1-based).
+
+    Skew bound: when ``k ≤ spark.sql.optimizer.windowGroupLimitThreshold``,
+    at most ``k × map partitions`` rows per key reach the final sort,
+    however the input skews (module docstring)."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     w = Window.partitionBy(*keys).orderBy(*_order_cols(order_col, descending, tiebreak_cols))
     return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

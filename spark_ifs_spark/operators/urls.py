@@ -17,7 +17,8 @@ Scale notes (100 TB):
   millions of hosts — far too big for an ``isin`` literal, trivially
   broadcastable as a table.
 - The per-host cap reuses :func:`~spark_ifs_spark.operators.sampling.
-  cap_per_key` (two-stage salted window), so a single giant host
+  cap_per_key` (the grouped top-k: each map partition keeps at most
+  ``cap`` rows per host before the shuffle), so a single giant host
   (the blogspot.com problem) cannot pin one reducer.
 
 Reference parity note: the reference engine (jacopocav/spark-ifs) has

@@ -102,15 +102,13 @@ ASOF LEFT JOIN (
 
 
 def q_events_topk_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-safe top-3 events by value per event type (two-stage salted
-    window — identical results to the single-stage window, bounded task
-    input under any key skew)."""
-    from spark_ifs_spark.operators.topk import salted_topk_per_key
+    """Skew-safe top-3 events by value per event type (the grouped
+    top-k: each map partition keeps at most 3 rows per type before the
+    one shuffle, so task input is bounded under any key skew)."""
+    from spark_ifs_spark.operators.topk import topk_per_key
 
     ev = _read(spark, sf_dir, "events")
-    out = salted_topk_per_key(
-        ev, ["event_type"], "value", k=3, tiebreak_cols=["event_id"], buckets=8
-    )
+    out = topk_per_key(ev, ["event_type"], "value", k=3, tiebreak_cols=["event_id"])
     return out.select(
         "event_type", "rank", "event_id", F.round("value", 6).alias("value")
     )

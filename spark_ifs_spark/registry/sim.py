@@ -1620,7 +1620,7 @@ def q_knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_knn_score(pairs: str, kk: int) -> str:
     """Score a ``(id, nb)`` pair relation with the exact integer-state
     cosine and keep each id's top-``kk`` (score desc, nb asc) — the SQL
-    twin of ``knn._scored`` + ``salted_topk_per_key``."""
+    twin of ``knn._scored`` + ``topk_per_key``."""
     return f"""
   SELECT id, nb,
          CASE WHEN sa = 0 OR sb = 0 THEN 0.0

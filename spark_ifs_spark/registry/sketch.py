@@ -459,8 +459,9 @@ def q_source_length_quantiles_sketch(spark: SparkSession, sf_dir: str) -> DataFr
     (:func:`~spark_ifs_spark.operators.sketches.rank_sketch_by_key`) —
     the per-domain length profile a curation pipeline runs at 100 TB,
     with fixed k-row state per source however the domain sizes skew
-    (the salted top-k keeps any task under k×buckets rows even when
-    one domain owns most of the corpus). Every estimate's TRUE
+    (the grouped top-k's partial limit cuts every map partition to k
+    rows per source before the shuffle, even when one domain owns most
+    of the corpus). Every estimate's TRUE
     within-source rank is audited against the full relation in one
     conditional-count pass; ``err_ppm`` is the measured per-source
     rank error."""
@@ -687,7 +688,7 @@ def q_kmv_distinct_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     source sketch folds into any union by concatenation (pinned in
     ``test_sketches.py``)."""
     from spark_ifs_spark.operators import sketches
-    from spark_ifs_spark.operators.topk import salted_topk_per_key
+    from spark_ifs_spark.operators.topk import topk_per_key
 
     docs = _read(spark, sf_dir, "documents")
     terms = docs.select(
@@ -699,7 +700,7 @@ def q_kmv_distinct_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = (
         sk.select("h").distinct().withColumn("source", F.lit("__union__"))
     )
-    usk = salted_topk_per_key(merged, ["source"], "h", k=KMV_K, descending=False)
+    usk = topk_per_key(merged, ["source"], "h", k=KMV_K, descending=False)
     uper = sketches.kmv_estimate(usk, ["source"], k=KMV_K)
     uex = (
         terms.agg(F.countDistinct("term").alias("n_exact"))

@@ -225,7 +225,7 @@ GROUP BY 1, 2
 
 def q_docs_cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain quota: keep the CAP_PER_SOURCE longest docs per source
-    (skew-safe two-stage salted window)."""
+    (skew-safe grouped top-k, ``sampling.cap_per_key``)."""
     from spark_ifs_spark.operators.sampling import cap_per_key
 
     docs = _read(spark, sf_dir, "documents")
@@ -3285,10 +3285,13 @@ def q_ngram_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     NGRAM_COVERAGE_NS — the curve that sizes vocabularies (a tokenizer
     whose top-10k pieces cover 98% of occurrences wastes little on
     unks) and prices frequency-based pruning. Plan: one
-    vocabulary-bounded term-count aggregate, the salted global
-    top-max(N) (rank shuffle bounded to k×buckets rows), one
+    vocabulary-bounded term-count aggregate, the global top-max(N) as
+    ``orderBy().limit()`` (take-ordered: per-partition heads of at most
+    max(N) terms merged, where a constant-key window of k = 10,000 —
+    past ``windowGroupLimitThreshold`` — would sort the whole vocabulary
+    in one task), the rank window over those survivors, one
     |N|-bounded conditional-sum pass; the corpus is read once."""
-    from spark_ifs_spark.operators.topk import salted_topk_per_key
+    from pyspark.sql import Window
 
     docs = _read(spark, sf_dir, "documents")
     terms = docs.select(F.explode(F.split("text", " ")).alias("term"))
@@ -3298,9 +3301,11 @@ def q_ngram_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("vocab_size"),
     )
     kmax = max(NGRAM_COVERAGE_NS)
-    top = salted_topk_per_key(
-        vocab.withColumn("_g", F.lit(1)), ["_g"], "n",
-        k=kmax, tiebreak_cols=["term"], descending=True,
+    order = [F.col("n").desc(), F.col("term").asc()]
+    top = (
+        vocab.orderBy(*order)
+        .limit(kmax)
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
     )
     rows = top.select(
         "n",

@@ -1432,7 +1432,7 @@ def q_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     join size. At 100 TB this is exactly the call a planner makes
     BEFORE choosing broadcast vs shuffle vs sort-merge; the audit
     reports the estimator's ppm error so the sketch size k can be
-    costed. Sketch paths are one digest-distinct + salted top-k per
+    costed. Sketch paths are one digest-distinct + grouped top-k per
     side; the true join is the audit."""
     from spark_ifs_spark.operators.sketches import kmv_estimate, kmv_sketch
 

@@ -99,7 +99,7 @@ def streaming_profile(
 def _fold(spark: SparkSession, index: PointerIndex) -> tuple[DataFrame, DataFrame, int]:
     """(per-source count totals, merged ≤ k-per-source sketch, k) over
     one consistent (version, watermark) snapshot."""
-    from spark_ifs_spark.operators.topk import salted_topk_per_key
+    from spark_ifs_spark.operators.topk import topk_per_key
 
     state = index.state()
     k = state["params"]["k"]
@@ -109,7 +109,7 @@ def _fold(spark: SparkSession, index: PointerIndex) -> tuple[DataFrame, DataFram
         F.sum("n_tokens").alias("n_tokens"),
     )
     merged = index.committed(spark, "kmv", state=state).select("source", "h").distinct()
-    sketch = salted_topk_per_key(
+    sketch = topk_per_key(
         merged, ["source"], "h", k=k, descending=False
     ).select("source", "h")
     return totals, sketch, k

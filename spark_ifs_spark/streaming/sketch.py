@@ -175,18 +175,16 @@ def streaming_rank_sketch(
 def read_rank_sketch(spark: SparkSession, index_path: str) -> DataFrame:
     """``(h, v)`` — the live rank sketch: bottom-k over one consistent
     (version, watermark) snapshot of the committed k-bounded partials.
-    The fold window runs over ≤ batches·k rows (``compact_rank_sketch``
-    folds that back to k), never the stream."""
-    from spark_ifs_spark.operators.topk import topk_per_key
-
+    The fold (a take-ordered bottom-k) reads ≤ batches·k rows
+    (``compact_rank_sketch`` folds that back to k), never the stream."""
     index = _rks(index_path)
     state = index.state()
-    rows = index.committed(spark, "rows", state=state).select(
-        F.lit(0).alias("_g"), "h", "v"
+    return (
+        index.committed(spark, "rows", state=state)
+        .select("h", "v")
+        .orderBy("h")
+        .limit(state["params"]["k"])
     )
-    return topk_per_key(
-        rows, ["_g"], "h", k=state["params"]["k"], descending=False
-    ).select("h", "v")
 
 
 def compact_rank_sketch(spark: SparkSession, index_path: str) -> None:
@@ -444,7 +442,7 @@ def read_kmv(spark: SparkSession, index_path: str) -> DataFrame:
     bottom-k over one consistent (version, watermark) snapshot of the
     committed partials. The fold runs over ≤ batches·keys·k rows
     (``compact_kmv`` folds that back to keys·k), never the stream."""
-    from spark_ifs_spark.operators.topk import salted_topk_per_key
+    from spark_ifs_spark.operators.topk import topk_per_key
 
     index = _kmv(index_path)
     state = index.state()
@@ -454,7 +452,7 @@ def read_kmv(spark: SparkSession, index_path: str) -> DataFrame:
         .select(*keys, "h")
         .distinct()  # the same hash may survive in several partials
     )
-    return salted_topk_per_key(
+    return topk_per_key(
         rows, keys, "h", k=state["params"]["k"], descending=False
     ).select(*keys, "h")
 

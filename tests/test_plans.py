@@ -717,14 +717,15 @@ def test_bm25_multi_is_single_corpus_scan(spark, sf_dir):
 def test_url_dedup_shuffle_shape(spark, sf_dir):
     """Canonicalization fuses into the scan (no pre-shuffle projection
     stage); the composite's only exchanges are the canonical-URL group
-    and the salted host-cap window — the blocklist join is broadcast."""
+    and the host-cap top-k window — the blocklist join is broadcast."""
     from spark_ifs_spark.registry import QUERIES
 
     df = QUERIES["url_dedup"](spark, sf_dir)
     plan = explain_str(df, "simple")
     assert plan.count("BroadcastHashJoin") >= 1 and "LeftAnti" in plan
-    # group-by-canon + two-stage salted cap (partial + final) = few,
-    # bounded exchanges; anything beyond 4 means a new unplanned shuffle
+    # group-by-canon + host-cap top-k (partial limit, one exchange) =
+    # few, bounded exchanges; anything beyond 4 means a new unplanned
+    # shuffle
     assert count_exchanges(df) <= 4, explain_str(df, "formatted")
 
 
@@ -946,3 +947,34 @@ def test_mg_heavy_hitters_two_scans_and_join_free_verify(spark, sf_dir):
     assert "Join" not in plan, plan
     assert "mapInPandas" not in plan.lower(), plan  # fold ran in pass 1, not here
     assert plan.count("HashAggregate (") == 2, plan
+
+
+def test_topk_per_key_limits_rows_before_the_shuffle(spark):
+    """The grouped top-k is Catalyst's two-phase WindowGroupLimit: a
+    partial limit cuts each map partition to k rows per key BELOW the
+    one Exchange, so a hot key never reaches a single task whole, and
+    one Window ranks the bounded remainder."""
+    import re
+
+    from spark_ifs_spark.operators.topk import topk_per_key
+
+    # one key holds 90% of the rows
+    df = spark.range(0, 4000, 1, 4).select(
+        F.when(F.col("id") % 10 < 9, F.lit("hot")).otherwise(F.lit("cold")).alias("key"),
+        F.col("id").alias("rid"),
+        (F.col("id") % 97).alias("v"),
+    )
+    out = topk_per_key(df, ["key"], "v", k=5, tiebreak_cols=["rid"])
+    lines = explain_str(out, "simple").splitlines()
+
+    def at(pattern):
+        return [i for i, line in enumerate(lines) if re.search(pattern, line)]
+
+    plan = "\n".join(lines)
+    exchanges = at(r"\bExchange\b")
+    assert len(exchanges) == 1, plan
+    partial = at(r"WindowGroupLimit .*, 5, Partial")
+    final = at(r"WindowGroupLimit .*, 5, Final")
+    assert len(partial) == 1 and partial[0] > exchanges[0], plan
+    assert len(final) == 1 and final[0] < exchanges[0], plan
+    assert len(at(r"\bWindow \[")) == 1, plan

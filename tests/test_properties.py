@@ -84,30 +84,33 @@ def test_cross_encoding_agreement_random(spark, seed):
 
 
 def test_salted_topk_property(spark):
-    """Property: for random data, keys, k, and bucket counts, the salted
-    two-stage top-k equals the single-stage window exactly."""
+    """Property: for random data, keys and k, the grouped top-k equals
+    a plain per-key sort of the collected input exactly."""
     import random as _random
 
-    from pyspark.sql import functions as F
-
-    from spark_ifs_spark.operators.topk import salted_topk_per_key, topk_per_key
+    from spark_ifs_spark.operators.topk import topk_per_key
 
     rng = _random.Random(123)
     for trial in range(3):
         n = rng.randint(50, 400)
         n_keys = rng.randint(1, 5)
         k = rng.randint(1, 6)
-        buckets = rng.choice([1, 2, 7, 16])
         rows = [
             (f"k{rng.randint(0, n_keys - 1)}", i, float(rng.randint(0, 20)))
             for i in range(n)
         ]
         df = spark.createDataFrame(rows, ["key", "rid", "v"])
-        a = salted_topk_per_key(df, ["key"], "v", k=k, tiebreak_cols=["rid"], buckets=buckets)
-        b = topk_per_key(df, ["key"], "v", k=k, tiebreak_cols=["rid"])
+        a = topk_per_key(df, ["key"], "v", k=k, tiebreak_cols=["rid"])
+        by_key: dict = {}
+        for key, rid, v in rows:
+            by_key.setdefault(key, []).append((-v, rid))
         ra = sorted((r["key"], r["rank"], r["rid"]) for r in a.collect())
-        rb = sorted((r["key"], r["rank"], r["rid"]) for r in b.collect())
-        assert ra == rb, f"trial {trial}: {n=} {n_keys=} {k=} {buckets=}"
+        rb = sorted(
+            (key, i, rid)
+            for key, kr in by_key.items()
+            for i, (_, rid) in enumerate(sorted(kr)[:k], start=1)
+        )
+        assert ra == rb, f"trial {trial}: {n=} {n_keys=} {k=}"
 
 
 @given(

@@ -172,7 +172,7 @@ def test_kmv_sketch_merge_equals_direct_sketch(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from spark_ifs_spark.operators.sketches import kmv_estimate, kmv_sketch
-    from spark_ifs_spark.operators.topk import salted_topk_per_key
+    from spark_ifs_spark.operators.topk import topk_per_key
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     terms = docs.select(
@@ -183,7 +183,7 @@ def test_kmv_sketch_merge_equals_direct_sketch(spark, sf_dir):
     # two shard sketches, keyed by half
     shard_sk = kmv_sketch(terms, ["half"], "term", k=64)
     merged_rows = shard_sk.select("h").distinct().withColumn("g", F.lit("all"))
-    merged = salted_topk_per_key(merged_rows, ["g"], "h", k=64, descending=False)
+    merged = topk_per_key(merged_rows, ["g"], "h", k=64, descending=False)
     direct = kmv_sketch(terms, ["g"], "term", k=64)
     m = kmv_estimate(merged, ["g"], k=64).collect()[0]
     d = kmv_estimate(direct, ["g"], k=64).collect()[0]
